@@ -386,30 +386,13 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
 
 
-# One canonical near-dup components table per (session, corpus): FOUR
-# registry queries (dedup_clusters, dedup_cluster_sizes,
-# clean_corpus_clustered, quality_by_dup_status) consume the same exact
-# simjoin + iterative large-star/small-star chain — the most expensive
-# non-ANN subplan in a registry sweep (~3-4 s each at sf0.1, so the memo
-# saves ~3 redundant chains). Same build-once discipline as
-# _ANN_INDEX_CACHE, including the trim-revival guard: a memo hit
-# re-checks storageLevel and re-persists an evicted table. The CC table
-# is tiny (only docs that have a near-dup partner), so persisting it is
-# bounded at any corpus scale.
-_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cc = _CC_CACHE.get(key)
-    if cc is not None:
-        cc = caching.tracked_persist_shared(cc)
-    else:
-        cc = caching.tracked_persist(
-            cluster.connected_components(_neardup_pairs(spark, sf_dir))
-        )
-    _CC_CACHE[key] = cc
-    return cc
+    """Near-dup components table (only docs with a near-dup partner, so
+    bounded at any scale), shared by five cluster queries (caching.memo)."""
+    return caching.memo(
+        spark, ("cc", sf_dir),
+        lambda: cluster.connected_components(_neardup_pairs(spark, sf_dir)),
+    )
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -968,77 +951,25 @@ def q_token_count_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # / dedup.ngram_jaccard_pairs by themselves.
 _EXACT_TWIN_MAX_DOCS = 1_000_000
 
-# count() is a real (if small) Spark job — at best a parquet-footer scan —
-# not a free metadata fetch; memoize it per corpus dir so the gate is paid
-# once per session, not once per recall-contract query.
-_DOC_COUNT_MEMO: dict[str, int] = {}
-
-
 def _doc_count(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _DOC_COUNT_MEMO:
-        _DOC_COUNT_MEMO[sf_dir] = _t(spark, sf_dir, "documents").count()
-    return _DOC_COUNT_MEMO[sf_dir]
-
-
-# Same contract for the embeddings table: q_cosine_near_dups' SRP layout is
-# sized from the planted-corpus row count, and the un-memoized sizing
-# count() was one whole Spark job of fixed overhead per call/rep (r14;
-# same class as the media n_rows_hint, r13 change 5). Keyed by sf_dir —
-# the table is immutable per corpus dir.
-_EMB_COUNT_MEMO: dict[str, int] = {}
-
-
-def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _EMB_COUNT_MEMO:
-        _EMB_COUNT_MEMO[sf_dir] = _t(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_MEMO[sf_dir]
-
-
-_QUERY_VEC_MEMO: dict[tuple[str, str], list] = {}
+    """|documents| for the exact-twin gate of both recall-contract queries
+    (caching.memo): count() is a real Spark job, not a metadata fetch."""
+    return caching.memo(
+        spark, ("doc_count", sf_dir), lambda: _t(spark, sf_dir, "documents").count()
+    )
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list:
-    """Memoized fetch of the fixed query vector (vec_id=_QUERY_VEC_ID).
-
-    Five top-k-family queries embed this one immutable row as plan
-    literals, and each un-memoized ``head()`` is a whole Spark job —
-    pure fixed overhead at any scale (r13). Same bounded control-plane
-    memo contract as _doc_count / the ANN index cache: one row, keyed by
-    (application, sf_dir), never grows with the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QUERY_VEC_MEMO:
-        _QUERY_VEC_MEMO[key] = (
-            _t(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == _QUERY_VEC_ID)
-            .head()
-            .embedding
-        )
-    return _QUERY_VEC_MEMO[key]
-
-
-_MMR_ANCHOR_MEMO: dict[tuple[str, str], tuple[int, int]] = {}
-
-
-def _mmr_anchor_ids(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    """Memoized (top-1 vec_id, planted-twin id) for ``q_mmr_rerank``.
-
-    Both anchors are immutable per (session, corpus) — the top-1 of a fixed
-    query vector over a fixed corpus, and max(vec_id)+1 — yet each
-    un-memoized fetch is a whole Spark job (a TakeOrdered scan over the
-    embeddings table plus a max agg) re-paid on every call/rep (r13).
-    Same bounded control-plane memo contract as ``_query_vec`` /
-    ``_doc_count``: two ints, keyed by (applicationId, sf_dir), never
-    grows with the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MMR_ANCHOR_MEMO:
-        emb = _t(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") != _QUERY_VEC_ID
-        )
-        qvec = _query_vec(spark, sf_dir)
-        top1_id = similarity.brute_force_topk(emb, qvec, 1).head().vec_id
-        twin_id = _t(spark, sf_dir, "embeddings").agg(F.max("vec_id")).head()[0] + 1
-        _MMR_ANCHOR_MEMO[key] = (int(top1_id), int(twin_id))
-    return _MMR_ANCHOR_MEMO[key]
+    """The fixed query vector (vec_id=_QUERY_VEC_ID) that the top-k family
+    embeds as plan literals; one ``head()`` job per session (caching.memo)."""
+    return caching.memo(
+        spark,
+        ("query_vec", sf_dir),
+        lambda: _t(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == _QUERY_VEC_ID)
+        .head()
+        .embedding,
+    )
 
 
 def _lsh_with_exact_twin(
@@ -1046,8 +977,7 @@ def _lsh_with_exact_twin(
 ) -> DataFrame:
     """Full-outer recall contract between an LSH pair set and the exact
     prefix-join twin, size-gated (see _EXACT_TWIN_MAX_DOCS above).
-    ``n_docs`` is the memoized corpus row count (_doc_count) — the gate
-    itself never launches a job."""
+    ``n_docs`` is the corpus row count (_doc_count)."""
     if n_docs <= _EXACT_TWIN_MAX_DOCS:
         exact = simjoin.jaccard_similarity_join(docs, threshold=threshold).select(
             "id_a", "id_b", F.lit(True).alias("in_exact")
@@ -1103,14 +1033,7 @@ def q_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x * F.lit(1.25)).alias("embedding"),
     )
     planted = emb.select("vec_id", "embedding").unionByName(twins)
-    # n_rows_hint: |embeddings| is session-memoized (_emb_count) and the
-    # plant adds exactly 8 twins by construction — skips the SRP sizing
-    # count(), one whole Spark job per call (r14; same class as the media
-    # n_rows_hint, r13 change 5). The hint is provably exact, so SRP
-    # parameters and output are unchanged.
-    pairs = similarity.cosine_near_duplicate_pairs(
-        planted, threshold=0.9, dim=64, n_rows_hint=_emb_count(spark, sf_dir) + 8
-    )
+    pairs = similarity.cosine_near_duplicate_pairs(planted, threshold=0.9, dim=64)
     # Contract column: the 8 planted twins MUST all surface as
     # (k, k+1_000_000) pairs — planted_pair=true rows are the recall proof
     # in the driver's rows-only record (asserted =8 in tests/test_similarity.py).
@@ -1142,33 +1065,22 @@ def _plant_query_twins(emb: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-# One canonical exact-topk twin per (session, corpus, qvec-id, k): the ANN
-# trio (lsh/ivf/pq) shares a single brute-force exact top-k scan instead of
-# each recomputing it inside _with_exact_topk_flag — the r3 bench showed the
-# triplicated twin tripling ivf_topk's wall time. The exact result is k ids —
-# a bounded driver-side collect (same budget class as the codebook/Bloom
-# fits), memoized and re-emitted as a k-row local relation, so queries after
-# the first pay zero scans for their recall contract. At 100 TB the exact
-# scan is still one TakeOrdered pass producing k rows — the collect never
-# grows with the corpus.
-_EXACT_TOPK_CACHE: dict[tuple, tuple[list, list[int]]] = {}
-
-
 def _exact_topk_twin(spark: SparkSession, sf_dir: str, k: int = 10):
     """Returns (qvec, exact_flags) where exact_flags is a k-row local-relation
-    ``(vec_id, in_exact_topk=true)`` table over the planted candidate base."""
-    key = (spark.sparkContext.applicationId, sf_dir, _QUERY_VEC_ID, k)
-    hit = _EXACT_TOPK_CACHE.get(key)
-    if hit is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        qvec = _query_vec(spark, sf_dir)
-        base = _plant_query_twins(emb)
-        ids = [
-            r.vec_id for r in similarity.brute_force_topk(base, qvec, k).select("vec_id").collect()
-        ]
-        hit = (qvec, ids)
-        _EXACT_TOPK_CACHE[key] = hit
-    qvec, ids = hit
+    ``(vec_id, in_exact_topk=true)`` table over the planted candidate base.
+
+    The ANN trio (lsh/ivf/pq) shares one brute-force exact top-k scan
+    (caching.memo): the k ids are a bounded collect — one TakeOrdered pass
+    producing k rows at any corpus size."""
+
+    qvec = _query_vec(spark, sf_dir)
+
+    def build():
+        base = _plant_query_twins(_t(spark, sf_dir, "embeddings"))
+        top = similarity.brute_force_topk(base, qvec, k).select("vec_id").collect()
+        return [r.vec_id for r in top]
+
+    ids = caching.memo(spark, ("exact_topk", sf_dir, k), build)
     # Arrow local relation (session.arrow_local_df): a pickled-row frame
     # costs a Python deserialize task on every action that touches it (r13)
     exact = arrow_local_df(
@@ -1177,98 +1089,6 @@ def _exact_topk_twin(spark: SparkSession, sf_dir: str, k: int = 10):
         "vec_id long, in_exact_topk boolean",
     )
     return qvec, exact
-
-
-# Build-once/probe-many ANN indexes, memoized per (session, corpus): a real
-# vector-search deployment fits the quantizer / buckets / codebooks once and
-# serves many queries against the prebuilt index, so the registry mirrors
-# that split — the first ANN query pays the build (bounded driver fit +
-# one corpus pass, tracked_persist so caching.trim() bounds residency; a
-# memo hit re-checks storageLevel and re-persists a trim-evicted table so
-# the build-once claim survives a full registry sweep), repeat queries pay
-# only the probe.
-_ANN_INDEX_CACHE: dict[tuple, object] = {}
-
-# Session-memoized co-purchase edge artifact (r11 VERDICT item 5, premise
-# corrected: part_pagerank and pagerank_dangling do NOT share an edge
-# build — the dangling graph is the cheap order→part projection, no
-# self-join — but part_pagerank's own reps re-ran the ~6.8 s self-join +
-# distinct each time because pagerank releases its internal edge persist
-# before returning). Same contract as _ANN_INDEX_CACHE: first build pays
-# the cold shape, repeats reuse the persisted distinct edge list, and the
-# trim/release revival guard re-persists an evicted frame.
-_COPURCHASE_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    e = _COPURCHASE_EDGE_CACHE.get(key)
-    if e is not None:
-        e = caching.tracked_persist_shared(e)
-        _COPURCHASE_EDGE_CACHE[key] = e
-        return e
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("dst"))
-    e = caching.tracked_persist(
-        a.join(b, on="l_orderkey")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")  # distinct PAIRS — not (order, src, dst)
-        .distinct()
-    )
-    _COPURCHASE_EDGE_CACHE[key] = e
-    return e
-
-
-def _revive_ann_index(idx):
-    """Re-register an index table that ``caching.trim()`` evicted.
-
-    The memo outlives the trim window: after a long registry sweep the
-    persisted index DataFrame may have been unpersisted while the memo
-    still returns its handle — every later probe would then silently
-    re-run the full bucketing/assignment/encoding pass per action,
-    defeating the build-once claim. ``tracked_persist_shared`` is the
-    exact guard for this: no-op when the plan is still cached, re-persist
-    plus re-registration when it was evicted.
-    """
-    if isinstance(idx, tuple):
-        return (caching.tracked_persist_shared(idx[0]),) + idx[1:]
-    return caching.tracked_persist_shared(idx)
-
-
-def _ann_index(spark: SparkSession, sf_dir: str, kind: str):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    idx = _ANN_INDEX_CACHE.get(key)
-    if idx is not None:
-        idx = _revive_ann_index(idx)
-        _ANN_INDEX_CACHE[key] = idx
-        return idx
-    base = _plant_query_twins(_t(spark, sf_dir, "embeddings"))
-    if kind == "lsh":
-        idx = caching.tracked_persist(similarity.with_lsh_bucket(base, dim=64))
-    elif kind == "ivf":
-        assigned, centroids = similarity.ivf_index(base)
-        idx = (caching.tracked_persist(assigned), centroids)
-    elif kind == "pq":
-        coded, codebooks = similarity.pq_index(base)
-        idx = (caching.tracked_persist(coded), codebooks)
-    else:  # pragma: no cover
-        raise ValueError(kind)
-    _ANN_INDEX_CACHE[key] = idx
-    return idx
-
-
-# Session-memoized SemDeDup cell index (r14): q_semantic_near_dups and
-# q_knn_graph plant the SAME corpus (embeddings + 8 direction-preserving
-# x0.8 twins) and quantize it with the SAME ivf_index(16, seed=7) +
-# cap_cell_sizes(4096) chain — yet each call re-paid the quantizer fit
-# (one TakeOrdered collect over the corpus) and the cap's oversized-cell
-# probe (one groupBy-count-collect over the assigned corpus). Same
-# contract as _ANN_INDEX_CACHE: first build pays the cold shape, repeats
-# reuse the persisted capped assignment, the revival guard re-persists a
-# trim-evicted frame. Pure function of (session, corpus): the plant and
-# every quantizer input are deterministic.
-_SEM_INDEX_CACHE: dict[tuple, tuple] = {}
 
 
 def _sem_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1283,58 +1103,20 @@ def _sem_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sem_capped_index(spark: SparkSession, sf_dir: str) -> tuple:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _SEM_INDEX_CACHE.get(key)
-    if idx is not None:
-        idx = (caching.tracked_persist_shared(idx[0]), idx[1])
-        _SEM_INDEX_CACHE[key] = idx
-        return idx
-    planted = _sem_planted(spark, sf_dir)
-    assigned, centroids = similarity.ivf_index(planted, 16, "embedding", seed=7)
-    assigned = similarity.cap_cell_sizes(
-        assigned, int(centroids.shape[1]), 4096, "cluster", "embedding", 7,
-        salt_col="vec_id",
-    )
-    idx = (caching.tracked_persist(assigned), centroids)
-    _SEM_INDEX_CACHE[key] = idx
-    return idx
+    """(capped cell assignment, centroids) of the semantic planted corpus,
+    shared by q_semantic_near_dups and q_knn_graph (caching.memo): the
+    quantizer-fit collect and the oversized-cell probe run once."""
 
+    def build():
+        planted = _sem_planted(spark, sf_dir)
+        assigned, centroids = similarity.ivf_index(planted, 16, "embedding", seed=7)
+        capped = similarity.cap_cell_sizes(
+            assigned, int(centroids.shape[1]), 4096, "cluster", "embedding", 7,
+            salt_col="vec_id",
+        )
+        return capped, centroids
 
-# Session-memoized IVF corpus assignments for the probe-join family (r14):
-# q_ann_search_join (raw embeddings) and q_semantic_decontamination (the
-# bench/corpus split + 10 planted copies) each re-paid the quantizer-fit
-# collect + corpus assign pass on every call. Both corpora are pure
-# functions of (session, corpus); same contract as _ANN_INDEX_CACHE /
-# _SEM_INDEX_CACHE (build once, persist, revive on trim-eviction).
-_IVF_CORPUS_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
-def _ivf_corpus_index(spark: SparkSession, sf_dir: str, kind: str, corpus: DataFrame) -> tuple:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    idx = _IVF_CORPUS_INDEX_CACHE.get(key)
-    if idx is not None:
-        idx = (caching.tracked_persist_shared(idx[0]), idx[1])
-        _IVF_CORPUS_INDEX_CACHE[key] = idx
-        return idx
-    assigned, centroids = similarity.ivf_index(corpus, 16, "embedding", seed=7)
-    idx = (caching.tracked_persist(assigned), centroids)
-    _IVF_CORPUS_INDEX_CACHE[key] = idx
-    return idx
-
-
-# Session-memoized Bloom fit for q_bloom_decontamination (r14): the packed
-# filter words are a pure function of (corpus dir, n, fpp) — the benchmark
-# split is deterministic — yet every call re-paid the benchmark shingling +
-# sizing count + packed-word collect (two driver actions). Bounded driver
-# data (~m/64 longs), same contract class as _query_vec/_doc_count.
-_BLOOM_FIT_MEMO: dict[tuple, tuple] = {}
-
-
-def _bloom_fit(spark: SparkSession, sf_dir: str, bench: DataFrame, n: int, fpp: float) -> tuple:
-    key = (sf_dir, n, fpp)
-    if key not in _BLOOM_FIT_MEMO:
-        _BLOOM_FIT_MEMO[key] = contamination.build_bloom_words(bench, n=n, fpp=fpp)
-    return _BLOOM_FIT_MEMO[key]
+    return caching.memo(spark, ("sem_capped_index", sf_dir), build)
 
 
 def _with_exact_topk_flag(approx: DataFrame, exact: DataFrame) -> DataFrame:
@@ -1355,8 +1137,8 @@ def q_lsh_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the recall@10 contract vs the exact twin; the three planted
     query-twins (vec_id 2_000_000+) must always be recovered."""
     qvec, exact = _exact_topk_twin(spark, sf_dir, 10)
-    bucketed = _ann_index(spark, sf_dir, "lsh")
-    return _with_exact_topk_flag(similarity.lsh_probe(bucketed, qvec, 10), exact)
+    base = _plant_query_twins(_t(spark, sf_dir, "embeddings"))
+    return _with_exact_topk_flag(similarity.lsh_topk(base, qvec, 10), exact)
 
 
 def q_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,10 +1769,8 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rows-only: cluster assignment is iterative/approximate by design; the
     exact oracle-checked twin is similarity_topk, and tests assert recall)."""
     qvec, exact = _exact_topk_twin(spark, sf_dir, 10)
-    assigned, centroids = _ann_index(spark, sf_dir, "ivf")
-    return _with_exact_topk_flag(
-        similarity.ivf_probe(assigned, centroids, qvec, 10), exact
-    )
+    base = _plant_query_twins(_t(spark, sf_dir, "embeddings"))
+    return _with_exact_topk_flag(similarity.ivf_topk(base, qvec, 10), exact)
 
 
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2151,8 +1931,8 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate by design; recall asserted in tests/test_similarity.py,
     exact twin is similarity_topk)."""
     qvec, exact = _exact_topk_twin(spark, sf_dir, 10)
-    coded, codebooks = _ann_index(spark, sf_dir, "pq")
-    return _with_exact_topk_flag(similarity.pq_probe(coded, codebooks, qvec, 10), exact)
+    base = _plant_query_twins(_t(spark, sf_dir, "embeddings"))
+    return _with_exact_topk_flag(similarity.pq_topk(base, qvec, 10), exact)
 
 
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2172,12 +1952,8 @@ def q_semantic_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine 1.0 pair) MUST all surface; random testdata vectors are
     near-orthogonal, so planted_pair=true rows are the entire expected
     output. tests/test_query_contracts.py asserts the count and that
-    ``semantic_dedup`` drops exactly the twin ids.
-
-    The planted corpus and its ivf(16)+cap cell assignment are shared with
-    q_knn_graph via the session memo _sem_capped_index (r14): the per-call
-    quantizer-fit collect and oversized-cell probe are paid once per
-    (session, corpus) instead of on every call/rep."""
+    ``semantic_dedup`` drops exactly the twin ids. The cell assignment is
+    shared with q_knn_graph (_sem_capped_index)."""
     pairs = similarity.semantic_near_duplicate_pairs(
         _sem_planted(spark, sf_dir),
         threshold=0.95,
@@ -2199,10 +1975,8 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor at cosine 1.0 — ``planted_rank1`` flags them;
     tests/test_query_contracts.py asserts all 8 surface and that
     cell-local ranking equals exact brute-force ranking on a bounded
-    sample.
-
-    The planted corpus and its cell assignment ride the session memo
-    _sem_capped_index shared with q_semantic_near_dups (r14)."""
+    sample. The cell assignment is shared with q_semantic_near_dups
+    (_sem_capped_index)."""
     g = similarity.knn_graph(
         _sem_planted(spark, sf_dir),
         k=3,
@@ -2748,13 +2522,10 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         planted
     )
     # the benchmark is bounded by construction (<=50 rows) and
-    # deterministic, so skip the implicit gate-count job; the corpus IVF
-    # assignment rides the session memo (_ivf_corpus_index, r14) instead
-    # of re-fitting the quantizer per call
+    # deterministic, so skip the implicit gate-count job
     report = similarity.semantic_decontaminate(
         corpus, bench, threshold=0.95, n_clusters=16, nprobe=4,
         assume_small_batch=True,
-        corpus_index=_ivf_corpus_index(spark, sf_dir, "decon_corpus", corpus),
     )
     return report.withColumn(
         "planted", F.col("vec_id") >= 5_000_000
@@ -2930,11 +2701,6 @@ def q_streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFram
     return out.orderBy("user_id", "view_event", "purchase_event")
 
 
-# Memoized watermark-clip cutoff for the left interval join: one naive
-# datetime per (applicationId, sf_dir) — see the in-query comment.
-_VP_CUTOFF_MEMO: dict[tuple[str, str], object] = {}
-
-
 def q_streaming_view_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6 stream-stream LEFT OUTER interval join, oracle-checked: views
     keep flowing even with no purchase within 30 min — the unmatched rows
@@ -2963,26 +2729,16 @@ def q_streaming_view_purchase_left_join(spark: SparkSession, sf_dir: str) -> Dat
         # wall-clock — the same wall-clock view_ts carries below. (A plain
         # timestamp max collected outside this block would come back in the
         # default session tz and shift the clip by the tz offset.)
-        # The collected value is immutable per (session, corpus) — one
-        # naive datetime — so it rides the same bounded control-plane memo
-        # contract as _doc_count/_query_vec instead of re-paying the agg
-        # job on every call/rep (r13).
-        cutoff_key = (spark.sparkContext.applicationId, sf_dir)
-        if cutoff_key not in _VP_CUTOFF_MEMO:
-            ntz = F.col("ts").cast("timestamp_ntz")
-            _VP_CUTOFF_MEMO[cutoff_key] = (
-                ev.agg(
-                    (
-                        F.least(
-                            F.max(F.when(F.col("event_type") == "view", ntz)),
-                            F.max(F.when(F.col("event_type") == "purchase", ntz)),
-                        )
-                        - F.expr("INTERVAL 91 MINUTES")
-                    ).alias("c")
+        ntz = F.col("ts").cast("timestamp_ntz")
+        cutoff = ev.agg(
+            (
+                F.least(
+                    F.max(F.when(F.col("event_type") == "view", ntz)),
+                    F.max(F.when(F.col("event_type") == "purchase", ntz)),
                 )
-                .collect()[0]["c"]
-            )
-        cutoff = _VP_CUTOFF_MEMO[cutoff_key]
+                - F.expr("INTERVAL 91 MINUTES")
+            ).alias("c")
+        ).collect()[0]["c"]
         views = (
             normalize_ts(_stream())
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -3080,12 +2836,7 @@ def q_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter can only overcount) — thresholds pinned in
     tests/test_contamination.py."""
     cand, bench = _bench_split(spark, sf_dir)
-    # the packed filter rides the session memo (_bloom_fit, r14) instead
-    # of re-running the benchmark shingle + sizing + packed collect per call
-    bloom = contamination.bloom_contamination_stats(
-        cand, bench, n=3, fpp=0.01,
-        bloom_fit=_bloom_fit(spark, sf_dir, bench, n=3, fpp=0.01),
-    )
+    bloom = contamination.bloom_contamination_stats(cand, bench, n=3, fpp=0.01)
     exact = contamination.contamination_stats(cand, bench, n=3, use_hash=True).select(
         "doc_id", F.col("n_contaminated").alias("n_contaminated_exact")
     )
@@ -3262,12 +3013,9 @@ def q_ann_search_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.transform("embedding", lambda x: x * F.lit(0.7)).alias("embedding"),
     )
-    # 10 deterministic queries: skip the implicit gate-count job; the
-    # corpus IVF assignment rides the session memo (_ivf_corpus_index,
-    # r14) instead of re-fitting the quantizer per call
+    # 10 deterministic queries: skip the implicit gate-count job
     out = similarity.ivf_search_join(
-        emb, queries, k=5, n_clusters=16, nprobe=4, assume_small_batch=True,
-        corpus_index=_ivf_corpus_index(spark, sf_dir, "ann_corpus", emb),
+        emb, queries, k=5, n_clusters=16, nprobe=4, assume_small_batch=True
     )
     return out.withColumn(
         "planted_rank1",
@@ -3694,7 +3442,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract; the greedy loop runs in ONE numpy-vectorized Arrow batch."""
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
     qvec = _query_vec(spark, sf_dir)
-    top1_id, twin_id = _mmr_anchor_ids(spark, sf_dir)
+    top1_id = similarity.brute_force_topk(emb, qvec, 1).head().vec_id
+    twin_id = _t(spark, sf_dir, "embeddings").agg(F.max("vec_id")).head()[0] + 1
     twin = emb.filter(F.col("vec_id") == top1_id).select(
         F.lit(twin_id).cast("long").alias("vec_id"), F.col("embedding")
     )
@@ -3716,15 +3465,14 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     step for step: an ITERATIVE algorithm under a full value-hash gate,
     not a rows-only pass. Scale: 2 linear shuffles per iteration, scores
     persist per tier with bounded lineage; |V| rides as a broadcast
-    1-row frame. The co-purchase edge list (lineitem self-join +
-    distinct — ~2/3 of this query's cold cost) is a session-memoized
-    artifact (_copurchase_edges, the _ANN_INDEX_CACHE pattern): the
-    first execution pays the cold build, repeats reuse the persisted
-    distinct frame (edges_prepared=True skips pagerank's own re-distinct
-    and re-persist)."""
-    pr = cluster.pagerank(
-        _copurchase_edges(spark, sf_dir), iterations=3, edges_prepared=True
-    )
+    1-row frame. The co-purchase edge list is the lineitem self-join on
+    the order key; pagerank itself dedups it to distinct (src, dst)
+    pairs inside its one src-clustered edge exchange."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("src"))
+    b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("dst"))
+    edges = a.join(b, on="l_orderkey").filter(F.col("src") != F.col("dst"))
+    pr = cluster.pagerank(edges, iterations=3)
     return pr.select(
         F.col("vertex").alias("part_id"), "pagerank"
     ).orderBy(F.desc("pagerank"), "part_id")

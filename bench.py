@@ -386,9 +386,9 @@ def main() -> None:
         # (local_supplier_volume 6.26 s in-session vs 1.3-1.8 s isolated).
         # Release tracked persists AFTER a query's reps (rep 2 still reuses
         # rep 1's caches — the min stays a warm measurement) and nudge the
-        # JVM GC so each query starts from a comparable heap. The ANN index
-        # memo survives release_all: its revival guard re-persists evicted
-        # index frames on the next hit.
+        # JVM GC so each query starts from a comparable heap. The
+        # caching.memo store survives release_all: a hit re-persists an
+        # evicted DataFrame value.
         #
         # r12: ALSO drop the streaming memory-sink temp views. Every
         # streaming query's AvailableNow drain registers a memory table
@@ -397,8 +397,8 @@ def main() -> None:
         # r11/r12 "phantom inflation" whose isolated reruns always landed
         # at old values (diagnosed r12: full-run streaming_dedup_daily
         # 5.6 s vs 2.2 s isolated; rolling_active_users 3.0 vs 1.0). The
-        # memory sinks are the session's only temp views; the _cc/_ANN
-        # memos are plain persisted DataFrames, unaffected.
+        # memory sinks are the session's only temp views; caching.memo
+        # values are plain persisted DataFrames, unaffected.
         caching.release_all()
         for t in spark.catalog.listTables():
             if t.isTemporary:

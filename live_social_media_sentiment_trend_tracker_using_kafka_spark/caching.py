@@ -13,13 +13,27 @@ Convention: operators call :func:`tracked_persist` instead of
 notebook users) calls :func:`release_all` between queries. Unpersisting is
 always correctness-safe — a released plan silently recomputes — so the
 worst case of a missed release stays "slower", never "wrong".
+
+Memo contract (:func:`memo`): build-once artifacts a session reuses across
+DIFFERENT queries (a shared components table, the fixed query vector, a
+shared index) live in ONE in-process store keyed by the Spark application
+id, so nothing outlives the process or leaks into another session. A memo
+is kept only when two or more queries read it — a value that only one
+query reads can only hit on a repeat call of that query, which measures
+the repeat, not the work. Memos outlive :func:`trim`/:func:`release_all`;
+DataFrame values (bare or inside a tuple) are persisted on every return,
+so a hit re-persists a table a trim evicted instead of silently
+recomputing its lineage per action.
 """
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_MEMO: dict[tuple, Any] = {}
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -44,6 +58,22 @@ def tracked_persist_shared(df: DataFrame) -> DataFrame:
     if lvl.useMemory or lvl.useDisk:
         return df
     return tracked_persist(df)
+
+
+def memo(spark, key: tuple, build: Callable[[], Any]) -> Any:
+    """Return the value stored under ``(applicationId, *key)``, calling
+    ``build()`` only on a miss. Every DataFrame in the value (the value
+    itself, or an element of a tuple) goes through
+    :func:`tracked_persist_shared` — a no-op while it is still cached."""
+    k = (spark.sparkContext.applicationId, *key)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    v = _MEMO[k]
+    if isinstance(v, DataFrame):
+        return tracked_persist_shared(v)
+    if isinstance(v, tuple):
+        return tuple(tracked_persist_shared(x) if isinstance(x, DataFrame) else x for x in v)
+    return v
 
 
 def release_all() -> int:

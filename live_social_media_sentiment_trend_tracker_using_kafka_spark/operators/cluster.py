@@ -159,7 +159,6 @@ def pagerank(
     damping: float = 0.85,
     round_digits: int = 9,
     handle_dangling: bool = False,
-    edges_prepared: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (Page/Brin 1998).
 
@@ -207,10 +206,6 @@ def pagerank(
     """
     from ..caching import free_local_checkpoint, release, tracked_persist
 
-    # edges_prepared=True declares the caller already hands a distinct,
-    # (src, dst)-named, PERSISTED frame (e.g. a session-memoized edge
-    # artifact): re-running the dedup exchange would pay its shuffle
-    # again for rows the memo already holds.
     from pyspark.sql import Window
 
     # edge prep rides ONE src-clustered exchange (r13): repartition("src")
@@ -221,16 +216,11 @@ def pagerank(
     # of e for the e⋈deg join). The persisted frame keeps
     # HashPartitioning(src), which is exactly the side every iteration's
     # contribution join clusters on — only the score tier reshuffles.
-    if edges_prepared:
-        base_e = edges  # caller guarantees distinct + (src, dst) names
-    else:
-        base_e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .repartition("src")
-            .dropDuplicates()
-        )
     ed = tracked_persist(
-        base_e.withColumn(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .repartition("src")
+        .dropDuplicates()
+        .withColumn(
             "outd",
             F.count(F.lit(1)).over(Window.partitionBy("src")).cast("double"),
         )

@@ -194,15 +194,8 @@ def bloom_contamination_stats(
     n: int = 5,
     fpp: float = 0.01,
     round_digits: int = 6,
-    bloom_fit: tuple | None = None,
 ) -> DataFrame:
     """Per-doc contamination via a broadcast Bloom filter — the 100 TB path.
-
-    ``bloom_fit``: a prebuilt ``(words, m, k)`` triple exactly as
-    ``build_bloom_words`` returns — e.g. a session-memoized fit over an
-    immutable benchmark. Skips the per-call benchmark shingling + sizing
-    count + packed-word collect (two driver actions); the build-once/
-    probe-many seam of the index family (r14).
 
     ``contamination_stats`` shuffles (doc, gram) pairs into a semi-join;
     this tier instead probes a benchmark Bloom filter INSIDE the corpus
@@ -217,10 +210,7 @@ def bloom_contamination_stats(
     """
     from .dedup import shingle_table
 
-    if bloom_fit is not None:
-        words, m, k = bloom_fit
-    else:
-        words, m, k = build_bloom_words(benchmark, text_col, n, fpp)
+    words, m, k = build_bloom_words(benchmark, text_col, n, fpp)
     spark = docs.sparkSession
     # Arrow local relation, not a pickled 1-row RDD: the filter rides as a
     # broadcast side of every action on this chain, and the pickled path

@@ -1139,7 +1139,6 @@ def ivf_search_join(
     seed: int = 7,
     max_broadcast_queries: int = 100_000,
     assume_small_batch: bool | None = None,
-    corpus_index: tuple | None = None,
 ) -> DataFrame:
     """BATCH ANN search join: top-k corpus neighbors for EVERY row of a
     query-vector table — the serving-batch shape (rerank candidates for a
@@ -1181,7 +1180,6 @@ def ivf_search_join(
     cand = _ivf_probe_candidates(
         corpus, queries, n_clusters, nprobe, id_col, vec_col, seed,
         max_broadcast_queries, assume_small_batch, query_cols=[query_id_col],
-        corpus_index=corpus_index,
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
     return (
@@ -1203,7 +1201,6 @@ def _ivf_probe_candidates(
     max_broadcast_queries: int,
     assume_small_batch: bool | None,
     query_cols: list[str],
-    corpus_index: tuple | None = None,
 ) -> DataFrame:
     """Shared candidate-pair builder for the IVF probe-join family
     (ivf_search_join, semantic_decontaminate): corpus IVF-assigned once,
@@ -1212,15 +1209,15 @@ def _ivf_probe_candidates(
     join above it (one place to maintain the gate; extracted after the
     r9 review caught semantic_decontaminate shipping without it).
     Returns (query_cols..., id_col, cosine)."""
-    from ..functions.kernels import make_ivf_probes_udf, pair_cosine_udf
+    from ..functions.kernels import make_ivf_assign_udf, make_ivf_probes_udf, pair_cosine_udf
 
-    # corpus_index: prebuilt (assigned, centroids) — the build-once/
-    # probe-many seam of the ANN family (r14): a session-memoized corpus
-    # assignment skips the per-call quantizer-fit collect + assign pass.
-    if corpus_index is not None:
-        assigned, centroids = corpus_index
-    else:
-        assigned, centroids = ivf_index(corpus, n_clusters, vec_col, seed=seed)
+    _, centroids = ivf_index(corpus, n_clusters, vec_col, seed=seed)
+    # asNondeterministic (same reason as cosine_near_duplicate_pairs): the
+    # join's inferred isnotnull(cluster) filter otherwise collapses below
+    # the projection and the assign kernel runs twice per corpus row. The
+    # kernel is pure; the marker only stops the optimizer duplicating it.
+    assign = make_ivf_assign_udf(centroids).asNondeterministic()
+    assigned = corpus.withColumn("cluster", assign(F.col(vec_col)))
     probes = make_ivf_probes_udf(centroids, nprobe)
     q = queries.select(
         *[F.col(c) for c in query_cols],
@@ -1311,7 +1308,6 @@ def semantic_decontaminate(
     seed: int = 7,
     max_broadcast_queries: int = 100_000,
     assume_small_batch: bool | None = None,
-    corpus_index: tuple | None = None,
 ) -> DataFrame:
     """EMBEDDING-level benchmark decontamination: flag every corpus row
     whose vector is within cosine ``threshold`` of ANY benchmark item —
@@ -1344,7 +1340,6 @@ def semantic_decontaminate(
             max_broadcast_queries=max_broadcast_queries,
             assume_small_batch=assume_small_batch,
             query_cols=[],
-            corpus_index=corpus_index,
         )
         .filter(F.col("cosine") >= threshold)
         .groupBy(id_col)

@@ -8,8 +8,6 @@ and cluster dedup genuinely differ.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import cluster
 
 
@@ -157,30 +155,3 @@ def test_pagerank_dangling_noop_on_sinkless_graph(spark):
     b = sorted((r.vertex, r.pagerank) for r in
                pagerank(e, iterations=4, handle_dangling=True).collect())
     assert a == b
-
-
-def test_pagerank_edges_prepared_equals_raw(spark):
-    """edges_prepared=True (caller hands a distinct, (src,dst)-named,
-    persisted edge frame — the session-memoized co-purchase artifact)
-    must produce exactly the raw-edges result and must NOT unpersist the
-    caller's frame (it belongs to the caller's memo)."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.caching import tracked_persist
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.cluster import pagerank
-
-    raw = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (1, 3), (1, 2)], ["a", "b"]  # dup edge
-    )
-    want = sorted(
-        (r.vertex, r.pagerank)
-        for r in pagerank(raw, src="a", dst="b", iterations=3).collect()
-    )
-    prepared = tracked_persist(
-        raw.select(F.col("a").alias("src"), F.col("b").alias("dst")).distinct()
-    )
-    got = sorted(
-        (r.vertex, r.pagerank)
-        for r in pagerank(prepared, iterations=3, edges_prepared=True).collect()
-    )
-    assert got == want
-    assert prepared.storageLevel.useMemory  # still persisted for the memo
-    prepared.unpersist()

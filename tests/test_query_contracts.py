@@ -218,15 +218,18 @@ def test_ann_trio_shares_one_exact_twin(spark):
     """The lsh/ivf/pq recall contract must compute its brute-force exact
     top-k ONCE per (session, corpus): running two trio members populates a
     single memo entry, and both queries flag against the same id list."""
-    import __spark_entry__ as entrymod
-    from tests.conftest import SF_SMOKE
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
 
-    entrymod._EXACT_TOPK_CACHE.clear()
+    def twins():
+        return {k: v for k, v in caching._MEMO.items() if k[1] == "exact_topk"}
+
+    for k in twins():
+        del caching._MEMO[k]
     q = entrymod.queries()
     ivf = q["ivf_topk"](spark, SF_SMOKE).collect()
     lsh = q["lsh_similarity_topk"](spark, SF_SMOKE).collect()
-    assert len(entrymod._EXACT_TOPK_CACHE) == 1
-    (qvec, ids), = entrymod._EXACT_TOPK_CACHE.values()
+    assert len(twins()) == 1
+    ids, = twins().values()
     assert len(ids) == 10
     # flags in both results must be consistent with the shared id set
     for rows in (ivf, lsh):
@@ -234,51 +237,100 @@ def test_ann_trio_shares_one_exact_twin(spark):
             assert r.in_exact_topk == (r.vec_id in ids)
 
 
-def test_ann_index_memo_revives_after_trim(spark):
-    """caching.trim() evicting the persisted index must not leave the memo
-    returning a cold handle: a post-eviction ``_ann_index`` hit re-persists
-    and re-registers the table, keeping the build-once/probe-many claim
-    true across a full registry sweep (r4 ADVICE item)."""
-    import __spark_entry__ as entrymod
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
-    from tests.conftest import SF_SMOKE
-
-    entrymod._ANN_INDEX_CACHE.clear()
-    assigned, _ = entrymod._ann_index(spark, SF_SMOKE, "ivf")
-    lvl = assigned.storageLevel
-    assert lvl.useMemory or lvl.useDisk
-    caching.release_all()  # what a long sweep's trim() eventually does
-    lvl = assigned.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "release_all should evict"
-    assigned2, _ = entrymod._ann_index(spark, SF_SMOKE, "ivf")
-    lvl = assigned2.storageLevel
-    assert lvl.useMemory or lvl.useDisk, "memo hit must re-persist evicted index"
-    caching.release_all()
-
-
 def test_cc_table_memo_shared_and_revives_after_trim(spark):
     """The canonical components table must build once per (session, corpus)
-    and survive trim eviction the same way the ANN indexes do: a memo hit
-    after release re-persists the table, so the four cluster consumers
-    (dedup_clusters, cluster_sizes, clean_corpus_clustered,
-    quality_by_dup_status) never silently re-run the simjoin + CC chain."""
-    import __spark_entry__ as entrymod
+    and survive trim eviction: a memo hit after release re-persists the
+    table, so the five cluster consumers never silently re-run the
+    simjoin + CC chain."""
     from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
-    from tests.conftest import SF_SMOKE
 
-    entrymod._CC_CACHE.clear()
-    cc = entrymod._cc_table(spark, SF_SMOKE)
-    lvl = cc.storageLevel
-    assert lvl.useMemory or lvl.useDisk
-    assert entrymod._cc_table(spark, SF_SMOKE) is cc, "memo must return one table"
-    caching.release_all()
-    lvl = cc.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "release_all should evict"
-    cc2 = entrymod._cc_table(spark, SF_SMOKE)
-    lvl = cc2.storageLevel
-    assert lvl.useMemory or lvl.useDisk, "memo hit must re-persist evicted table"
-    caching.release_all()
-    entrymod._CC_CACHE.clear()
+    def drop_cc():
+        for k in [k for k in caching._MEMO if k[1] == "cc"]:
+            del caching._MEMO[k]
+
+    drop_cc()
+    try:
+        cc = entrymod._cc_table(spark, SF_SMOKE)
+        lvl = cc.storageLevel
+        assert lvl.useMemory or lvl.useDisk
+        assert entrymod._cc_table(spark, SF_SMOKE) is cc, "memo must return one table"
+        caching.release_all()
+        lvl = cc.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk), "release_all should evict"
+        cc2 = entrymod._cc_table(spark, SF_SMOKE)
+        lvl = cc2.storageLevel
+        assert lvl.useMemory or lvl.useDisk, "memo hit must re-persist evicted table"
+    finally:
+        caching.release_all()
+        drop_cc()
+
+
+def test_caching_memo_contract(spark):
+    """caching.memo: build runs once per key, a different application
+    rebuilds, a hit after release_all hands back re-persisted DataFrames
+    (bare and inside a tuple), and the registry's memos hold in-process
+    values only — never a path or string that could point at disk."""
+    import os
+    from types import SimpleNamespace
+
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    app_a = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-a"))
+    app_b = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-b"))
+    try:
+        assert caching.memo(app_a, ("t", 1), build) == 1
+        assert caching.memo(app_a, ("t", 1), build) == 1
+        assert caching.memo(app_b, ("t", 1), build) == 2
+        assert len(calls) == 2
+    finally:
+        caching._MEMO.pop(("app-a", "t", 1), None)
+        caching._MEMO.pop(("app-b", "t", 1), None)
+
+    def persisted(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    try:
+        bare = caching.memo(spark, ("t", "bare"), lambda: spark.range(5))
+        pair = caching.memo(spark, ("t", "pair"), lambda: (spark.range(7), [1.0]))
+        assert persisted(bare) and persisted(pair[0])
+        caching.release_all()
+        assert not persisted(bare) and not persisted(pair[0])
+        assert persisted(caching.memo(spark, ("t", "bare"), lambda: None))
+        hit = caching.memo(spark, ("t", "pair"), lambda: None)
+        assert persisted(hit[0]) and hit[1] == [1.0]
+        assert hit[0].count() == 7
+    finally:
+        app = spark.sparkContext.applicationId
+        caching._MEMO.pop((app, "t", "bare"), None)
+        caching._MEMO.pop((app, "t", "pair"), None)
+        caching.release_all()
+
+    # every registry memo, populated on the smoke corpus
+    qs = entrymod.queries()
+    for name in ("dedup_clusters", "similarity_topk", "ivf_topk", "knn_graph",
+                 "minhash_near_dups"):
+        qs[name](spark, SF_SMOKE).count()
+    kinds = {k[1] for k in caching._MEMO}
+    assert {"cc", "query_vec", "exact_topk", "sem_capped_index", "doc_count"} <= kinds
+    for v in caching._MEMO.values():
+        for x in v if isinstance(v, tuple) else (v,):
+            assert not isinstance(x, (str, os.PathLike)), x
+
+
+def test_entry_defines_no_module_level_memo_dicts():
+    """Memos go through caching.memo: no hand-rolled ``*_MEMO`` /
+    ``*_CACHE`` dict may regrow in the registry module."""
+    bad = [
+        n for n, v in vars(entrymod).items()
+        if isinstance(v, dict) and n.endswith(("_MEMO", "_CACHE"))
+    ]
+    assert not bad, bad
 
 
 def test_knn_graph_query_contract(spark):
@@ -610,6 +662,16 @@ def test_mmr_rerank_planted_redundant_held_out(spark):
     assert sorted(r.mmr_rank for r in rows) == list(range(1, 11))
     first = [r for r in rows if r.mmr_rank == 1][0]
     assert first.max_sim_to_selected == 0.0
+    # the first pick is the exact top-1 (the original, not its planted twin)
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
+        similarity,
+    )
+
+    emb = entrymod._t(spark, SF_SMOKE, "embeddings").filter(
+        F.col("vec_id") != entrymod._QUERY_VEC_ID
+    )
+    qvec = entrymod._query_vec(spark, SF_SMOKE)
+    assert first.vec_id == similarity.brute_force_topk(emb, qvec, 1).head().vec_id
     # later picks carry a real diversity penalty (non-vacuous evidence)
     assert any(r.max_sim_to_selected > 0.0 for r in rows)
 
@@ -659,107 +721,23 @@ def test_every_hash_checked_query_emits_only_scalar_columns(spark):
     assert not bad, f"hash-checked queries with non-scalar columns: {bad}"
 
 
-def test_copurchase_memo_revival_survives_cache_trim(spark):
-    """r12 VERDICT item 6: the session memo (_COPURCHASE_EDGE_CACHE)
-    outlives caching.trim()'s keep window, so a memo hit must RE-PERSIST a
-    trim-evicted edge table (tracked_persist_shared) — otherwise every
-    pagerank rep after a long sweep silently re-runs the ~6.8 s lineitem
-    self-join per action while the memo still claims build-once. This test
-    goes red if the revival call is removed: the returned frame stays
-    unpersisted and no InMemoryTableScan substitutes into its plan."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import (
-        plan_text,
-    )
-
-    e1 = entrymod._copurchase_edges(spark, SF_SMOKE)
-    e1.count()  # materialize the memo build
-    caching.release_all()  # worst-case trim: evict every tracked handle
-    lvl = e1.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "precondition: eviction real"
-    e2 = entrymod._copurchase_edges(spark, SF_SMOKE)
-    lvl = e2.storageLevel
-    assert lvl.useMemory or lvl.useDisk, "memo hit must re-persist evicted frame"
-    # the revived cache entry substitutes into consumer plans: the edge
-    # subtree reads InMemoryTableScan, not the lineitem self-join
-    plan = plan_text(e2)
-    assert "InMemoryTableScan" in plan, plan
-
-
-def test_ann_index_memo_revival_survives_cache_trim(spark):
-    """Same revival contract for _ANN_INDEX_CACHE (tuple-valued memos:
-    (assigned, centroids) for IVF): a trim-evicted index table must come
-    back persisted on the next memo hit or every probe re-runs the
-    bucketing/assignment pass."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
-
-    idx1 = entrymod._ann_index(spark, SF_SMOKE, "ivf")
-    f1 = idx1[0] if isinstance(idx1, tuple) else idx1
-    f1.count()
-    caching.release_all()
-    lvl = f1.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "precondition: eviction real"
-    idx2 = entrymod._ann_index(spark, SF_SMOKE, "ivf")
-    f2 = idx2[0] if isinstance(idx2, tuple) else idx2
-    lvl = f2.storageLevel
-    assert lvl.useMemory or lvl.useDisk, "memo hit must re-persist evicted index"
-
-
-def test_mmr_anchor_ids_memoized_and_correct(spark):
-    """r13: q_mmr_rerank's two control-plane fetches (top-1 TakeOrdered
-    scan + max(vec_id) agg) are memoized per (applicationId, sf_dir).
-    Red if the memo read is removed: after poisoning the memo the helper
-    must return the poisoned pair — i.e. the value really comes from the
-    memo, not a silent recompute per call."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
-        similarity,
-    )
-
-    entrymod._MMR_ANCHOR_MEMO.clear()
-    try:
-        top1_id, twin_id = entrymod._mmr_anchor_ids(spark, SF_SMOKE)
-        # correctness vs the direct computation the memo replaced
-        emb = entrymod._t(spark, SF_SMOKE, "embeddings").filter(
-            F.col("vec_id") != entrymod._QUERY_VEC_ID
-        )
-        qvec = entrymod._query_vec(spark, SF_SMOKE)
-        assert top1_id == similarity.brute_force_topk(emb, qvec, 1).head().vec_id
-        mx = (
-            entrymod._t(spark, SF_SMOKE, "embeddings")
-            .agg(F.max("vec_id"))
-            .head()[0]
-        )
-        assert twin_id == mx + 1
-        # memo read is live: a poisoned entry must be returned verbatim
-        key = (spark.sparkContext.applicationId, SF_SMOKE)
-        entrymod._MMR_ANCHOR_MEMO[key] = (-7, -13)
-        assert entrymod._mmr_anchor_ids(spark, SF_SMOKE) == (-7, -13)
-    finally:
-        entrymod._MMR_ANCHOR_MEMO.clear()
-
-
 def test_sem_capped_index_memoized_and_shared(spark):
-    """r14: q_semantic_near_dups / q_knn_graph share one session-memoized
-    ivf(16)+cap cell assignment (_sem_capped_index) instead of re-paying
-    the quantizer-fit collect + oversized-cell probe per call. Contract:
-    (1) the memoized query path produces exactly the direct operator
-    path's rows; (2) the memo read is live (a poisoned entry changes the
-    consumed assignment); (3) a trim-evicted index revives (storage level
-    restored on hit), so the build-once claim survives release_all."""
+    """q_semantic_near_dups / q_knn_graph share one memoized ivf(16)+cap
+    cell assignment (_sem_capped_index). The memoized query path produces
+    exactly the direct operator path's rows, and both queries read the
+    stored value (a poisoned, empty assignment empties their output)."""
     from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
         similarity,
     )
 
-    entrymod._SEM_INDEX_CACHE.clear()
+    mkey = (spark.sparkContext.applicationId, "sem_capped_index", SF_SMOKE)
+    caching._MEMO.pop(mkey, None)
     try:
         got = entrymod.q_semantic_near_dups(spark, SF_SMOKE).collect()
-        want = (
-            similarity.semantic_near_duplicate_pairs(
-                entrymod._sem_planted(spark, SF_SMOKE), threshold=0.95, n_clusters=16
-            )
-            .collect()
-        )
+        want = similarity.semantic_near_duplicate_pairs(
+            entrymod._sem_planted(spark, SF_SMOKE), threshold=0.95, n_clusters=16
+        ).collect()
         key = lambda r: (r["id_a"], r["id_b"])
         assert sorted(map(key, got)) == sorted(map(key, want)) and len(got) > 0
 
@@ -770,133 +748,9 @@ def test_sem_capped_index_memoized_and_shared(spark):
         kk = lambda r: (r["vec_id"], r["rank"], r["neighbor_id"])
         assert sorted(map(kk, gk)) == sorted(map(kk, wk)) and len(gk) > 0
 
-        # revival: evict every tracked persist, then a memo hit must hand
-        # back a (re-)persisted assignment
-        caching.release_all()
-        assigned, _ = entrymod._sem_capped_index(spark, SF_SMOKE)
-        assert assigned.storageLevel.useMemory or assigned.storageLevel.useDisk
-
-        # memo read is live: a poisoned (empty) assignment must flow into
-        # the query result
-        mkey = (spark.sparkContext.applicationId, SF_SMOKE)
-        real_assigned, real_centroids = entrymod._SEM_INDEX_CACHE[mkey]
-        entrymod._SEM_INDEX_CACHE[mkey] = (
-            real_assigned.limit(0),
-            real_centroids,
-        )
+        assigned, centroids = caching._MEMO[mkey]
+        caching._MEMO[mkey] = (assigned.limit(0), centroids)
         assert entrymod.q_semantic_near_dups(spark, SF_SMOKE).count() == 0
+        assert entrymod.q_knn_graph(spark, SF_SMOKE).count() == 0
     finally:
-        entrymod._SEM_INDEX_CACHE.clear()
-
-
-def test_ivf_corpus_index_memoized_and_shared(spark):
-    """r14: q_ann_search_join / q_semantic_decontamination serve their
-    corpus IVF assignment from _ivf_corpus_index instead of re-fitting the
-    quantizer per call. Same contract pins as _sem_capped_index: parity
-    with the direct operator path, a live memo read, trim-eviction
-    revival."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
-        similarity,
-    )
-
-    entrymod._IVF_CORPUS_INDEX_CACHE.clear()
-    try:
-        got = entrymod.q_ann_search_join(spark, SF_SMOKE).collect()
-        emb = entrymod._t(spark, SF_SMOKE, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"),
-            F.transform("embedding", lambda x: x * F.lit(0.7)).alias("embedding"),
-        )
-        want = similarity.ivf_search_join(
-            emb, queries, k=5, n_clusters=16, nprobe=4, assume_small_batch=True
-        ).collect()
-        key = lambda r: (r["query_id"], r["rank"], r["vec_id"])
-        assert sorted(map(key, got)) == sorted(map(key, want)) and len(got) > 0
-
-        gd = entrymod.q_semantic_decontamination(spark, SF_SMOKE)
-        assert gd.filter(F.col("planted") & ~F.col("contaminated")).count() == 0
-        assert gd.filter(F.col("planted")).count() == 10
-
-        # revival after eviction, and the memo read is live (poisoned
-        # empty assignment -> no candidate rows -> nothing contaminated)
-        caching.release_all()
-        assigned, cents = entrymod._ivf_corpus_index(
-            spark, SF_SMOKE, "ann_corpus", emb
-        )
-        assert assigned.storageLevel.useMemory or assigned.storageLevel.useDisk
-        mkey = (spark.sparkContext.applicationId, SF_SMOKE, "ann_corpus")
-        entrymod._IVF_CORPUS_INDEX_CACHE[mkey] = (assigned.limit(0), cents)
-        assert entrymod.q_ann_search_join(spark, SF_SMOKE).count() == 0
-    finally:
-        entrymod._IVF_CORPUS_INDEX_CACHE.clear()
-
-
-def test_bloom_fit_memoized_and_correct(spark):
-    """r14: q_bloom_decontamination serves its packed Bloom filter from
-    _bloom_fit instead of re-fitting (benchmark shingle + sizing count +
-    packed collect) per call. Parity with the direct operator path, and a
-    live memo read (a poisoned all-zero filter must zero every bloom
-    count, flipping no_false_negative wherever the exact tier hits)."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
-        contamination,
-    )
-
-    entrymod._BLOOM_FIT_MEMO.clear()
-    try:
-        got = entrymod.q_bloom_decontamination(spark, SF_SMOKE)
-        rows = got.collect()
-        assert all(r["no_false_negative"] for r in rows) and len(rows) > 0
-        # parity vs the operator's own per-call fit
-        cand, bench = entrymod._bench_split(spark, SF_SMOKE)
-        want = contamination.bloom_contamination_stats(
-            cand, bench, n=3, fpp=0.01
-        ).collect()
-        wmap = {r["doc_id"]: r["n_contaminated_bloom"] for r in want}
-        assert {r["doc_id"]: r["n_contaminated_bloom"] for r in rows} == wmap
-        # live memo read: all-zero filter -> zero bloom hits everywhere
-        key = (SF_SMOKE, 3, 0.01)
-        words, m, k = entrymod._BLOOM_FIT_MEMO[key]
-        entrymod._BLOOM_FIT_MEMO[key] = ([0] * len(words), m, k)
-        poisoned = entrymod.q_bloom_decontamination(spark, SF_SMOKE)
-        assert poisoned.agg(F.sum("n_contaminated_bloom")).head()[0] == 0
-    finally:
-        entrymod._BLOOM_FIT_MEMO.clear()
-
-
-def test_emb_count_memoized_and_correct(spark):
-    """r14: q_cosine_near_dups' SRP sizing count is served by _emb_count
-    (memoized per sf_dir) + the exact +8 planted-twin offset, removing one
-    whole Spark job per call. Red if the memo read is removed: a poisoned
-    entry must be returned verbatim; and the memo value must equal the
-    real count so the n_rows_hint stays provably exact."""
-    entrymod._EMB_COUNT_MEMO.clear()
-    try:
-        n = entrymod._emb_count(spark, SF_SMOKE)
-        assert n == entrymod._t(spark, SF_SMOKE, "embeddings").count()
-        entrymod._EMB_COUNT_MEMO[SF_SMOKE] = -99
-        assert entrymod._emb_count(spark, SF_SMOKE) == -99
-    finally:
-        entrymod._EMB_COUNT_MEMO.clear()
-
-
-def test_vp_cutoff_memo_is_read_by_left_interval_join(spark):
-    """r13: the left interval join's watermark-clip cutoff (one naive
-    datetime per (applicationId, sf_dir)) is memoized. Red if the memo
-    read is removed: pre-seeding an ancient cutoff must clip the whole
-    result to empty, proving the query consumes the memo value instead
-    of re-running the agg job every call."""
-    import datetime
-
-    key = (spark.sparkContext.applicationId, SF_SMOKE)
-    entrymod._VP_CUTOFF_MEMO.clear()
-    try:
-        out1 = entrymod.q_streaming_view_purchase_left_join(spark, SF_SMOKE)
-        n1 = out1.count()
-        assert key in entrymod._VP_CUTOFF_MEMO, "first call must populate the memo"
-        assert n1 > 0, "smoke fixture should produce joined/unmatched views"
-        entrymod._VP_CUTOFF_MEMO[key] = datetime.datetime(1970, 1, 1)
-        out2 = entrymod.q_streaming_view_purchase_left_join(spark, SF_SMOKE)
-        assert out2.count() == 0, "poisoned memo cutoff must clip everything"
-    finally:
-        entrymod._VP_CUTOFF_MEMO.clear()
+        caching._MEMO.pop(mkey, None)

@@ -342,6 +342,30 @@ def test_ivf_search_join_broadcast_gate_fallback(spark):
     assert got_b == got_f and len(got_b) == 9
 
 
+def test_ivf_probe_joins_assign_each_corpus_row_once(spark):
+    """The probe join infers isnotnull(cluster) on the corpus side; that
+    filter must not pull a second copy of the assign kernel below the
+    projection — one assign_cluster evaluation per corpus row in both
+    probe-join operators."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import plan_text
+
+    df, _ = _fixture(spark)
+    queries = df.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    kw = dict(n_clusters=4, nprobe=2, assume_small_batch=True)
+    for out in (
+        similarity.ivf_search_join(df, queries, k=3, **kw),
+        similarity.semantic_decontaminate(df, queries.select("embedding"), **kw),
+    ):
+        plan = plan_text(out)
+        assert len(re.findall(r"^Arguments: \[assign_cluster\(", plan, re.M)) == 1, plan
+
+
 def test_embedding_dim_stats_matches_numpy(spark):
     import numpy as np
 
