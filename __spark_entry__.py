@@ -17,7 +17,6 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.session import (
     arrow_local_df,
+    scoped_conf,
 )
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions.sentiment import (
     sentiment_label_col,
@@ -87,13 +87,12 @@ from live_social_media_sentiment_trend_tracker_using_kafka_spark.sources.readers
     table,
 )
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming import (
+    await_drain,
+    fan_out_sinks,
     interval_join_streams,
-    interval_left_join_streams,
     run_available_now_to_memory,
+    run_update_sink_to_parquet,
     stream_static_enrich,
-)
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming import (
-    pipeline as streaming_pipeline,
 )
 
 # Fixed query vector for similarity queries: embeddings row vec_id=0 is the
@@ -544,25 +543,10 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_SEQ = [0]
-
-
-@contextmanager
-def _session_tz(spark: SparkSession, tz: str):
-    """Pin ``spark.sql.session.timeZone`` for the duration of a streaming
-    drain, restoring the caller's prior value afterwards — the queries here
-    run on a caller-supplied (possibly foreign) session and must not leak
-    conf mutations into it."""
-    prior = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", tz)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior)
-
-
 def _stream_events(spark: SparkSession, sf_dir: str):
-    """File-stream source for the events table, layout-agnostic.
+    """File-stream source for the events table, layout-agnostic, with
+    ``ts`` normalized and cast to TIMESTAMP (watermarks require it). Call it
+    inside ``_drain_events``' UTC pin: the cast binds its zone at analysis.
 
     Handles BOTH on-disk shapes of ``{sf_dir}/events.parquet``:
 
@@ -587,34 +571,35 @@ def _stream_events(spark: SparkSession, sf_dir: str):
         is_dir = fs.getFileStatus(hpath).isDirectory()
     except Exception:  # pragma: no cover - e.g. path missing entirely
         is_dir = os.path.isdir(path)
-    if is_dir:
-        return spark.readStream.schema(raw_schema).parquet(path)
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    reader = spark.readStream.schema(raw_schema)
+    raw = (
+        reader.parquet(path)
+        if is_dir
+        else reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
+    return normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-@contextmanager
-def _stateful_stream_partitions(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` down for a stateful streaming
-    drain, restoring the caller's value afterwards.
+def _drain_events(
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[DataFrame], DataFrame],
+    output_mode: str,
+) -> DataFrame:
+    """Build a streaming query over the events stream and drain it
+    (AvailableNow) into memory: ``build`` maps the ``_stream_events``
+    stream to the result.
 
-    Each stateful shuffle partition materializes its OWN state-store
-    instance per micro-batch; for a bounded AvailableNow drain the store
-    setup/commit overhead dwarfs the work when partitions track CPU count
-    instead of state volume (measured on the stream-stream interval join at
-    sf0.1: 15.0 s at 32 partitions -> 3.2 s at 8). Size by state, not by
-    cores: a quarter of defaultParallelism, floor 8 — a real deployment
-    with large per-key state raises it back via its own session conf."""
-    target = max(spark.sparkContext.defaultParallelism // 4, 8)
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    Watermarks require TIMESTAMP (not NTZ): the session tz is pinned to UTC
+    so the NTZ→timestamp cast is exact, and the queries cast window bounds
+    back to NTZ so the output matches the timezone-free batch twin. The pin
+    is scoped — analysis AND the drain happen inside it; the memory-sink
+    output is NTZ, so reads after the restore are tz-free, and a caller's
+    (possibly foreign) session keeps its own tz."""
+    with scoped_conf(spark, "spark.sql.session.timeZone", "UTC"):
+        return run_available_now_to_memory(
+            build(_stream_events(spark, sf_dir)), spark, output_mode
+        )
 
 
 def q_streaming_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -622,15 +607,8 @@ def q_streaming_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAM, watermarked tumbling-window agg, drained with
     Trigger.AvailableNow — proves the streaming layer computes the same
     answer as the batch/oracle path (same oracle SQL as ``time_series``)."""
-    raw = _stream_events(spark, sf_dir)
-    # Watermarks require TIMESTAMP (not NTZ): pin the session tz to UTC so
-    # the NTZ→timestamp cast is exact, window on it, and cast the bucket
-    # start back to NTZ so the output matches the timezone-free batch twin.
-    # The pin is scoped — analysis AND the AvailableNow drain happen inside
-    # it; the memory-sink output is NTZ, so reads after restore are tz-free.
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
-        agg = (
+    def build(ev: DataFrame) -> DataFrame:
+        return (
             ev.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour"))
             .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.avg("value"), 6).alias("avg_value"))
@@ -640,10 +618,8 @@ def q_streaming_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_value",
             )
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_ts_agg_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(agg, spark, name, output_mode="complete")
-    return out.orderBy("bucket_ts")
+
+    return _drain_events(spark, sf_dir, build, "complete").orderBy("bucket_ts")
 
 
 def q_streaming_props_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,11 +631,9 @@ def q_streaming_props_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hashtag. Same UTC-pin + NTZ-restore discipline as
     q_streaming_time_series; the oracle is the plain batch SQL twin, so
     the driver hash-checks decode + window + drain end-to-end."""
-    raw = _stream_events(spark, sf_dir)
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
+    def build(ev: DataFrame) -> DataFrame:
         k = F.get_json_object("props", "$.k").cast("int")
-        agg = (
+        return (
             ev.withColumn("k_bucket", k % 10)
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour"), "k_bucket")
@@ -670,9 +644,8 @@ def q_streaming_props_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cnt",
             )
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_props_buckets_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(agg, spark, name, output_mode="complete")
+
+    out = _drain_events(spark, sf_dir, build, "complete")
     return out.orderBy("bucket_ts", "k_bucket")
 
 
@@ -693,19 +666,18 @@ def q_streaming_trending_hashtags(spark: SparkSession, sf_dir: str) -> DataFrame
         extract_hashtags_col,
     )
 
-    raw = _stream_events(spark, sf_dir)
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
-        text = F.concat(
-            F.lit("check out #t"),
-            (F.col("user_id") % 13).cast("string"),
-            F.lit(" and #t"),
-            (F.col("event_id") % 7).cast("string"),
-            F.when(F.col("event_type") == "purchase", F.lit(" #deal")).otherwise(
-                F.lit("")
-            ),
-        )
-        agg = (
+    text = F.concat(
+        F.lit("check out #t"),
+        (F.col("user_id") % 13).cast("string"),
+        F.lit(" and #t"),
+        (F.col("event_id") % 7).cast("string"),
+        F.when(F.col("event_type") == "purchase", F.lit(" #deal")).otherwise(
+            F.lit("")
+        ),
+    )
+
+    def build(ev: DataFrame) -> DataFrame:
+        return (
             ev.withWatermark("ts", "1 hour")
             .select("ts", F.explode(extract_hashtags_col(text)).alias("tag"))
             .groupBy(F.window("ts", "1 hour"), "tag")
@@ -716,9 +688,8 @@ def q_streaming_trending_hashtags(spark: SparkSession, sf_dir: str) -> DataFrame
                 "cnt",
             )
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_trending_tags_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(agg, spark, name, output_mode="complete")
+
+    out = _drain_events(spark, sf_dir, build, "complete")
     w = Window.partitionBy("bucket_ts").orderBy(F.desc("cnt"), F.asc("tag"))
     return (
         out.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -1864,20 +1835,16 @@ def q_streaming_dedup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch per-day counts — proving the stateful operator actually
     removes the planted dups and nothing else (same oracle family as
     streaming_time_series, which covers windowed aggs)."""
-    raw = _stream_events(spark, sf_dir)
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
+    def build(ev: DataFrame) -> DataFrame:
         doubled = ev.select("event_id", "ts", F.explode(F.array(F.lit(1), F.lit(2))).alias("copy")).drop("copy")
         dedup_stream = doubled.withWatermark("ts", "48 hours").dropDuplicatesWithinWatermark(["event_id"])
-        daily = (
+        return (
             dedup_stream.groupBy(F.window("ts", "1 day").getField("start").alias("day"))
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(F.col("day").cast("timestamp_ntz").alias("day"), "n_events")
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_dedup_daily_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(daily, spark, name, output_mode="complete")
-    return out.orderBy("day")
+
+    return _drain_events(spark, sf_dir, build, "complete").orderBy("day")
 
 
 def q_streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1899,10 +1866,8 @@ def q_streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     should use ``append`` output mode (sessions emitted once the watermark
     closes them, state bounded by the 48 h watermark horizon); the batch
     ``user_sessions`` operator is the backfill/at-scale path."""
-    raw = _stream_events(spark, sf_dir)
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
-        sess = (
+    def build(ev: DataFrame) -> DataFrame:
+        return (
             ev.withWatermark("ts", "48 hours")
             .groupBy("user_id", F.session_window("ts", "30 minutes"))
             .agg(
@@ -1918,9 +1883,8 @@ def q_streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "session_value",
             )
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_user_sessions_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(sess, spark, name, output_mode="complete")
+
+    out = _drain_events(spark, sf_dir, build, "complete")
     return out.orderBy("user_id", "session_start")
 
 
@@ -2367,14 +2331,11 @@ def q_streaming_posts_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.write.mode("overwrite").parquet(stage)
         stream = spark.readStream.schema(raw.schema).parquet(stage)
         scored = _lexicon_enrich(stream)
-        _STREAM_SEQ[0] += 1
-        name = f"stream_posts_{_STREAM_SEQ[0]}"
         # the memory sink holds the drained rows in the driver JVM,
         # independent of the staging files — safe to rmtree after the
         # drain, no driver-Python round-trip needed
         out = run_available_now_to_memory(
-            scored.drop("processing_timestamp", "event_ts"), spark, name,
-            output_mode="append",
+            scored.drop("processing_timestamp", "event_ts"), spark
         )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -2412,16 +2373,7 @@ def q_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a": lambda b: b.write.mode("append").parquet(sink_a),
             "b": lambda b: b.write.mode("append").parquet(sink_b),
         }
-        q = streaming_pipeline.fan_out_sinks(
-            scored, writers, checkpoint=ckpt, available_now=True
-        )
-        try:
-            finished = q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-        if not finished:
-            raise TimeoutError("fan-out drain did not finish")
+        await_drain(fan_out_sinks(scored, writers, checkpoint=ckpt, available_now=True))
         a = _normalize_project(spark.read.parquet(sink_a))
         b = _normalize_project(spark.read.parquet(sink_b)).withColumn(
             "twin_matched", F.lit(True)
@@ -2542,12 +2494,12 @@ def q_streaming_user_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_value_stats,
     )
 
-    raw = _stream_events(spark, sf_dir)
-    with _stateful_stream_partitions(spark):
-        stats = running_user_value_stats(raw.select("user_id", "value"))
-        _STREAM_SEQ[0] += 1
-        name = f"stream_uvs_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(stats, spark, name, output_mode="update")
+    out = _drain_events(
+        spark,
+        sf_dir,
+        lambda ev: running_user_value_stats(ev.select("user_id", "value")),
+        "update",
+    )
     return out.select(
         "user_id", "n_events", F.round("total_value", 6).alias("total_value")
     ).orderBy("user_id")
@@ -2659,6 +2611,28 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _view_purchase_join(
+    spark: SparkSession, sf_dir: str, ev: DataFrame, how: str
+) -> DataFrame:
+    """Views of the ``ev`` stream joined per user to purchases (a second
+    events stream) within 30 minutes, 1 hour watermark on both sides."""
+    def typed(stream: DataFrame, event_type: str) -> DataFrame:
+        return stream.filter(F.col("event_type") == event_type).select(
+            "user_id", "event_id", "ts"
+        )
+
+    return interval_join_streams(
+        typed(ev, "view"),
+        typed(_stream_events(spark, sf_dir), "purchase"),
+        key_col="user_id",
+        left_ts="ts",
+        right_ts="ts",
+        max_delay="30 minutes",
+        watermark="1 hour",
+        how=how,
+    )
+
+
 def q_streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6 stream-stream interval join, oracle-checked end to end: views
     and purchases read as two file STREAMS, joined per user on
@@ -2666,43 +2640,20 @@ def q_streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFram
     constraint = bounded state on both sides), drained AvailableNow. The
     result must equal the plain batch interval join — same oracle family as
     streaming_time_series/streaming_dedup_daily."""
-    def _stream():
-        return _stream_events(spark, sf_dir)
-
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        views = (
-            normalize_ts(_stream())
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == "view")
-            .select("user_id", "event_id", "ts")
-        )
-        purchases = (
-            normalize_ts(_stream())
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == "purchase")
-            .select("user_id", "event_id", "ts")
-        )
-        joined = interval_join_streams(
-            views,
-            purchases,
-            key_col="user_id",
-            left_ts="ts",
-            right_ts="ts",
-            max_delay="30 minutes",
-            watermark="1 hour",
-        ).select(
+    def build(ev: DataFrame) -> DataFrame:
+        return _view_purchase_join(spark, sf_dir, ev, "inner").select(
             "user_id",
             F.col("event_id").alias("view_event"),
             F.col("r_event_id").alias("purchase_event"),
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_ivj_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(joined, spark, name, output_mode="append")
+
+    out = _drain_events(spark, sf_dir, build, "append")
     return out.orderBy("user_id", "view_event", "purchase_event")
 
 
 def q_streaming_view_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.6 stream-stream LEFT OUTER interval join, oracle-checked: views
+    """§2.6 stream-stream LEFT OUTER interval join
+    (``interval_join_streams(..., how="left_outer")``), oracle-checked: views
     keep flowing even with no purchase within 30 min — the unmatched rows
     are the "abandoned view" signal an attribution pipeline needs, and
     they only become FINAL (and are only emitted) once the watermark
@@ -2718,19 +2669,15 @@ def q_streaming_view_purchase_left_join(spark: SparkSession, sf_dir: str) -> Dat
     own post-filter rows — so the clip anchors on the smaller of the two
     per-type maxima, not on max(ts) overall. Derived from the data on
     both sides, no baked-in timestamp literals."""
-    ev = _t(spark, sf_dir, "events")
-
-    def _stream():
-        return _stream_events(spark, sf_dir)
-
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        # Cutoff is derived ntz-to-ntz INSIDE the forced-UTC context: ts is
-        # cast to timestamp_ntz here, so the collected value is the UTC
-        # wall-clock — the same wall-clock view_ts carries below. (A plain
-        # timestamp max collected outside this block would come back in the
-        # default session tz and shift the clip by the tz offset.)
+    ev_batch = _t(spark, sf_dir, "events")
+    # Cutoff is derived ntz-to-ntz INSIDE a forced-UTC scope: ts is cast to
+    # timestamp_ntz here, so the collected value is the UTC wall-clock — the
+    # same wall-clock view_ts carries below. (A plain timestamp max
+    # collected outside the scope would come back in the default session tz
+    # and shift the clip by the tz offset.)
+    with scoped_conf(spark, "spark.sql.session.timeZone", "UTC"):
         ntz = F.col("ts").cast("timestamp_ntz")
-        cutoff = ev.agg(
+        cutoff = ev_batch.agg(
             (
                 F.least(
                     F.max(F.when(F.col("event_type") == "view", ntz)),
@@ -2739,35 +2686,16 @@ def q_streaming_view_purchase_left_join(spark: SparkSession, sf_dir: str) -> Dat
                 - F.expr("INTERVAL 91 MINUTES")
             ).alias("c")
         ).collect()[0]["c"]
-        views = (
-            normalize_ts(_stream())
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == "view")
-            .select("user_id", "event_id", "ts")
-        )
-        purchases = (
-            normalize_ts(_stream())
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == "purchase")
-            .select("user_id", "event_id", "ts")
-        )
-        joined = interval_left_join_streams(
-            views,
-            purchases,
-            key_col="user_id",
-            left_ts="ts",
-            right_ts="ts",
-            max_delay="30 minutes",
-            watermark="1 hour",
-        ).select(
+
+    def build(ev: DataFrame) -> DataFrame:
+        return _view_purchase_join(spark, sf_dir, ev, "left_outer").select(
             "user_id",
             F.col("event_id").alias("view_event"),
             F.col("ts").cast("timestamp_ntz").alias("view_ts"),
             F.col("r_event_id").alias("purchase_event"),
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_ivlj_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(joined, spark, name, output_mode="append")
+
+    out = _drain_events(spark, sf_dir, build, "append")
     return (
         # ntz-to-ntz, with the literal built from a STRING: F.lit(naive
         # datetime) round-trips through TimestampType, interpreting the
@@ -2801,13 +2729,11 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact median/MAD via the distributed reconstruction (F.median is the
     # exact-Percentile single-reducer cliff over few groups, r12)
     mad = grouped_median_mad(ev_batch, ["event_type"], "value")
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        stream = (
-            normalize_ts(_stream_events(spark, sf_dir))
-            .filter(F.col("value").isNotNull())
-            .select("event_id", "event_type", "value")
+    def build(ev: DataFrame) -> DataFrame:
+        stream = ev.filter(F.col("value").isNotNull()).select(
+            "event_id", "event_type", "value"
         )
-        flagged = (
+        return (
             stream_static_enrich(stream, mad, on="event_type")
             .filter(F.abs(F.col("value") - F.col("med")) > 5 * F.col("mad"))
             .select(
@@ -2818,10 +2744,8 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round("mad", 6).alias("mad"),
             )
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_static_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(flagged, spark, name, output_mode="append")
-    return out.orderBy("event_id")
+
+    return _drain_events(spark, sf_dir, build, "append").orderBy("event_id")
 
 
 def q_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2968,10 +2892,8 @@ def q_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode AvailableNow drain discipline as q_streaming_time_series;
     the DuckDB twin materializes the two bucket starts per event with a
     UNION ALL, so the hash match proves the slide assignment itself."""
-    raw = _stream_events(spark, sf_dir)
-    with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
-        ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
-        agg = (
+    def build(ev: DataFrame) -> DataFrame:
+        return (
             ev.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "2 hours", "1 hour"))
             .agg(
@@ -2991,10 +2913,8 @@ def q_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        _STREAM_SEQ[0] += 1
-        name = f"stream_sliding_{_STREAM_SEQ[0]}"
-        out = run_available_now_to_memory(agg, spark, name, output_mode="complete")
-    return out.orderBy("window_start")
+
+    return _drain_events(spark, sf_dir, build, "complete").orderBy("window_start")
 
 
 def q_ann_search_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3114,7 +3034,7 @@ def q_streaming_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="upsert_ckpt_")
     try:
         ev_batch.repartitionByRange(4, "ts").write.mode("overwrite").parquet(stage)
-        with _session_tz(spark, "UTC"), _stateful_stream_partitions(spark):
+        with scoped_conf(spark, "spark.sql.session.timeZone", "UTC"):
             src = (
                 spark.readStream.schema(ev_batch.schema)
                 .option("maxFilesPerTrigger", 1)
@@ -3145,7 +3065,7 @@ def q_streaming_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Skipping the runtime dup-guard removes 2 driver actions
             # (guard job + persist) per micro-batch — measured ~40 % of
             # this query's 5-batch drain at sf0.1 (r14).
-            q = streaming_pipeline.run_update_sink_to_parquet(
+            q = run_update_sink_to_parquet(
                 agg,
                 out,
                 ckpt,
@@ -3153,13 +3073,7 @@ def q_streaming_update_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 available_now=True,
                 keys_proven_unique=True,
             )
-            try:
-                finished = q.awaitTermination(300)
-            finally:
-                if q.isActive:
-                    q.stop()
-            if not finished:
-                raise TimeoutError("update-upsert drain did not finish")
+            await_drain(q)
         return (
             spark.read.parquet(out)
             .select("bucket", "event_type", "cnt")

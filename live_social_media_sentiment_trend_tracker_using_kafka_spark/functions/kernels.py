@@ -1,18 +1,17 @@
 """Arrow-vectorized kernels for per-row signature math.
 
-The MinHash/SimHash/winnowing/SRP signature computations are small dense
+The winnowing/SRP signature and cosine computations are small dense
 integer/float kernels over short arrays. The pure-Catalyst higher-order
-function (HOF) twins (dedup.simhash_col, fingerprint.winnow_col,
-similarity.signature_col) are correct and oracle-checkable, but HOF lambdas
-evaluate interpreted (outside whole-stage codegen) at ~1 ms/doc — measured
-5-10 s per 5k docs at sf0.1. These kernels compute the SAME values through
+function (HOF) twins (fingerprint.winnow_col, similarity.signature_col)
+are correct and oracle-checkable, but HOF lambdas evaluate interpreted
+(outside whole-stage codegen) at ~1 ms/doc — measured 5-10 s per 5k docs
+at sf0.1. These kernels compute the SAME values through
 ``@pandas_udf`` (Arrow batches, numpy vectorization) at ~10-100× the
 throughput — the documented fast path when built-ins can't express the
 computation efficiently.
 
 Parity contract (unit-tested, tests/test_kernels.py):
 
-- ``simhash_from_hashes``  == dedup.simhash_col      (exact: integer votes)
 - ``winnow_from_norm``     == fingerprint.winnow_col  (exact: Horner mod-M
   rolling hashes and window minima are integer math; only the set ORDER
   differs — Catalyst keeps first-occurrence, numpy sorts — callers explode)
@@ -33,9 +32,6 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 from .fingerprint import HASH_BASE, HASH_MOD
-
-_SHIFTS = np.arange(63, dtype=np.int64)
-_WEIGHTS = (np.int64(1) << _SHIFTS).astype(np.int64)
 
 # pandas_udf parses its DDL return type against the ACTIVE session, so every
 # kernel is built lazily (first use, memoized) — a module-level decorator
@@ -94,51 +90,6 @@ def _dim_guard(mask: np.ndarray, got: int, expected: int, what: str) -> None:
             f"{what}: batch rows have dim {got}, expected {expected} — "
             "check the configured dim/query/codebook"
         )
-
-
-def simhash_udf():
-    """SimHash (bigint) from a per-doc array of signed-64 token hashes.
-
-    bit_i = majority over tokens of bit_i(hash); exact integer parity with
-    ``dedup.simhash_col`` (arithmetic >> matches Spark's shiftright on
-    negative hashes). Vectorized per batch: one flat (total_tokens, 63) bit
-    matrix, per-doc vote reduction via ``np.add.reduceat``.
-    """
-    if "simhash" in _CACHE:
-        return _CACHE["simhash"]
-
-    # The (tokens, 63) vote matrix is the only transient that scales with
-    # BATCH token volume, not row count — cap it: at most ~2M hashes per
-    # slice (~1 GB of int64 intermediates) regardless of how long the
-    # batch's documents are. Rows never split across slices, so the
-    # per-row reduction is unchanged.
-    _MAX_FLAT = 2_000_000
-
-    @pandas_udf("long")
-    def simhash_from_hashes(hashes: pd.Series) -> pd.Series:
-        # null token arrays hash like empty ones (simhash 0) instead of
-        # crashing the batch — parity with the null-tolerant Catalyst twin
-        lengths = hashes.map(lambda h: 0 if h is None else len(h)).to_numpy(dtype=np.int64)
-        out = np.zeros(len(hashes), dtype=np.int64)
-        ne_idx = np.flatnonzero(lengths > 0)
-        start = 0
-        while start < ne_idx.size:
-            stop, tok = start, 0
-            while stop < ne_idx.size and (tok == 0 or tok + lengths[ne_idx[stop]] <= _MAX_FLAT):
-                tok += lengths[ne_idx[stop]]
-                stop += 1
-            rows = ne_idx[start:stop]
-            flat = np.concatenate([np.asarray(hashes.iloc[i], dtype=np.int64) for i in rows])
-            # (slice_tokens, 63): +1 vote for a set bit, -1 for clear.
-            votes_per_tok = (((flat[:, None] >> _SHIFTS) & 1) * 2 - 1).astype(np.int32)
-            offsets = np.concatenate(([0], np.cumsum(lengths[rows])[:-1]))
-            votes = np.add.reduceat(votes_per_tok, offsets, axis=0)
-            out[rows] = ((votes > 0) * _WEIGHTS).sum(axis=1)
-            start = stop
-        return pd.Series(out)
-
-    _CACHE["simhash"] = simhash_from_hashes
-    return simhash_from_hashes
 
 
 def _winnow_one(s: str, k: int, window: int, pow_mods: np.ndarray) -> np.ndarray:

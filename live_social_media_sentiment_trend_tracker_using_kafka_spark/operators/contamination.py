@@ -148,7 +148,6 @@ def build_bloom_words(
     text_col: str = "text",
     n: int = 5,
     fpp: float = 0.01,
-    n_grams_hint: int | None = None,
 ) -> tuple[list[int], int, int]:
     """Fit a Bloom filter over the benchmark's distinct word n-grams.
 
@@ -166,8 +165,7 @@ def build_bloom_words(
         benchmark.select(F.explode(word_shingles_col(F.col(text_col), n)).alias("gram"))
         .distinct()
     )
-    n_items = n_grams_hint if n_grams_hint is not None else grams.count()
-    m, k = bloom_parameters(n_items, fpp)
+    m, k = bloom_parameters(grams.count(), fpp)
     packed = (
         grams.select(F.explode(_gram_positions(F.col("gram"), m, k)).alias("pos"))
         .select(

@@ -303,7 +303,6 @@ def minhash_near_duplicates(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    reuse_signatures: bool = True,
     shingle_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup: candidates → exact Jaccard verify.
@@ -312,15 +311,14 @@ def minhash_near_duplicates(
     deterministically. The exact-Jaccard join touches only candidate pairs.
 
     The shingle table feeds three plan branches (banding, verify-left,
-    verify-right); ``reuse_signatures`` persists it (memory-and-disk, via
-    the shared canonical ``shingle_table``) so the tokenize/shingle
-    computation runs once per row instead of three times — at corpus scale
-    this is the difference between one and three full text passes — and is
+    verify-right), so it is persisted (memory-and-disk, via the shared
+    canonical ``shingle_table``): the tokenize/shingle computation runs
+    once per row instead of three times — at corpus scale this is the
+    difference between one and three full text passes — and is
     substituted into any OTHER shingle consumer in the same session (exact
     prefix-filter join, cleaning chains). The MinHash aggregate itself is
     computed off the cached shingles in a single branch (banding), so it
-    needs no persist of its own. Callers doing their own checkpointing can
-    pass False.
+    needs no persist of its own.
 
     ``shingle_corpus``: a SUPERSET corpus whose canonical shingle table
     should be (re)used — the table is restricted to ``df``'s ids by
@@ -333,7 +331,6 @@ def minhash_near_duplicates(
         text_col,
         id_col,
         n,
-        persist=reuse_signatures,
     )
     if shingle_corpus is not None:
         base = base.join(df.select(id_col), id_col, "left_semi")
@@ -494,17 +491,14 @@ def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    arrow: bool = False,
 ) -> DataFrame:
     """(id, simhash) signature table; token-less docs excluded.
 
-    Default is the pure-Catalyst vote (``simhash_col``): measured FASTER than
-    the Arrow kernel once the input is properly parallel (``fan_out``) —
-    1.4 s vs 2.8 s full-pipeline at sf0.1/local[32] — because the kernel
-    pays an Arrow boundary without enough per-row work to amortize it.
-    ``arrow=True`` switches to functions/kernels.simhash_udf (bit-exact
-    parity unit-tested); prefer it only when profiling shows the vote
-    dominating, e.g. very long documents (>>1k tokens).
+    The vote is pure Catalyst (``simhash_col``): measured FASTER than an
+    Arrow pandas-UDF kernel once the input is properly parallel
+    (``fan_out``) — 1.4 s vs 2.8 s full-pipeline at sf0.1/local[32] —
+    because the kernel pays an Arrow boundary without enough per-row work
+    to amortize it.
     """
     from .skew import fan_out
 
@@ -523,15 +517,6 @@ def simhash_signatures(
             )
         ).alias("__tk"),
     )
-    if arrow:
-        from ..functions.kernels import simhash_udf
-
-        return toked.select(
-            id_col,
-            simhash_udf()(
-                F.transform(F.col("__tk"), lambda t: F.xxhash64(t))
-            ).alias("simhash"),
-        )
     return toked.select(
         F.col(id_col), simhash_from_tokens_col(F.col("__tk")).alias("simhash")
     )
@@ -543,8 +528,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 6,
-    arrow: bool = False,
-    reuse_signatures: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ max_hamming.
 
@@ -552,13 +535,11 @@ def simhash_near_duplicates(
     per-row signatures; token-less (empty/punctuation-only) docs are
     excluded — they have no content to be "near" anything.
 
-    ``reuse_signatures`` persists the (id, simhash) table — 16 bytes/doc —
-    because the banding self-join consumes it on both sides; without it the
-    full text→signature pass runs twice (per-side) at corpus scale.
+    The (id, simhash) table — 16 bytes/doc — is persisted because the
+    banding self-join consumes it on both sides; without it the full
+    text→signature pass runs twice (per-side) at corpus scale.
     """
-    sh = simhash_signatures(df, text_col, id_col, arrow)
-    if reuse_signatures:
-        sh = tracked_persist(sh)
+    sh = tracked_persist(simhash_signatures(df, text_col, id_col))
     return (
         simhash_candidate_pairs(sh, id_col, max_hamming, blocks)
         .filter(F.col("hamming") <= max_hamming)

@@ -102,9 +102,9 @@ def _local_media_df(spark, rows: list[tuple]) -> DataFrame:
     # shape) the non-Arrow fallback both re-introduces the pickled-RDD
     # overhead this path exists to remove AND rejects the nullable-Int32
     # NA cells outright (r13 plain-session re-drive).
-    from ..session import forced_arrow_conversion
+    from ..session import ARROW_CONF, scoped_conf
 
-    with forced_arrow_conversion(spark):
+    with scoped_conf(spark, ARROW_CONF, "true"):
         flat = spark.createDataFrame(pdf, schema=flat_schema)
     return flat.select(
         "media_id",

@@ -92,7 +92,7 @@ def jaccard_similarity_join(
     ``reuse_index=True`` persists the sorted-shingle table so the prefix
     branch and both verify sides share one tokenization pass; pass False
     when managing caching/checkpointing externally (the cache lives until
-    the session evicts it — same contract as minhash's reuse_signatures).
+    the session evicts it).
 
     ``order_corpus``: a SUPERSET corpus to index (e.g. the unfiltered
     documents table); the index is then restricted to ``df``'s ids by

@@ -18,6 +18,7 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
 
 
 def build_session(
@@ -41,7 +42,7 @@ def build_session(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        ARROW_CONF: "true",
         # Session-local timezone pinned to UTC so timestamp semantics match
         # the DuckDB oracle regardless of host timezone. (events.ts itself
         # reads as TIMESTAMP_NTZ on Spark >= 4.1 — timezone-free — but other
@@ -62,33 +63,22 @@ def local_test_session(cpus: int | None = None) -> SparkSession:
 
 
 @contextmanager
-def forced_arrow_conversion(spark: SparkSession):
-    """Scope ``spark.sql.execution.arrow.pyspark.enabled=true`` around a
-    pandas→DataFrame conversion, restoring the caller's value afterwards.
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the ``with`` body, then restore the
+    caller's value — or unset the key if the caller never set it.
 
-    The Arrow local-relation fast path (``arrow_local_df``) only engages
-    when the SESSION has Arrow enabled — and the external driver runs a
-    PLAIN session without it. On such a session ``createDataFrame(pdf)``
-    silently falls back to the pickled-RDD path (the exact fixed overhead
-    the r13 change removed) and, worse, the fallback's row verifier
-    rejects pandas nullable-int NA cells ("IntegerType() can not accept
-    object nan") — a session-conf dependence caught by the plain-session
-    r13 re-drive. Forcing the conf for just the conversion makes the
-    local-table plan (LocalTableScan, no Python tasks) a property of the
-    CODE, not of whoever built the session."""
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, "true")
+    Library code runs on caller-supplied (possibly foreign) sessions and
+    must not leak conf changes into them; this is the one way the package
+    and the driver entry scope a conf."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        if old is None:
+        if prior is None:
             spark.conf.unset(key)
         else:
-            spark.conf.set(key, old)
+            spark.conf.set(key, prior)
 
 
 def arrow_local_df(spark: SparkSession, columns: dict, schema):
@@ -100,12 +90,19 @@ def arrow_local_df(spark: SparkSession, columns: dict, schema):
     48-row table at local[32] — fixed overhead paid by every query that
     touches the frame, e.g. as a broadcast side). Routing the same values
     through a pandas DataFrame takes the Arrow local-relation path: no
-    Python tasks at action time — forced on regardless of session conf
-    via ``forced_arrow_conversion`` (the external driver's session does
-    not enable Arrow). ``columns`` maps column name → sequence of
-    values; ``schema`` is the target StructType (or DDL string).
+    Python tasks at action time. ``columns`` maps column name → sequence
+    of values; ``schema`` is the target StructType (or DDL string).
+
+    Arrow is forced on for the conversion: that path only engages when the
+    SESSION has Arrow enabled, and a plain session does not. There
+    ``createDataFrame(pdf)`` silently falls back to the pickled-RDD path
+    (the exact fixed overhead above) and, worse, the fallback's row
+    verifier rejects pandas nullable-int NA cells ("IntegerType() can not
+    accept object nan") — so the local-table plan (LocalTableScan, no
+    Python tasks) is a property of the CODE, not of whoever built the
+    session.
     """
     import pandas as pd
 
-    with forced_arrow_conversion(spark):
+    with scoped_conf(spark, ARROW_CONF, "true"):
         return spark.createDataFrame(pd.DataFrame(columns), schema=schema)

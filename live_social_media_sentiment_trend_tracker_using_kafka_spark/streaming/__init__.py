@@ -2,11 +2,11 @@
 checkpointed sinks, plus monitoring/shutdown."""
 
 from .pipeline import (
+    await_drain,
     enriched_file_stream,
     enriched_kafka_stream,
     fan_out_sinks,
     interval_join_streams,
-    interval_left_join_streams,
     run_available_now_to_memory,
     run_update_sink_to_parquet,
     session_window_stats,
@@ -21,13 +21,13 @@ from .monitor import monitor_streams, stop_all_streams
 from .stateful import dedup_stream, running_user_stats
 
 __all__ = [
+    "await_drain",
     "dedup_stream",
     "running_user_stats",
     "enriched_file_stream",
     "enriched_kafka_stream",
     "fan_out_sinks",
     "interval_join_streams",
-    "interval_left_join_streams",
     "run_available_now_to_memory",
     "run_update_sink_to_parquet",
     "session_window_stats",

@@ -18,8 +18,24 @@ Reference parity (file:line into /root/reference):
   (dashboard/streamlit_app.py:70,255).
 - Fan-out: the reference starts two queries from one lineage, so the whole
   chain (VADER UDF included) runs twice per micro-batch (SURVEY.md §3.2).
-  ``fan_out_sinks`` runs ONE query and multiplexes each micro-batch to all
-  sinks from a persisted DataFrame.
+  ``fan_out_sinks`` runs ONE query and hands each micro-batch to all sinks.
+
+Start-and-drain contract — every streaming query in the package starts and
+drains here:
+
+- One start helper, ``_start``: the only trigger choice (AvailableNow or a
+  processing-time interval) and the only ``.start()``.
+- A bounded (AvailableNow) start scopes ``spark.sql.shuffle.partitions`` to
+  ``max(defaultParallelism // 4, 8)`` around ``.start()`` only, then
+  restores the caller's value; an unbounded start keeps the caller's value.
+  The state-store partition count is fixed when a checkpoint is first
+  started: a query restarted from an existing checkpoint keeps the count it
+  started with, whatever the session says now.
+- One foreachBatch rule, ``_each_batch``: a micro-batch is persisted only
+  when more than one consumer reads it (``fan_out_sinks`` with two or more
+  writers, the upsert sink's dup-guard + write).
+- One drain, ``await_drain``: wait, stop, and raise ``TimeoutError`` when a
+  bounded query did not finish.
 
 Scale notes: windowed aggregates are incremental — state store holds only
 open windows (bounded by the watermark), each micro-batch shuffles only its
@@ -30,13 +46,15 @@ spark.sql.shuffle.partitions, and sinks write partitioned parquet.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..operators.enrich import enrich_posts
+from ..session import scoped_conf
 from ..sources.readers import decode_json_value, kafka_stream, posts_file_stream
 
 DEFAULT_WATERMARK = "10 minutes"
@@ -194,8 +212,9 @@ def interval_join_streams(
     max_delay: str = "10 minutes",
     watermark: str = DEFAULT_WATERMARK,
     prefix: str = "r_",
+    how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream inner join: right rows within ``(left_ts, left_ts +
+    """Stream-stream interval join: right rows within ``(left_ts, left_ts +
     max_delay]`` per key (e.g. "purchase within 10 minutes of a view").
 
     Both sides are watermarked and the join carries an explicit time-range
@@ -204,6 +223,14 @@ def interval_join_streams(
     instead of growing forever. Right columns come back ``prefix``-renamed
     so self-joins don't collide. Same operator works in batch (watermark is
     a no-op there) — tests assert streaming == batch.
+
+    ``how="left_outer"`` keeps every left row: matched rows emit as they
+    join, and a left row with no match emits null-padded ONCE its join
+    window falls behind the watermark (Spark buffers it until then). The
+    last ``watermark + max_delay`` of left rows at stream end remain open
+    (their no-match verdict isn't final), so an AvailableNow drain emits
+    unmatched rows only for the CLOSED region — batch-parity checks must
+    clip both sides to it (see q_streaming_view_purchase_left_join).
     """
     r = right.select(
         F.col(key_col).alias(f"{prefix}{key_col}"),
@@ -224,12 +251,78 @@ def interval_join_streams(
             <= F.col(left_ts) + F.expr(f"INTERVAL {max_delay}")
         )
     )
-    return lw.join(rw, cond).drop(f"{prefix}{key_col}")
+    return lw.join(rw, cond, how).drop(f"{prefix}{key_col}")
 
 
 # --------------------------------------------------------------------------
 # Sinks
 # --------------------------------------------------------------------------
+
+def _start(
+    writer: DataStreamWriter, trigger: str | None, available_now: bool
+) -> StreamingQuery:
+    """Start a streaming query — the package's only trigger choice and
+    ``.start()``.
+
+    ``available_now`` drains the data present at start and stops;
+    otherwise ``trigger`` is a processing-time interval (None: Spark's
+    default, the next micro-batch as soon as the previous one ends).
+
+    A bounded start runs with ``spark.sql.shuffle.partitions`` scoped to
+    ``max(defaultParallelism // 4, 8)``. Each stateful shuffle partition
+    materializes its OWN state-store instance per micro-batch, so for a
+    bounded drain the store setup/commit overhead dwarfs the work when
+    partitions track CPU count instead of state volume (stream-stream
+    interval join at sf0.1: 15.0 s at 32 partitions, 3.2 s at 8). Spark
+    copies the session conf into the query (and its checkpoint's offset
+    metadata) inside ``.start()``, so the scope covers only that call and
+    the caller's value is back as soon as it returns. An unbounded start
+    keeps the caller's value."""
+    if not available_now:
+        return (writer.trigger(processingTime=trigger) if trigger else writer).start()
+    spark = writer._spark
+    target = str(max(spark.sparkContext.defaultParallelism // 4, 8))
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", target):
+        return writer.trigger(availableNow=True).start()
+
+
+def _each_batch(
+    consumers: list[Callable[[DataFrame], None]],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function handing every micro-batch to ``consumers`` in
+    order. The batch is persisted only when more than one consumer reads
+    it: one consumer executes the upstream pipeline once anyway, and the
+    persist would only add a cache write and an unpersist per trigger."""
+    shared = len(consumers) > 1
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        if shared:
+            batch.persist()
+        try:
+            for consume in consumers:
+                consume(batch)
+        finally:
+            if shared:
+                batch.unpersist()
+
+    return handle
+
+
+def await_drain(q: StreamingQuery, timeout_sec: float = 300) -> None:
+    """Wait for a bounded (AvailableNow) query to finish; a query still
+    running after ``timeout_sec`` is stopped and ``TimeoutError`` raised —
+    reading its sink after a forced stop would silently hand back a
+    partial (or empty) result. A failed query re-raises its error."""
+    try:
+        finished = q.awaitTermination(timeout_sec)
+    finally:
+        if q.isActive:
+            q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"streaming drain {q.name or q.id} did not finish within {timeout_sec}s"
+        )
+
 
 def start_console_sink(
     df: DataFrame,
@@ -238,14 +331,13 @@ def start_console_sink(
     output_mode: str = "append",
 ) -> StreamingQuery:
     """Debug console sink (reference: consumer/spark_streaming_job.py:139-147)."""
-    return (
+    writer = (
         df.writeStream.outputMode(output_mode)
         .format("console")
         .option("numRows", str(num_rows))
         .option("truncate", "false")
-        .trigger(processingTime=trigger)
-        .start()
     )
+    return _start(writer, trigger, available_now=False)
 
 
 def start_file_sink(
@@ -273,11 +365,7 @@ def start_file_sink(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    return writer.start()
+    return _start(writer, trigger, available_now)
 
 
 def fan_out_sinks(
@@ -287,58 +375,33 @@ def fan_out_sinks(
     trigger: str | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """ONE streaming query, many sinks — each micro-batch is persisted once
-    and every writer consumes the cached result.
+    """ONE streaming query, many sinks — every writer consumes each
+    micro-batch, persisted once when there is more than one writer.
 
     Fixes the reference's double-evaluation: it starts two queries from one
     lineage so the whole chain (sentiment UDF included) runs once per sink
     (consumer/spark_streaming_job.py:139-161; SURVEY.md §3.2/§4).
     """
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            for writer in batch_writers.values():
-                writer(batch)
-        finally:
-            batch.unpersist()
-
-    writer = df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    return writer.start()
+    writer = (
+        df.writeStream.foreachBatch(_each_batch(list(batch_writers.values())))
+        .option("checkpointLocation", checkpoint)
+    )
+    return _start(writer, trigger, available_now)
 
 
 def run_available_now_to_memory(
     df: DataFrame,
     spark: SparkSession,
-    name: str,
     output_mode: str = "append",
     timeout_sec: float = 300,
 ) -> DataFrame:
     """Drain a streaming DF deterministically (Trigger.AvailableNow) into an
     in-memory table and return it as a batch DataFrame. Test/driver harness
-    utility — processes exactly the data available at start, then stops."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        # Returning the memory table after a forced stop would silently hand
-        # back a partial (or empty) result.
-        raise TimeoutError(
-            f"AvailableNow drain of '{name}' did not finish within {timeout_sec}s"
-        )
+    utility — processes exactly the data available at start, then stops.
+    The table gets a fresh name per call, so drains never collide."""
+    name = f"drain_{uuid.uuid4().hex}"
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    await_drain(_start(writer, None, available_now=True), timeout_sec)
     return spark.table(name)
 
 
@@ -370,10 +433,9 @@ def run_update_sink_to_parquet(
     key tuples mean the key is partial, and the query is failed loudly
     instead of silently losing data.
 
-    ``keys_proven_unique=True`` skips the per-batch runtime guard (and the
-    persist that exists only to share the batch between the guard and the
-    write — with one consumer the write executes the pipeline exactly once
-    unpersisted). Pass it ONLY when key_cols is provably a bijective
+    ``keys_proven_unique=True`` skips the per-batch runtime guard (and with
+    it the persist, since the write is then the batch's only consumer).
+    Pass it ONLY when key_cols is provably a bijective
     rendering of the aggregate's full grouping key — update mode emits each
     group at most once per micro-batch by construction, so group-key
     bijectivity implies key-tuple uniqueness. The guard + persist are two
@@ -386,92 +448,30 @@ def run_update_sink_to_parquet(
     batches than skipping the finalizer trigger's empty write saves.)
     """
 
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        if keys_proven_unique:
-            (
-                batch.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*key_cols)
-                .parquet(path)
+    def dup_guard(batch: DataFrame) -> None:
+        dup = batch.groupBy(*key_cols).count().filter(F.col("count") > 1)
+        if dup.limit(1).count() > 0:  # batch is tiny (aggregated, changed keys only)
+            raise ValueError(
+                f"key_cols {key_cols} do not uniquely key the aggregate "
+                "output — partition overwrite would drop sibling group rows; "
+                "pass the aggregate's full grouping key"
             )
-            return
-        # two actions consume the micro-batch (the dup-key guard, then the
-        # write) — persist so the upstream pipeline runs once per trigger,
-        # not twice (same convention as fan_out_sinks above)
-        batch.persist()
-        try:
-            dup = batch.groupBy(*key_cols).count().filter(F.col("count") > 1)
-            if dup.limit(1).count() > 0:  # batch is tiny (aggregated, changed keys only)
-                raise ValueError(
-                    f"key_cols {key_cols} do not uniquely key the aggregate "
-                    "output — partition overwrite would drop sibling group rows; "
-                    "pass the aggregate's full grouping key"
-                )
-            (
-                batch.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*key_cols)
-                .parquet(path)
-            )
-        finally:
-            batch.unpersist()
 
+    def write(batch: DataFrame) -> None:
+        (
+            batch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*key_cols)
+            .parquet(path)
+        )
+
+    consumers = [write] if keys_proven_unique else [dup_guard, write]
     writer = (
         agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
+        .foreachBatch(_each_batch(consumers))
         .option("checkpointLocation", checkpoint)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    return writer.start()
-
-
-def interval_left_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    left_ts: str = "event_ts",
-    right_ts: str = "event_ts",
-    max_delay: str = "10 minutes",
-    watermark: str = DEFAULT_WATERMARK,
-    prefix: str = "r_",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every left row survives;
-    right rows within ``(left_ts, left_ts + max_delay]`` per key attach,
-    and a left row with no match emits null-padded ONCE its join window
-    falls behind the watermark (Spark buffers it until then — unmatched
-    output is inherently watermark-delayed; matched rows emit as they
-    join).
-
-    State stays bounded exactly as in the inner variant: watermark + the
-    explicit time-range constraint let Spark evict both buffers. The last
-    ``watermark + max_delay`` of left rows at stream end remain open
-    (their no-match verdict isn't final), so an AvailableNow drain emits
-    unmatched rows only for the CLOSED region — batch-parity checks must
-    clip both sides to it (see q_streaming_view_purchase_left_join).
-    """
-    r = right.select(
-        F.col(key_col).alias(f"{prefix}{key_col}"),
-        F.col(right_ts).alias(f"{prefix}{right_ts}"),
-        *[
-            F.col(c).alias(f"{prefix}{c}")
-            for c in right.columns
-            if c not in (key_col, right_ts)
-        ],
-    )
-    lw = left.withWatermark(left_ts, watermark)
-    rw = r.withWatermark(f"{prefix}{right_ts}", watermark)
-    cond = (
-        (F.col(key_col) == F.col(f"{prefix}{key_col}"))
-        & (F.col(f"{prefix}{right_ts}") > F.col(left_ts))
-        & (
-            F.col(f"{prefix}{right_ts}")
-            <= F.col(left_ts) + F.expr(f"INTERVAL {max_delay}")
-        )
-    )
-    return lw.join(rw, cond, "left_outer").drop(f"{prefix}{key_col}")
+    return _start(writer, trigger, available_now)
 
 
 def stream_static_enrich(

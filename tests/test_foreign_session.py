@@ -177,7 +177,7 @@ print("TZOK", n)
 
 def test_media_local_tables_survive_plain_session_conf(spark):
     """r13: the Arrow local-relation conversion must be FORCED per call
-    (session.forced_arrow_conversion), not inherited from session conf —
+    (session.scoped_conf around the conversion), not inherited from session conf —
     the external driver runs a PLAIN session without Arrow enabled, where
     the non-Arrow fallback both re-introduces the pickled-RDD Python
     tasks the r13 local-table change removed and rejects nullable-Int32

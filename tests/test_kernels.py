@@ -12,31 +12,11 @@ from pyspark.sql import functions as F
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions import fingerprint as fpmod
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions.kernels import (
     make_winnow_udf,
-    simhash_udf,
 )
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import dedup, similarity
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import similarity
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.sources.readers import table
 
 from conftest import SF_SMOKE
-
-
-def test_simhash_kernel_matches_catalyst(spark):
-    docs = table(spark, "documents", SF_SMOKE)
-    hashes = F.transform(dedup.word_tokens_col(F.col("text")), lambda t: F.xxhash64(t))
-    both = docs.select(
-        "doc_id",
-        dedup.simhash_col(F.col("text")).alias("catalyst"),
-        simhash_udf()(hashes).alias("arrow"),
-    )
-    bad = both.filter(F.col("catalyst") != F.col("arrow")).count()
-    assert bad == 0
-
-
-def test_simhash_signatures_paths_agree(spark):
-    docs = table(spark, "documents", SF_SMOKE)
-    a = dedup.simhash_signatures(docs, arrow=True).orderBy("doc_id").collect()
-    c = dedup.simhash_signatures(docs, arrow=False).orderBy("doc_id").collect()
-    assert [(r.doc_id, r.simhash) for r in a] == [(r.doc_id, r.simhash) for r in c]
 
 
 def test_winnow_kernel_matches_catalyst(spark):
@@ -92,7 +72,6 @@ def test_kernels_tolerate_null_and_ragged_rows(spark):
         make_query_cosine_udf,
         make_srp_buckets_udf,
         pair_cosine_udf,
-        simhash_udf,
     )
 
     q = np.ones(4)
@@ -122,12 +101,6 @@ def test_kernels_tolerate_null_and_ragged_rows(spark):
     assert bks[1] == [0] and bks[2] == [0]  # zero-vector bucket
     assert bks[3] == [7]  # all-positive dots
 
-    hdf = spark.createDataFrame(
-        [(0, [1, 2, 3]), (1, None), (2, [])], "doc_id int, h array<long>"
-    ).coalesce(1)
-    sh = {r.doc_id: r.s for r in hdf.select("doc_id", simhash_udf()(F.col("h")).alias("s")).collect()}
-    assert sh[1] == 0 and sh[2] == 0
-
 
 def test_stack_vectors_modal_dim_survives_bad_leading_row(spark):
     import numpy as np
@@ -156,27 +129,3 @@ def test_dim_guard_raises_on_misconfigured_dim(spark):
     # all-null batch still falls back to the null semantics (all zeros)
     out = udf_fn(pd.Series([None, None], dtype=object))
     assert out.tolist() == [0.0, 0.0]
-
-
-def test_simhash_kernel_chunking_matches_unchunked(spark):
-    import numpy as np
-    import pandas as pd
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions import kernels
-
-    rng = np.random.RandomState(7)
-    rows = [rng.randint(-(2**62), 2**62, size=rng.randint(1, 50)).tolist() for _ in range(40)]
-    rows.insert(3, None)
-    fn = kernels.simhash_udf().func
-    full = fn(pd.Series(rows, dtype=object)).tolist()
-    old_cap = None
-    # force multi-slice execution by lowering the cap through the closure
-    import live_social_media_sentiment_trend_tracker_using_kafka_spark.functions.kernels as K
-    K._CACHE.pop("simhash", None)
-    src_max = 60  # tiny cap -> many slices
-    # rebuild with a small cap by monkeypatching the constant via closure:
-    # simplest honest check — recompute with the public kernel after cache
-    # clear and assert determinism, then per-row parity vs Catalyst is
-    # covered by the existing parity tests
-    fn2 = kernels.simhash_udf().func
-    again = fn2(pd.Series(rows, dtype=object)).tolist()
-    assert full == again

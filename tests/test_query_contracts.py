@@ -8,6 +8,8 @@ those queries emits contract columns (``found_by_lsh`` / ``in_exact_topk`` /
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 from conftest import SF_SMOKE
 from pyspark.sql import functions as F
@@ -330,6 +332,15 @@ def test_entry_defines_no_module_level_memo_dicts():
         n for n, v in vars(entrymod).items()
         if isinstance(v, dict) and n.endswith(("_MEMO", "_CACHE"))
     ]
+    assert not bad, bad
+
+
+def test_entry_starts_no_stream_and_sets_no_conf():
+    """Streaming queries start and drain through streaming/pipeline.py, and
+    conf changes go through session.scoped_conf: none of the primitives may
+    regrow in the registry module."""
+    src = Path(entrymod.__file__).read_text()
+    bad = [t for t in ("writeStream", "awaitTermination", ".trigger(", "conf.set(") if t in src]
     assert not bad, bad
 
 

@@ -47,7 +47,7 @@ def _stream(spark, path):
 
 def test_dedup_stream_drops_cross_batch_duplicates(spark, two_batches):
     dd = dedup_stream(_stream(spark, two_batches), ["user"], ts_col="event_ts")
-    out = run_available_now_to_memory(dd, spark, "t_dedup_state")
+    out = run_available_now_to_memory(dd, spark)
     users = sorted(r.user for r in out.select("user").collect())
     # u1 appears 3 times across both batches -> kept once
     assert users == ["u1", "u2", "u3"]
@@ -55,7 +55,7 @@ def test_dedup_stream_drops_cross_batch_duplicates(spark, two_batches):
 
 def test_running_user_stats_accumulates_across_batches(spark, two_batches):
     stats = running_user_stats(_stream(spark, two_batches))
-    out = run_available_now_to_memory(stats, spark, "t_user_state", output_mode="update")
+    out = run_available_now_to_memory(stats, spark, output_mode="update")
     # update mode memory sink appends one row per key per batch; the LAST row
     # per user carries the cumulative state
     rows = out.collect()

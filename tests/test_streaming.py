@@ -56,7 +56,7 @@ def posts_dir(tmp_path):
 
 def test_enriched_stream_matches_batch(spark, posts_dir):
     stream = enriched_file_stream(spark, posts_dir)
-    got = run_available_now_to_memory(stream, spark, "t_enriched").drop("processing_timestamp")
+    got = run_available_now_to_memory(stream, spark).drop("processing_timestamp")
     want = enrich_posts(read_posts_json(spark, posts_dir)).drop("processing_timestamp")
     key = lambda r: r["user"]
     got_rows = sorted(got.collect(), key=key)
@@ -76,7 +76,7 @@ def test_windowed_sentiment_counts_match_batch(spark, posts_dir):
     stream = windowed_sentiment_counts(
         enriched_file_stream(spark, posts_dir), window="1 minute"
     )
-    got = run_available_now_to_memory(stream, spark, "t_winsent", output_mode="complete")
+    got = run_available_now_to_memory(stream, spark, output_mode="complete")
     batch = enrich_posts(read_posts_json(spark, posts_dir))
     want = (
         batch.groupBy(F.window("event_ts", "1 minute"), "sentiment_label")
@@ -94,7 +94,7 @@ def test_windowed_platform_stats_sliding(spark, posts_dir):
         window="2 minutes",
         slide="1 minute",
     )
-    got = run_available_now_to_memory(stream, spark, "t_winplat", output_mode="complete")
+    got = run_available_now_to_memory(stream, spark, output_mode="complete")
     rows = got.collect()
     # sliding windows: each event lands in 2 windows
     total = sum(r["cnt"] for r in rows)
@@ -111,7 +111,7 @@ def test_session_window_stats_match_batch(spark, posts_dir):
     stream = session_window_stats(
         enriched_file_stream(spark, posts_dir, with_sentiment_udf=False), gap="1 minute"
     )
-    got = run_available_now_to_memory(stream, spark, "t_sess", output_mode="complete")
+    got = run_available_now_to_memory(stream, spark, output_mode="complete")
     batch = enrich_posts(read_posts_json(spark, posts_dir), with_sentiment_udf=False)
     want = (
         batch.groupBy(F.session_window("event_ts", "1 minute"), "user")
@@ -139,7 +139,7 @@ def test_session_window_merges_events_within_gap(spark, tmp_path):
     stream = session_window_stats(
         enriched_file_stream(spark, str(d), with_sentiment_udf=False), gap="1 minute"
     )
-    rows = run_available_now_to_memory(stream, spark, "t_sess2", output_mode="complete").collect()
+    rows = run_available_now_to_memory(stream, spark, output_mode="complete").collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["n_events"] == 2 and r["total_likes"] == 8.0
@@ -158,12 +158,49 @@ def test_fan_out_single_query_two_sinks(spark, posts_dir, tmp_path):
         checkpoint=str(tmp_path / "ckpt"),
         available_now=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.read.parquet(out_a)
     counts = spark.read.parquet(out_b).groupBy("platform").agg(F.sum("count").alias("n"))
     assert rows.count() == 4
     got = {r["platform"]: r["n"] for r in counts.collect()}
     assert got == {"Twitter": 2, "Reddit": 2}
+
+
+@pytest.mark.parametrize("n_writers, persisted", [(1, False), (2, True)])
+def test_fan_out_persists_only_shared_batches(spark, posts_dir, tmp_path, n_writers, persisted):
+    """A micro-batch is persisted only when more than one writer reads it:
+    one writer runs the upstream pipeline once anyway."""
+    seen = []
+    q = fan_out_sinks(
+        enriched_file_stream(spark, posts_dir, with_sentiment_udf=False),
+        {f"w{i}": lambda b: seen.append(b.storageLevel.useMemory) for i in range(n_writers)},
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    assert q.awaitTermination(120)
+    assert seen and all(v is persisted for v in seen), seen
+
+
+def test_available_now_start_scopes_state_partitions(spark, posts_dir, tmp_path):
+    """The AvailableNow partition rule lives in the library: a bounded
+    stateful drain runs max(defaultParallelism // 4, 8) state-store
+    partitions whatever the session says, and the session keeps its own
+    value."""
+    foreign = spark.newSession()
+    foreign.conf.set("spark.sql.shuffle.partitions", "64")
+    agg = windowed_sentiment_counts(
+        enriched_file_stream(foreign, posts_dir, with_sentiment_udf=False)
+    )
+    q = run_update_sink_to_parquet(
+        agg, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        key_cols=["window_start", "sentiment_label"],
+        available_now=True,
+    )
+    assert q.awaitTermination(120)
+    want = max(spark.sparkContext.defaultParallelism // 4, 8)
+    parts = {op["numShufflePartitions"] for p in q.recentProgress for op in p["stateOperators"]}
+    assert parts == {want}
+    assert foreign.conf.get("spark.sql.shuffle.partitions") == "64"
 
 
 def test_update_sink_upserts_across_micro_batches(spark, tmp_path):
@@ -274,7 +311,7 @@ def test_interval_join_streams_match_batch(spark, tmp_path):
     joined = interval_join_streams(
         mk(), mk(), key_col="platform", max_delay="2 minutes"
     )
-    got = run_available_now_to_memory(joined, spark, "t_ij")
+    got = run_available_now_to_memory(joined, spark)
     batch = enrich_posts(read_posts_json(spark, str(d)), with_sentiment_udf=False).select(
         "user", "platform", "event_ts"
     )
@@ -342,7 +379,7 @@ def test_end_to_end_dedup_window_upsert(spark, tmp_path):
 def test_available_now_timeout_raises(spark, posts_dir):
     stream = enriched_file_stream(spark, posts_dir, with_sentiment_udf=False)
     with pytest.raises(TimeoutError):
-        run_available_now_to_memory(stream, spark, "t_timeout", timeout_sec=0.05)
+        run_available_now_to_memory(stream, spark, timeout_sec=0.05)
 
 
 def test_stop_all_streams_idempotent(spark, posts_dir):
@@ -405,11 +442,9 @@ def test_streaming_sessions_append_mode_emits_watermark_closed_subset(spark):
     the ==watermark edge may land either side.
     """
     import __spark_entry__ as entrymod
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.session import scoped_conf
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.sources.readers import (
         normalize_ts,
-    )
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming.pipeline import (
-        run_available_now_to_memory,
     )
     from tests.conftest import SF_SMOKE
 
@@ -419,7 +454,7 @@ def test_streaming_sessions_append_mode_emits_watermark_closed_subset(spark):
         .option("pathGlobFilter", "events.parquet")
         .parquet(SF_SMOKE)
     )
-    with entrymod._session_tz(spark, "UTC"), entrymod._stateful_stream_partitions(spark):
+    with scoped_conf(spark, "spark.sql.session.timeZone", "UTC"):
         ev = normalize_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
         sess = (
             ev.withWatermark("ts", "48 hours")
@@ -432,9 +467,7 @@ def test_streaming_sessions_append_mode_emits_watermark_closed_subset(spark):
                 "n_events",
             )
         )
-        appended = run_available_now_to_memory(
-            sess, spark, "stream_sessions_append_test", output_mode="append"
-        ).collect()
+        appended = run_available_now_to_memory(sess, spark, output_mode="append").collect()
 
     # batch truth + the final watermark the drain ended on
     import datetime as dt
@@ -499,21 +532,17 @@ def test_interval_left_join_emits_unmatched_after_watermark(spark, tmp_path):
         rows, "user_id long, event_id long, event_type string, ts timestamp"
     ).coalesce(1).write.mode("overwrite").parquet(str(d / "ev"))
 
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming import (
-        interval_left_join_streams,
-    )
-
     schema = spark.read.parquet(str(d / "ev")).schema
     mk = lambda: spark.readStream.schema(schema).parquet(str(d / "ev"))
     views = mk().filter(F.col("event_type") == "view").select("user_id", "event_id", "ts")
     purch = mk().filter(F.col("event_type") == "purchase").select("user_id", "event_id", "ts")
-    joined = interval_left_join_streams(
+    joined = interval_join_streams(
         views, purch, key_col="user_id", left_ts="ts", right_ts="ts",
-        max_delay="30 minutes", watermark="10 minutes",
+        max_delay="30 minutes", watermark="10 minutes", how="left_outer",
     ).select("user_id", F.col("event_id").alias("view_event"),
              F.col("r_event_id").alias("purchase_event"))
     got = {r["view_event"]: r["purchase_event"]
-           for r in run_available_now_to_memory(joined, spark, "t_ilj").collect()}
+           for r in run_available_now_to_memory(joined, spark).collect()}
     assert got[10] == 11          # matched pair emitted
     assert got[20] is None        # closed unmatched view emitted null-padded
     assert 40 not in got          # open-tail view withheld (verdict not final)
@@ -543,7 +572,7 @@ def test_stream_static_enrich_matches_batch_and_broadcasts(spark, tmp_path):
     )
     got = sorted(
         (r["event_id"], r["v"])
-        for r in run_available_now_to_memory(enriched, spark, "t_sse").collect()
+        for r in run_available_now_to_memory(enriched, spark).collect()
     )
     assert got == [(1, 11.0), (2, 22.0), (3, 13.0)]
     # static side must plan as a broadcast join in the streaming plan
