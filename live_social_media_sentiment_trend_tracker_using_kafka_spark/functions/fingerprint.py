@@ -6,8 +6,9 @@ LLM-pipeline use is copy/containment detection that survives insertions and
 reordering better than whole-doc hashes: any shared substring of length
 ``k + window - 1`` chars guarantees at least one shared fingerprint.
 
-Pipeline (all one Catalyst projection — no Python, no shuffle until the
-consumer aggregates):
+Pipeline (one projection, no shuffle until the consumer aggregates; step 1
+runs in Catalyst, steps 2-3 in the Arrow kernel ``kernels.make_winnow_udf``,
+whose pure-Catalyst reference is ``winnow_col(kgram_hashes_col(...))``):
 
 1. normalize: lowercase, strip every non-alphanumeric char (MOSS-style, so
    whitespace/punctuation edits don't move fingerprints);
@@ -19,7 +20,7 @@ consumer aggregates):
 3. winnow: take the min hash of every ``window`` consecutive k-gram hashes,
    distinct — ~2/(window+1) of positions survive, a bounded-density sketch.
 
-Scale shape: per-row O(len·k) JVM work, output ~len·2/(window+1) bigints per
+Scale shape: per-row O(len·k) work, output ~len·2/(window+1) bigints per
 doc; the downstream inverted index (fingerprint -> docs) is one
 explode+groupBy — same shape as the shingle index in operators/simjoin.py.
 """
@@ -86,20 +87,19 @@ def winnow_col(hashes: Column, window: int = 8) -> Column:
     return F.transform(F.array(hashes), build)[0]
 
 
-def winnow_fps_col(text: Column, k: int = 8, window: int = 8, arrow: bool = True) -> Column:
+def winnow_fps_col(text: Column, k: int = 8, window: int = 8) -> Column:
     """Distinct winnowed fingerprints of raw text, as array<bigint>.
 
-    ``arrow=True`` (default) normalizes JVM-side and runs the rolling-hash +
-    window-min kernel Arrow-vectorized (functions/kernels.make_winnow_udf) —
-    measured ~10× over the interpreted-HOF twin, same values (parity
-    unit-tested; only intra-array order differs, and every consumer
-    explodes). ``arrow=False`` keeps the pure-Catalyst expression.
+    Normalizes JVM-side and runs the rolling-hash + window-min kernel
+    Arrow-vectorized (functions/kernels.make_winnow_udf) — measured ~10×
+    over the interpreted-HOF twin ``winnow_col(kgram_hashes_col(...))``,
+    which stays as the reference the kernel is parity-tested against
+    (same values; only intra-array order differs, and every consumer
+    explodes).
     """
-    if arrow:
-        from .kernels import make_winnow_udf
+    from .kernels import make_winnow_udf
 
-        return make_winnow_udf(k, window)(_normalize(text))
-    return winnow_col(kgram_hashes_col(text, k), window)
+    return make_winnow_udf(k, window)(_normalize(text))
 
 
 def fingerprint_table(
@@ -136,23 +136,11 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 8,
     window: int = 8,
-    arrow: bool = True,
 ) -> DataFrame:
     """Exploded fingerprint table (id, fingerprint) — one row per distinct
     winnowed hash per document, deterministically ordered. The natural
     input to an inverted fingerprint index for containment/plagiarism
-    detection. Rides the canonical shared ``fingerprint_table``;
-    ``arrow=False`` builds the pure-Catalyst twin inline (parity-test
-    path — not shared, not persisted)."""
-    if not arrow:
-        from ..operators.skew import fan_out
-
-        fps = winnow_fps_col(F.col(text_col), k, window, arrow=False)
-        return (
-            fan_out(df)
-            .select(F.col(id_col), F.explode(fps).alias("fingerprint"))
-            .orderBy(id_col, "fingerprint")
-        )
+    detection. Rides the canonical shared ``fingerprint_table``."""
     return fingerprint_table(df, text_col, id_col, k, window).orderBy(
         id_col, "fingerprint"
     )

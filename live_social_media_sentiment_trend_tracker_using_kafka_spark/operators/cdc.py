@@ -140,10 +140,9 @@ def snapshot_diff(
     new: DataFrame,
     key_cols: list[str],
     compare_cols: list[str],
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """Diff two snapshots of the same table on a key: classify every key
-    as added / removed / changed (/ unchanged) and carry both versions
+    that differs as added / removed / changed and carry both versions
     of the compared columns — the operator that DERIVES a changelog when
     no CDC stream exists (the inverse of latest_snapshot).
 
@@ -151,10 +150,9 @@ def snapshot_diff(
     broadcast assumption; snapshots are the SAME table at two times, so
     neither side is small). Change detection is null-safe per column
     (``<=>``), so NULL→value and value→NULL count as changes; unchanged
-    rows are dropped before any downstream shuffle unless
-    ``include_unchanged`` — at 100 TB the diff is typically ≪ the
-    snapshots, so filtering here keeps everything after the join
-    diff-sized.
+    rows are dropped before any downstream shuffle — at 100 TB the diff
+    is typically ≪ the snapshots, so filtering here keeps everything
+    after the join diff-sized.
 
     Precondition: ``key_cols`` must be non-null on both sides (the
     full-outer join matches keys with PLAIN equality, so a NULL key
@@ -182,7 +180,8 @@ def snapshot_diff(
         .when(~same, F.lit("changed"))
         .otherwise(F.lit("unchanged"))
     )
-    out = j.withColumn("diff_type", diff_type).drop("_in_old", "_in_new")
-    if not include_unchanged:
-        out = out.filter(F.col("diff_type") != "unchanged")
-    return out
+    return (
+        j.withColumn("diff_type", diff_type)
+        .drop("_in_old", "_in_new")
+        .filter(F.col("diff_type") != "unchanged")
+    )

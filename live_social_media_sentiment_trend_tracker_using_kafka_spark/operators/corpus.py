@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .dedup import word_grams_col, word_tokens_col
 from ..caching import tracked_persist
+from ..plans.hints import plan_sized_count
 
 
 def tfidf_top_terms(
@@ -32,7 +33,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     k: int = 3,
     round_digits: int = 6,
-    reuse_tf: bool = True,
 ) -> DataFrame:
     """Top-k tf·idf terms per document: (id, term, tf, df, tfidf).
 
@@ -47,10 +47,9 @@ def tfidf_top_terms(
     )
     # tf feeds three branches (df table, N, scores) — persist so the corpus
     # is tokenized once; tiny relative to the input (one row per doc-term).
-    # reuse_tf=False for callers managing caching externally.
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    if reuse_tf:
-        tf = tracked_persist(tf)
+    tf = tracked_persist(
+        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = tf.agg(F.countDistinct(id_col).alias("_n_docs"))  # stays in-plan
     scored = (
@@ -204,7 +203,6 @@ def unigram_logprob_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     round_digits: int = 6,
-    reuse_tokens: bool = True,
 ) -> DataFrame:
     """Per-doc mean unigram log-probability — the fluency/perplexity filter.
 
@@ -221,16 +219,16 @@ def unigram_logprob_scores(
     2-value scalar aggregate (N, V) broadcasts by value, and the token
     stream joins the unigram table on token — the same shuffle shape as
     tf·idf; AQE promotes the join to broadcast when the vocab fits. The
-    token stream feeds both the unigram build and the scoring join;
-    ``reuse_tokens`` persists it to keep corpus tokenization a single pass.
+    token stream feeds both the unigram build and the scoring join, so it
+    is persisted to keep corpus tokenization a single pass.
     """
     from .skew import fan_out
 
-    toks = fan_out(df).select(
-        F.col(id_col), F.explode(word_tokens_col(F.col(text_col))).alias("tok")
+    toks = tracked_persist(
+        fan_out(df).select(
+            F.col(id_col), F.explode(word_tokens_col(F.col(text_col))).alias("tok")
+        )
     )
-    if reuse_tokens:
-        toks = tracked_persist(toks)
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     totals = uni.agg(
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")
@@ -262,7 +260,6 @@ def bigram_logprob_scores(
     id_col: str = "doc_id",
     n: int = 2,
     round_digits: int = 6,
-    reuse_grams: bool = True,
 ) -> DataFrame:
     """Per-doc mean n-gram (default bigram) log-probability — the
     order-sensitive fluency gate.
@@ -278,16 +275,16 @@ def bigram_logprob_scores(
     Scale shape: identical to the unigram scorer — explode + hash-agg for
     the gram table, a broadcast 2-value totals row, then the gram stream
     re-joins the counts (AQE promotes to broadcast when the gram vocab
-    fits). ``reuse_grams`` persists the exploded stream so gram-building
-    runs once for both the model build and the scoring pass.
+    fits). The exploded stream is persisted so gram-building runs once for
+    both the model build and the scoring pass.
     """
     from .skew import fan_out
 
-    grams = fan_out(df).select(
-        F.col(id_col), F.explode(word_grams_col(F.col(text_col), n)).alias("gram")
+    grams = tracked_persist(
+        fan_out(df).select(
+            F.col(id_col), F.explode(word_grams_col(F.col(text_col), n)).alias("gram")
+        )
     )
-    if reuse_grams:
-        grams = tracked_persist(grams)
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     totals = counts.agg(
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")
@@ -1433,34 +1430,14 @@ def paragraph_language_profile(
     )
 
 
-# Conf hooks for the inverted-index salt width (r10 VERDICT item 7: the
-# fixed n_salts=16 was the last hand-tuned skew constant).  Auto mode
-# derives one salt shard per INVERTED_INDEX_SALT_BYTES of Catalyst's input
-# size estimate: the hottest term's aggregation state is bounded by
-# N_docs / n_salts, and N_docs scales with input bytes, so bytes-per-salt
-# keeps the per-task bound flat as the corpus grows — no job, pure plan
-# stats (same zero-cost gate as plans/hints.broadcast_dim).
-INVERTED_INDEX_SALTS_CONF = "spark.graft.invertedIndexSalts"
-INVERTED_INDEX_SALT_BYTES_CONF = "spark.graft.invertedIndexSaltBytes"
-DEFAULT_SALT_BYTES = 64 * 1024 * 1024
-_MAX_AUTO_SALTS = 1024
-
-
-def _auto_salts(df: DataFrame) -> int:
-    spark = df.sparkSession
-    conf = spark.conf.get(INVERTED_INDEX_SALTS_CONF, None)
-    if conf is not None:
-        return max(1, int(conf))
-    per = max(
-        1, int(spark.conf.get(INVERTED_INDEX_SALT_BYTES_CONF, None) or DEFAULT_SALT_BYTES)
-    )
-    try:
-        from ..plans.hints import estimated_plan_bytes
-
-        est = estimated_plan_bytes(df)
-    except Exception:
-        return 16  # no estimate (streaming side etc.): the old default
-    return min(_MAX_AUTO_SALTS, max(1, -(-est // per)))
+# Inverted-index salt width (r10 VERDICT item 7: the fixed n_salts=16 was
+# the last hand-tuned skew constant). Auto mode derives one salt shard per
+# SALT_BYTES of Catalyst's input size estimate (plan_sized_count), clamped
+# to [1, 1024], 16 without an estimate: the hottest term's aggregation
+# state is bounded by N_docs / n_salts, and N_docs scales with input bytes,
+# so bytes-per-salt keeps the per-task bound flat as the corpus grows — no
+# job, pure plan stats.
+SALT_BYTES = 64 * 1024 * 1024
 
 
 def inverted_index(
@@ -1485,13 +1462,12 @@ def inverted_index(
     salted-partial pattern as skew.salted_join, applied to collect_list.
     A single-level ``collect_list`` per term would hold the hottest
     term's ENTIRE posting list in one task. ``n_salts=None`` (default)
-    scales the width with the corpus automatically: the
-    ``spark.graft.invertedIndexSalts`` conf wins if set; otherwise one
-    salt per ``spark.graft.invertedIndexSaltBytes`` (default 64 MiB) of
-    Catalyst's zero-job input size estimate, so the hottest term's
-    per-task bound stays flat as the corpus grows instead of relying on
-    a hand-tuned constant. Any explicit integer pins the width (the
-    output is salt-width invariant — pinned by test).
+    scales the width with the corpus automatically: one salt per
+    ``SALT_BYTES`` (64 MiB) of Catalyst's zero-job input size estimate,
+    so the hottest term's per-task bound stays flat as the corpus grows
+    instead of relying on a hand-tuned constant. Any explicit integer
+    pins the width (the output is salt-width invariant — pinned by
+    test).
 
     Shuffles: one (term, doc_id) hash agg (map-side combinable tf), one
     (term, salt) agg, one |terms|-row merge agg. df/cf are exact longs;
@@ -1500,7 +1476,7 @@ def inverted_index(
     agg).
     """
     if n_salts is None:
-        n_salts = _auto_salts(df)
+        n_salts = plan_sized_count(df, SALT_BYTES, 1, 1024, 16)
     toks = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(word_tokens_col(F.col(text_col))).alias("term"),

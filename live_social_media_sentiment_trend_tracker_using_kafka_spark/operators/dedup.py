@@ -148,7 +148,6 @@ def shingle_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """Canonical persisted ``(id, shingles)`` table shared by every
     shingle-consuming operator (MinHash-LSH, exact prefix-filter join, the
@@ -174,9 +173,10 @@ def shingle_table(
     # higher-order filter evaluates the kernel ONCE, above the exchange,
     # and explode drops the empty rows — bit-identical output (explode of
     # an empty/NULL-pruned wrapper emits no row, exactly filter(size>0)).
-    sh = (
-        fan_out(df)
-        .select(
+    from ..caching import tracked_persist_shared
+
+    return tracked_persist_shared(
+        fan_out(df).select(
             F.col(id_col),
             F.explode(
                 F.filter(
@@ -186,11 +186,6 @@ def shingle_table(
             ).alias("shingles"),
         )
     )
-    if persist:
-        from ..caching import tracked_persist_shared
-
-        sh = tracked_persist_shared(sh)
-    return sh
 
 
 def minhash_signature_col(shingles: Column, num_hashes: int = 32) -> Column:
@@ -338,15 +333,35 @@ def minhash_near_duplicates(
         F.col(id_col), minhash_signature_col(F.col("shingles"), num_hashes).alias("minhash")
     )
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
+    return _verify_jaccard(cands, base, base, id_col, threshold).orderBy(
+        "id_a", "id_b"
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of MinHash-LSH candidate pairs — the one verify
+    step of both MinHash paths. ``cands``' two columns name the left and
+    right ids; ``left``/``right`` are ``(id_col, shingles)`` tables. Returns
+    ``(left id, right id, jaccard)`` for pairs with jaccard ≥ threshold,
+    rounded to 6 places, unordered."""
+    ka, kb = cands.columns
+
     # The verify sides carry full shingle ARRAYS — data-sized, growing with
     # the corpus. Pin them to sort-merge joins: measured at 20× sf0.1 the
     # planner broadcast the cached table off a stale size estimate and
     # GC-thrashed the driver (and a shuffle-hash build OOMs under memory
     # pressure — SMJ spills). A broadcast of a corpus-sized side can never
     # be right; the shuffle stays linear in candidates.
-    sh = base.select(F.col(id_col), F.col("shingles")).hint("merge")
-    a = sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a")
-    b = sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b")
+    def side(base: DataFrame, key: str, arr: str) -> DataFrame:
+        sh = base.select(F.col(id_col), F.col("shingles")).hint("merge")
+        return sh.withColumnRenamed(id_col, key).withColumnRenamed("shingles", arr)
+
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
@@ -358,17 +373,16 @@ def minhash_near_duplicates(
     # higher-order filter computes the exact ratio once; rounding stays
     # display-only, so the no-false-negatives contract is unchanged (r13).
     return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
+        cands.join(side(left, ka, "sh_a"), ka)
+        .join(side(right, kb, "sh_b"), kb)
         .select(
-            "id_a",
-            "id_b",
+            ka,
+            kb,
             F.explode(
                 F.filter(F.array(jac), lambda j: j >= threshold)
             ).alias("_jac"),
         )
-        .select("id_a", "id_b", F.round("_jac", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
+        .select(ka, kb, F.round("_jac", 6).alias("jaccard"))
     )
 
 
@@ -570,8 +584,8 @@ def incremental_near_duplicates(
     Jaccard verification touches candidates alone, reading shingles from
     both sides' tables. Output ordered (incoming_id, corpus_id).
     """
-    inc_base = shingle_table(incoming, text_col, id_col, n, persist=True)
-    cor_base = shingle_table(corpus, text_col, id_col, n, persist=True)
+    inc_base = shingle_table(incoming, text_col, id_col, n)
+    cor_base = shingle_table(corpus, text_col, id_col, n)
 
     def banded(base: DataFrame, side: str) -> DataFrame:
         sigs = base.select(
@@ -582,31 +596,11 @@ def incremental_near_duplicates(
         return banded_signature_keys(sigs, id_col, num_hashes, bands, out_id=f"{side}_id")
 
     cands = (
-        banded(inc_base, "inc")
-        .join(banded(cor_base, "cor"), ["band", "bucket"])
-        .select("inc_id", "cor_id")
+        banded(inc_base, "incoming")
+        .join(banded(cor_base, "corpus"), ["band", "bucket"])
+        .select("incoming_id", "corpus_id")
         .distinct()
     )
-    a = inc_base.select(F.col(id_col).alias("inc_id"), F.col("shingles").alias("sh_a")).hint("merge")
-    b = cor_base.select(F.col(id_col).alias("cor_id"), F.col("shingles").alias("sh_b")).hint("merge")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
-    # single-evaluation threshold — see minhash_near_duplicates (r13)
-    return (
-        cands.join(a, "inc_id")
-        .join(b, "cor_id")
-        .select(
-            F.col("inc_id").alias("incoming_id"),
-            F.col("cor_id").alias("corpus_id"),
-            F.explode(
-                F.filter(F.array(jac), lambda j: j >= threshold)
-            ).alias("_jac"),
-        )
-        .select(
-            "incoming_id",
-            "corpus_id",
-            F.round("_jac", 6).alias("jaccard"),
-        )
-        .orderBy("incoming_id", "corpus_id")
+    return _verify_jaccard(cands, inc_base, cor_base, id_col, threshold).orderBy(
+        "incoming_id", "corpus_id"
     )

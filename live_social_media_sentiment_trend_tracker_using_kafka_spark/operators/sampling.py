@@ -17,11 +17,9 @@ Scale shapes:
   the norm; the window is a running sum, which Spark computes with a single
   per-partition scan after the sort. For few-source corpora at extreme
   scale, pre-aggregate per (source, md5-prefix) chunk to shard the sort.
-- ``quality_percentile_filter``: per-language exact percentile is one
-  hash aggregation (few groups) broadcast back — no second scan of text
-  (the score column is reused); swap ``F.percentile`` for
-  ``F.approx_percentile`` at scales where exact per-group sort-based
-  percentiles are too hot (documented scale path, same plan shape).
+- ``quality_percentile_filter``: per-language exact percentile via
+  ``exact_percentiles`` (few groups) broadcast back — no second scan of
+  text (the score column is reused).
 - ``priority_source_dedup``: row_number over (fingerprint) — one shuffle
   on the dup key, same cost as plain exact dedup.
 """
@@ -147,7 +145,7 @@ def token_budget_mix(
     hex_width = max(1, ((max(chunks, 2) - 1).bit_length() + 3) // 4)
     # base feeds BOTH the chunk-totals aggregate and the window branch —
     # persist so the dominant pass (BPE token counting over text) runs once
-    # per corpus, not once per consumer (same convention as tfidf reuse_tf).
+    # per corpus, not once per consumer (same convention as tfidf's tf frame).
     base = tracked_persist(
         df.select(
             F.col(id_col),
@@ -192,7 +190,6 @@ def quality_percentile_filter(
     lang_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    approx: bool = False,
 ) -> DataFrame:
     """Keep docs whose quality score clears their language's pct-percentile.
 
@@ -201,24 +198,16 @@ def quality_percentile_filter(
     avoid wiping out whole languages. The exact cutoff rides
     ``exact_percentiles`` (distributed counts reconstruction — Spark's
     ``percentile()`` buffers each language's whole score multiset on one
-    reducer, the r11-measured superlinear cliff); ``approx=True``
-    switches to ``approx_percentile`` (t-digest sketch, single-pass
-    mergeable, not oracle-exact) when a sketch is preferred.
+    reducer, the r11-measured superlinear cliff), so the cutoff is
+    oracle-exact.
     """
     q = quality_score_cols(F.col(text_col))
     scored = df.select(
         F.col(id_col), F.col(lang_col), q["quality_score"].alias("quality_score")
     )
-    if approx:
-        cut = scored.groupBy(lang_col).agg(
-            F.approx_percentile("quality_score", F.lit(pct), F.lit(10000)).alias(
-                "cutoff"
-            )
-        )
-    else:
-        cut = exact_percentiles(
-            scored, [lang_col], "quality_score", [pct]
-        ).select(lang_col, F.element_at("pcts", 1).alias("cutoff"))
+    cut = exact_percentiles(scored, [lang_col], "quality_score", [pct]).select(
+        lang_col, F.element_at("pcts", 1).alias("cutoff")
+    )
     return (
         scored.join(F.broadcast(cut), lang_col)
         .filter(F.col("quality_score") >= F.col("cutoff"))
@@ -598,25 +587,17 @@ def weighted_sample(
 # sweep marker for a GUARDED exact percentile (tests/test_plans.py
 # allows percentile( only next to greatest(_gcnt). A big-distinct frame
 # runs the reconstruction; if the group gate ALSO tripped, its probe
-# frame rides a shuffled (non-broadcast) join. Both confs tunable, same
-# pattern as CHUNKED_SUM_CHUNKS_CONF.
-EXACT_PCT_MAX_GROUPS_CONF = "spark.graft.exactPercentileMaxGroups"
-EXACT_PCT_MAX_DISTINCT_CONF = "spark.graft.exactPercentileMaxDistinct"
+# frame rides a shuffled (non-broadcast) join. Both gates are pure
+# functions of |percentages| over the two budgets below.
 _PROBE_ROW_BUDGET = 2_000_000
 _FREQ_CELL_BUDGET = 30_000_000
 
 
-def _max_groups(spark, n_pcts: int) -> int:
-    conf = spark.conf.get(EXACT_PCT_MAX_GROUPS_CONF, None)
-    if conf is not None:
-        return max(1, int(conf))
+def _max_groups(n_pcts: int) -> int:
     return max(1_000, _PROBE_ROW_BUDGET // max(1, 2 * n_pcts))
 
 
-def _max_distinct(spark, n_pcts: int) -> int:
-    conf = spark.conf.get(EXACT_PCT_MAX_DISTINCT_CONF, None)
-    if conf is not None:
-        return max(0, int(conf))
+def _max_distinct(n_pcts: int) -> int:
     return _FREQ_CELL_BUDGET // (30 + n_pcts)
 
 
@@ -658,13 +639,13 @@ def exact_percentiles(
     Regime dispatch (r12): one eager stats pass over the persisted
     distinct-counts frame measures |groups| and the max per-group
     distinct-value count, then
-    - |groups| > ``spark.graft.exactPercentileMaxGroups`` (default keeps
-      the probe broadcast ≤ ~2M rows) → frequency-weighted
+    - |groups| > ``_max_groups(|ps|)`` (keeps the probe broadcast
+      ≤ ~2M rows) → frequency-weighted
       ``percentile(value, ps, greatest(_gcnt, 1L))`` over the counts
       frame, with a loud warning (the vanilla aggregate is already
       parallel at high cardinality; the probe broadcast is not);
-    - max distinct ≤ ``spark.graft.exactPercentileMaxDistinct`` (default
-      ~30M/(30+|ps|): ≈1M for a median, ≈230k for a 101-point grid —
+    - max distinct ≤ ``_max_distinct(|ps|)`` (~30M/(30+|ps|): ≈1M for
+      a median, ≈230k for a 101-point grid —
       the measured crossover, see the module constant) → the same
       frequency-weighted aggregate, silently: each reducer buffers at
       most the small per-group distinct map, and the running-sum/probe
@@ -727,7 +708,6 @@ def exact_percentiles(
         from ..caching import tracked_persist
 
         gvals = tracked_persist(gvals)
-    spark = df.sparkSession
     # one eager stats pass: |groups| and the max per-group distinct count
     # drive the regime choice (the frame is persisted — this is the same
     # materialization the final action would pay anyway)
@@ -742,10 +722,8 @@ def exact_percentiles(
         .head()
     )
     n_groups, max_nd = st["_ng"] or 0, st["_mx"] or 0
-    many_groups = bool(part_cols) and n_groups > _max_groups(
-        spark, len(percentages)
-    )
-    small_distinct = max_nd <= _max_distinct(spark, len(percentages))
+    many_groups = bool(part_cols) and n_groups > _max_groups(len(percentages))
+    small_distinct = max_nd <= _max_distinct(len(percentages))
     if small_distinct:
         # frequency-weighted aggregate over the counts frame: parallel at
         # any group cardinality, and below the distinct budget each
@@ -754,11 +732,11 @@ def exact_percentiles(
             import warnings
 
             warnings.warn(
-                f"exact_percentiles: {n_groups} groups exceeds "
-                f"{EXACT_PCT_MAX_GROUPS_CONF} — falling back to the vanilla "
-                "frequency-weighted percentile() aggregate (parallel at high "
-                "group cardinality; the reconstruction probe broadcast is "
-                "not). Set the conf to raise the threshold.",
+                f"exact_percentiles: {n_groups} groups exceeds the "
+                f"{_max_groups(len(percentages))}-group probe budget — "
+                "falling back to the vanilla frequency-weighted percentile() "
+                "aggregate (parallel at high group cardinality; the "
+                "reconstruction probe broadcast is not).",
                 stacklevel=2,
             )
         ps_sql = ", ".join(repr(float(p)) for p in percentages)

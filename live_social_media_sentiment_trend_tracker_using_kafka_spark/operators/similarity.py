@@ -84,16 +84,15 @@ def lsh_topk(
     vec_col: str = "embedding",
     num_planes: int = 8,
     seed: int = 7,
-    multi_probe: bool = True,
 ) -> DataFrame:
-    """ANN top-k: probe the query's bucket (plus Hamming-1 neighbors when
-    ``multi_probe``), exact cosine re-rank inside the probed buckets.
+    """ANN top-k: probe the query's bucket plus its Hamming-1 neighbors,
+    exact cosine re-rank inside the probed buckets.
 
     At 100 TB the bucketed table is written partitioned by ``bucket`` so a
     probe is a partition-pruned scan, not a full pass.
     """
     bucketed = with_lsh_bucket(embeddings, len(query_vec), num_planes, vec_col, seed)
-    return lsh_probe(bucketed, query_vec, k, id_col, vec_col, num_planes, seed, multi_probe)
+    return lsh_probe(bucketed, query_vec, k, id_col, vec_col, num_planes, seed)
 
 
 def lsh_probe(
@@ -104,7 +103,6 @@ def lsh_probe(
     vec_col: str = "embedding",
     num_planes: int = 8,
     seed: int = 7,
-    multi_probe: bool = True,
 ) -> DataFrame:
     """Probe phase of ``lsh_topk`` against a prebuilt bucketed table — the
     build-once/probe-many split of a served ANN index (callers memoize or
@@ -113,7 +111,7 @@ def lsh_probe(
     q = np.asarray(query_vec, dtype=float)
     planes = _hyperplanes(len(q), num_planes, seed)
     qsig = sum((1 << p) for p, plane in enumerate(planes) if float(np.dot(q, plane)) > 0)
-    probes = [qsig] + ([qsig ^ (1 << p) for p in range(num_planes)] if multi_probe else [])
+    probes = [qsig] + [qsig ^ (1 << p) for p in range(num_planes)]
     from ..functions.kernels import make_query_cosine_udf
 
     # Arrow rerank: one matmul per batch vs an interpreted fold per row —

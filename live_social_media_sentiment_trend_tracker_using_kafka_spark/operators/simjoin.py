@@ -43,7 +43,6 @@ def frequency_sorted_shingles(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """(id, shingles sorted by ascending corpus document-frequency, sz).
 
@@ -57,7 +56,7 @@ def frequency_sorted_shingles(
     would run twice even inside this one operator — and the cached table is
     plan-substituted into the MinHash tier when both run in one session.
     """
-    sh = shingle_table(df, text_col, id_col, n, persist=persist_shingles)
+    sh = shingle_table(df, text_col, id_col, n)
     ex = sh.select(id_col, F.explode("shingles").alias("shingle"))
     dfreq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     return (
@@ -79,7 +78,6 @@ def jaccard_similarity_join(
     threshold: float = 0.5,
     n: int = 3,
     round_digits: int = 6,
-    reuse_index: bool = True,
     order_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs (id_a, id_b, jaccard) with exact n-gram Jaccard >= threshold.
@@ -89,10 +87,9 @@ def jaccard_similarity_join(
     answer at test scale. Documents with empty shingle sets (no tokens) are
     excluded — Jaccard is undefined on empty sets.
 
-    ``reuse_index=True`` persists the sorted-shingle table so the prefix
-    branch and both verify sides share one tokenization pass; pass False
-    when managing caching/checkpointing externally (the cache lives until
-    the session evicts it).
+    The sorted-shingle table is persisted so the prefix branch and both
+    verify sides share one tokenization pass (the cache lives until the
+    session evicts it).
 
     ``order_corpus``: a SUPERSET corpus to index (e.g. the unfiltered
     documents table); the index is then restricted to ``df``'s ids by
@@ -106,11 +103,9 @@ def jaccard_similarity_join(
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     index_base = order_corpus if order_corpus is not None else df
-    sorted_docs = frequency_sorted_shingles(
-        index_base, text_col, id_col, n, persist_shingles=reuse_index
+    sorted_docs = tracked_persist(
+        frequency_sorted_shingles(index_base, text_col, id_col, n)
     )
-    if reuse_index:
-        sorted_docs = tracked_persist(sorted_docs)
     if order_corpus is not None:
         sorted_docs = sorted_docs.join(df.select(id_col), id_col, "left_semi")
     pref_len = (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1).cast("int")

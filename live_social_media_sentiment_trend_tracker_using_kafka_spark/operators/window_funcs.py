@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.hints import plan_sized_count
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -24,18 +26,16 @@ def top_k_per_group(
     order_col: str,
     k: int,
     tiebreak_col: str,
-    ascending: bool = False,
 ) -> DataFrame:
-    """Top-k rows per group via row_number over a partitioned window.
+    """Top-k rows per group (largest ``order_col`` first, ties by ascending
+    ``tiebreak_col``) via row_number over a partitioned window.
 
     One shuffle on ``partition_col``; the rank filter runs in the same stage
     as the window, so output is ≤ k rows per group — never a global sort.
     """
-    order = [
-        F.asc(order_col) if ascending else F.desc(order_col),
-        F.asc(tiebreak_col),
-    ]
-    w = Window.partitionBy(partition_col).orderBy(*order)
+    w = Window.partitionBy(partition_col).orderBy(
+        F.desc(order_col), F.asc(tiebreak_col)
+    )
     return (
         df.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
@@ -211,31 +211,11 @@ def distributed_cume_dist(
 
 
 # chunked_running_sum chunk sizing: one chunk per CHUNK_BYTES of Catalyst's
-# input-size estimate (conf-tunable, same pattern as inverted_index's
-# auto-salts) — the worst window task then holds ~CHUNK_BYTES of rows no
-# matter how large any single group grows.
-CHUNKED_SUM_CHUNKS_CONF = "spark.graft.chunkedSumChunks"
-CHUNKED_SUM_CHUNK_BYTES_CONF = "spark.graft.chunkedSumChunkBytes"
-DEFAULT_CHUNK_BYTES = 64 * 1024 * 1024
-_MAX_AUTO_CHUNKS = 4096
-
-
-def _auto_chunks(df: DataFrame) -> int:
-    spark = df.sparkSession
-    conf = spark.conf.get(CHUNKED_SUM_CHUNKS_CONF, None)
-    if conf is not None:
-        return max(1, int(conf))
-    per = max(
-        1,
-        int(spark.conf.get(CHUNKED_SUM_CHUNK_BYTES_CONF, None) or DEFAULT_CHUNK_BYTES),
-    )
-    try:
-        from ..plans.hints import estimated_plan_bytes
-
-        est = estimated_plan_bytes(df)
-    except Exception:
-        return 256  # no estimate (streaming side etc.)
-    return min(_MAX_AUTO_CHUNKS, max(16, -(-est // per)))
+# input-size estimate (plans/hints.plan_sized_count, same helper as
+# inverted_index's salts), clamped to [16, 4096], 256 without an estimate —
+# the worst window task then holds ~CHUNK_BYTES of rows no matter how large
+# any single group grows.
+CHUNK_BYTES = 64 * 1024 * 1024
 
 
 def chunked_running_sum(
@@ -261,9 +241,8 @@ def chunked_running_sum(
     identical global running sum (property-pinned in tests).
 
     ``chunks=None`` derives the count from Catalyst's input-size estimate
-    (``spark.graft.chunkedSumChunks`` / ``...chunkedSumChunkBytes`` confs)
-    so the worst task stays ~CHUNK_BYTES at any corpus size — no hand-tuned
-    parallelism constant.
+    (one chunk per ``CHUNK_BYTES``) so the worst task stays ~CHUNK_BYTES at
+    any corpus size — no hand-tuned parallelism constant.
 
     Contract: ``order_col`` is numeric-comparable and unique within its
     group (ties would make any running sum over them order-ambiguous);
@@ -281,7 +260,7 @@ def chunked_running_sum(
 
     base = df.select(*part_cols, order_col, value_col)
     if chunks is None:
-        chunks = _auto_chunks(base)
+        chunks = plan_sized_count(base, CHUNK_BYTES, 16, 4096, 256)
     b_keys = [f"_b_g{i}" for i in range(len(part_cols))]
     if chunks >= 2:
         qs = [i / chunks for i in range(1, chunks)]

@@ -27,6 +27,10 @@ e.g. TPC-H Q17's per-part threshold table) callers pass ``gate_on=`` —
 the scan-level frame whose key domain bounds the derived frame's
 cardinality (``thresholds``'s keys ⊆ ``bparts``'s, so ``bparts``'s scan
 stats are a sound proxy).
+
+``plan_sized_count`` reads the same zero-job estimate to size a
+parallelism width (``chunked_running_sum``'s chunks, ``inverted_index``'s
+salts): one unit per byte budget, clamped.
 """
 
 from __future__ import annotations
@@ -36,13 +40,10 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Tunable without code changes: spark.conf.set(DIM_BROADCAST_THRESHOLD_CONF, bytes).
-DIM_BROADCAST_THRESHOLD_CONF = "spark.graft.dimBroadcastThreshold"
-
-# Catalyst's estimate inflates on-disk parquet by the decompression factor,
-# so this is an *estimated-plan-bytes* budget, not a wire-size cap. 256 MiB
-# keeps every sf<=1 dimension hinted while refusing anything that would be
-# a multi-GB build side on a real cluster.
+# The broadcast_dim gate. Catalyst's estimate inflates on-disk parquet by
+# the decompression factor, so this is an *estimated-plan-bytes* budget,
+# not a wire-size cap. 256 MiB keeps every sf<=1 dimension hinted while
+# refusing anything that would be a multi-GB build side on a real cluster.
 DEFAULT_DIM_BROADCAST_BYTES = 256 * 1024 * 1024
 
 
@@ -52,11 +53,21 @@ def estimated_plan_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())  # type: ignore[attr-defined]
 
 
-def broadcast_dim(
-    df: DataFrame,
-    gate_on: DataFrame | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
+def plan_sized_count(
+    df: DataFrame, bytes_per_unit: int, lo: int, hi: int, fallback: int
+) -> int:
+    """One unit per ``bytes_per_unit`` of ``df``'s plan-size estimate,
+    rounded up and clamped to ``[lo, hi]`` — a parallelism width that
+    keeps each task's share flat as the input grows, at zero jobs.
+    ``fallback`` when there is no estimate (streaming side etc.)."""
+    try:
+        est = estimated_plan_bytes(df)
+    except Exception:
+        return fallback
+    return min(hi, max(lo, -(-est // bytes_per_unit)))
+
+
+def broadcast_dim(df: DataFrame, gate_on: DataFrame | None = None) -> DataFrame:
     """Broadcast-hint ``df`` only while its size estimate fits the gate.
 
     ``gate_on``: frame whose stats stand in for ``df``'s when ``df``'s own
@@ -65,21 +76,12 @@ def broadcast_dim(
     domain bounds ``df``'s cardinality, typically the filtered dimension
     scan ``df`` was derived from.
 
-    ``max_bytes``: gate threshold; defaults to the
-    ``spark.graft.dimBroadcastThreshold`` session conf when set, else
-    ``DEFAULT_DIM_BROADCAST_BYTES``.
-
-    Above the gate the frame is returned unhinted (AQE decides) and a
-    warning names the frame so a silent plan change is impossible —
-    mirrors ``cap_cell_sizes``'s fires-loudly contract.
+    The gate is ``DEFAULT_DIM_BROADCAST_BYTES``. Above it the frame is
+    returned unhinted (AQE decides) and a warning names the frame so a
+    silent plan change is impossible — mirrors ``cap_cell_sizes``'s
+    fires-loudly contract.
     """
     probe = gate_on if gate_on is not None else df
-    if max_bytes is None:
-        try:
-            conf = df.sparkSession.conf.get(DIM_BROADCAST_THRESHOLD_CONF, None)
-        except Exception:
-            conf = None
-        max_bytes = int(conf) if conf is not None else DEFAULT_DIM_BROADCAST_BYTES
     try:
         est = estimated_plan_bytes(probe)
     except Exception:
@@ -91,10 +93,11 @@ def broadcast_dim(
             stacklevel=2,
         )
         return df
-    if est > max_bytes:
+    if est > DEFAULT_DIM_BROADCAST_BYTES:
         warnings.warn(
             f"broadcast_dim: estimated {est} bytes exceeds the "
-            f"{max_bytes}-byte gate; leaving the join unhinted for AQE",
+            f"{DEFAULT_DIM_BROADCAST_BYTES}-byte gate; leaving the join "
+            "unhinted for AQE",
             stacklevel=2,
         )
         return df

@@ -70,7 +70,6 @@ def feed_simulator(
     fixture: DataFrame,
     rows_per_second: int = 1,
     seed: int = 42,
-    stamp: bool = True,
 ) -> DataFrame:
     """P15: streaming feed of fixture posts at a controlled cadence — the
     reference producer's random-choice loop as a Spark streaming plan.
@@ -86,5 +85,4 @@ def feed_simulator(
         .load()
         .drop("timestamp")
     )
-    out = assign_fixture_rows(rate, fixture, seed)
-    return stamp_produce_time(out) if stamp else out
+    return stamp_produce_time(assign_fixture_rows(rate, fixture, seed))

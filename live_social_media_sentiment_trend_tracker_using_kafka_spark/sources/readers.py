@@ -241,11 +241,16 @@ def write_kafka(
 ):
     """Kafka sink: serialize all columns to a JSON ``value`` (the Spark-side
     equivalent of the reference producer's json.dumps serializer,
-    producer/kafka_producer.py:14-15,82)."""
+    producer/kafka_producer.py:14-15,82). A streaming frame starts its
+    query through the streaming layer's one start path."""
     out = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
     if out.isStreaming:
-        opts = kafka_sink_options(topic, bootstrap_servers, checkpoint)
-        return out.writeStream.format("kafka").options(**opts).start()
+        # lazy: streaming.pipeline imports this module
+        from ..streaming.pipeline import _start_kafka_sink
+
+        return _start_kafka_sink(
+            out, kafka_sink_options(topic, bootstrap_servers, checkpoint)
+        )
     return (
         out.write.format("kafka")
         .options(**kafka_sink_options(topic, bootstrap_servers))

@@ -368,6 +368,13 @@ def start_file_sink(
     return _start(writer, trigger, available_now)
 
 
+def _start_kafka_sink(df: DataFrame, options: dict[str, str]) -> StreamingQuery:
+    """Unbounded Kafka sink for a frame with a JSON ``value`` column — the
+    streaming half of ``sources.readers.write_kafka``."""
+    writer = df.writeStream.format("kafka").options(**options)
+    return _start(writer, None, available_now=False)
+
+
 def fan_out_sinks(
     df: DataFrame,
     batch_writers: dict[str, Callable[[DataFrame], None]],
@@ -478,16 +485,11 @@ def stream_static_enrich(
     stream: DataFrame,
     static_dim: DataFrame,
     on: str | list[str],
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static join: each micro-batch joins against a STATIC batch
     DataFrame (reference data, model thresholds, dimension attributes).
     No watermark is needed — the static side is re-read per batch and
-    holds no streaming state. With ``broadcast_dim`` the static side
-    ships to every executor once per batch and the join never shuffles
-    the stream; leave it False only when the static side is too big to
-    broadcast (then Spark shuffle-joins each micro-batch, which is still
-    correct but pays |batch| + |dim| exchanges every trigger).
+    holds no streaming state. The static side is broadcast: it ships to
+    every executor once per batch and the join never shuffles the stream.
     """
-    dim = F.broadcast(static_dim) if broadcast_dim else static_dim
-    return stream.join(dim, on=on, how="inner")
+    return stream.join(F.broadcast(static_dim), on=on, how="inner")

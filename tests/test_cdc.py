@@ -122,12 +122,6 @@ def test_snapshot_diff_classifies_all_classes(spark):
     assert out[4].diff_type == "changed"
 
 
-def test_snapshot_diff_include_unchanged(spark):
-    old = spark.createDataFrame([(1, 1.0)], "k long, v double")
-    out = cdc.snapshot_diff(old, old, ["k"], ["v"], include_unchanged=True).collect()
-    assert len(out) == 1 and out[0].diff_type == "unchanged"
-
-
 def test_scd2_null_is_a_regime(spark):
     # value -> NULL -> value must produce three regimes, and a history
     # STARTING at NULL must open a regime (r10 review finding: plain

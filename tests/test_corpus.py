@@ -693,57 +693,36 @@ def test_inverted_index_salting_invariant(spark):
     assert ka == kb and ka
 
 
-def test_inverted_index_salt_conf_and_auto(spark):
-    """n_salts=None reads spark.graft.invertedIndexSalts when set, else
-    derives a width from the Catalyst size estimate; every width yields
-    identical output (salt-width invariance is already pinned above)."""
+def test_inverted_index_salt_conf_and_auto(monkeypatch, spark):
+    """n_salts=None derives a width from the Catalyst size estimate, one
+    salt per SALT_BYTES; every width yields identical output (salt-width
+    invariance is already pinned above)."""
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import corpus as C
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans.hints import estimated_plan_bytes
 
     docs = spark.createDataFrame(
         [(i, "alpha beta " + ("gamma " * (i % 3))) for i in range(40)],
         ["doc_id", "text"],
     )
-    spark.conf.set(C.INVERTED_INDEX_SALTS_CONF, "3")
-    try:
-        assert C._auto_salts(docs) == 3
-    finally:
-        spark.conf.unset(C.INVERTED_INDEX_SALTS_CONF)
-    # no conf: derived from plan bytes, >= 1, capped
-    auto = C._auto_salts(docs)
-    assert 1 <= auto <= C._MAX_AUTO_SALTS
+    widths = []
+    real = C.plan_sized_count
+
+    def spy(*args):
+        widths.append(real(*args))
+        return widths[-1]
+
+    monkeypatch.setattr(C, "plan_sized_count", spy)
+    # derived from plan bytes, >= 1, capped
+    C.inverted_index(docs, min_df=1)
+    assert 1 <= widths[-1] <= 1024
     # the derivation scales with the per-salt byte budget: a budget the
     # size of the whole input -> 1 salt; a tenth of it -> ~10, capped
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans.hints import estimated_plan_bytes
-
     est = estimated_plan_bytes(docs)
     for budget, expect in [(est, 1), (max(1, est // 10), 10)]:
-        spark.conf.set(C.INVERTED_INDEX_SALT_BYTES_CONF, str(budget))
-        try:
-            got = C._auto_salts(docs)
-        finally:
-            spark.conf.unset(C.INVERTED_INDEX_SALT_BYTES_CONF)
-        assert abs(got - expect) <= 1, (budget, got, expect)
+        monkeypatch.setattr(C, "SALT_BYTES", budget)
+        C.inverted_index(docs, min_df=1)
+        assert abs(widths[-1] - expect) <= 1, (budget, widths[-1], expect)
     # end-to-end: auto mode output == pinned-width output
     a = sorted(map(tuple, C.inverted_index(docs, min_df=1).collect()))
     b = sorted(map(tuple, C.inverted_index(docs, min_df=1, n_salts=5).collect()))
     assert a == b
-
-
-def test_byte_budget_confs_clamped_at_zero(spark):
-    """Setting the byte-budget confs to "0" must clamp to 1, not raise
-    ZeroDivisionError at plan time (r11 ADVICE — the count confs were
-    max(1,...)-clamped, the byte confs were not)."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import corpus as C
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import window_funcs as W
-
-    docs = spark.createDataFrame([(1, "alpha beta")], ["doc_id", "text"])
-    spark.conf.set(C.INVERTED_INDEX_SALT_BYTES_CONF, "0")
-    try:
-        assert 1 <= C._auto_salts(docs) <= C._MAX_AUTO_SALTS
-    finally:
-        spark.conf.unset(C.INVERTED_INDEX_SALT_BYTES_CONF)
-    spark.conf.set(W.CHUNKED_SUM_CHUNK_BYTES_CONF, "0")
-    try:
-        assert 1 <= W._auto_chunks(docs) <= W._MAX_AUTO_CHUNKS
-    finally:
-        spark.conf.unset(W.CHUNKED_SUM_CHUNK_BYTES_CONF)

@@ -13,10 +13,10 @@ from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import (
     assert_broadcast_join,
     assert_no_python_udf,
     count_plan_nodes,
+    hints,
     plan_text,
 )
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans.hints import (
-    DIM_BROADCAST_THRESHOLD_CONF,
     broadcast_dim,
     estimated_plan_bytes,
 )
@@ -649,7 +649,7 @@ def test_dim_broadcast_gate_hints_below_threshold(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_dim_broadcast_gate_falls_back_above_threshold(spark):
+def test_dim_broadcast_gate_falls_back_above_threshold(monkeypatch, spark):
     """Above the gate the sf-proportional dims must NOT be hinted (r9
     VERDICT item 2: a forced multi-GB broadcast at 100 TB is an OOM, not a
     slow plan). With a 1-byte gate and auto-broadcast disabled, the
@@ -660,11 +660,12 @@ def test_dim_broadcast_gate_falls_back_above_threshold(spark):
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(DIM_BROADCAST_THRESHOLD_CONF, "1")
     try:
-        with warnings_mod.catch_warnings(record=True) as caught:
-            warnings_mod.simplefilter("always")
-            df = entrymod.q_local_supplier_volume(spark, SF)
+        with monkeypatch.context() as mp:
+            mp.setattr(hints, "DEFAULT_DIM_BROADCAST_BYTES", 1)
+            with warnings_mod.catch_warnings(record=True) as caught:
+                warnings_mod.simplefilter("always")
+                df = entrymod.q_local_supplier_volume(spark, SF)
         assert any("exceeds" in str(w.message) for w in caught), caught
         plan = plan_text(df)
         # only the two unconditional nation/region-sized hints remain
@@ -673,18 +674,17 @@ def test_dim_broadcast_gate_falls_back_above_threshold(spark):
         assert count_plan_nodes(df, "BroadcastHashJoin") == 2, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     finally:
-        spark.conf.unset(DIM_BROADCAST_THRESHOLD_CONF)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # semantics unchanged by the fallback: same result as the hinted plan —
-    # built AFTER the conf restore, so it genuinely carries the hints (the
-    # gate reads the conf eagerly at construction; building it inside the
-    # try block would compare the un-hinted plan against itself)
+    # built AFTER the gate is restored, so it genuinely carries the hints
+    # (the gate is read eagerly at construction; building it inside the
+    # patched block would compare the un-hinted plan against itself)
     hinted = entrymod.q_local_supplier_volume(spark, SF)
     assert_broadcast_join(hinted, expected=3)
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, hinted.collect()))
 
 
-def test_dim_broadcast_gate_estimates_are_scan_level(spark):
+def test_dim_broadcast_gate_estimates_are_scan_level(monkeypatch, spark):
     """The gate's stats probe must be sane where we rely on it: parquet
     dim scans report file-derived estimates (small at sf0.01), and an
     in-memory frame's default-inflated estimate exceeds any sane gate, so
@@ -698,7 +698,8 @@ def test_dim_broadcast_gate_estimates_are_scan_level(spark):
     mem = spark.range(10).toDF("k")  # LogicalRDD/LocalRelation-backed
     with warnings_mod.catch_warnings(record=True) as caught:
         warnings_mod.simplefilter("always")
-        hinted = broadcast_dim(mem, max_bytes=1)
+        monkeypatch.setattr(hints, "DEFAULT_DIM_BROADCAST_BYTES", 1)
+        hinted = broadcast_dim(mem)
     assert hinted is mem  # returned unhinted, AQE keeps authority
     assert any("exceeds" in str(w.message) for w in caught), caught
 
@@ -711,8 +712,6 @@ def test_dim_broadcast_gate_no_estimate_branch_stays_unhinted(monkeypatch, spark
     batch frames, so simulate the failure at the probe seam."""
     import warnings as warnings_mod
 
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import hints
-
     def boom(df):
         raise RuntimeError("stats unavailable")
 
@@ -720,7 +719,7 @@ def test_dim_broadcast_gate_no_estimate_branch_stays_unhinted(monkeypatch, spark
     mem = spark.range(10).toDF("k")
     with warnings_mod.catch_warnings(record=True) as caught:
         warnings_mod.simplefilter("always")
-        out = hints.broadcast_dim(mem, max_bytes=1 << 30)
+        out = hints.broadcast_dim(mem)
     assert out is mem
     assert any("no size estimate" in str(w.message) for w in caught), caught
 
@@ -918,7 +917,7 @@ def test_packed_sequences_chunked_window_and_broadcasts(spark):
     assert_no_python_udf(df)
 
 
-def test_quantile_normalize_rank_over_distinct_values(spark):
+def test_quantile_normalize_rank_over_distinct_values(monkeypatch, spark):
     # r11 count-based percent_rank: the per-group windows run over the
     # DISTINCT (group, score) aggregate, so a HashAggregate must sit
     # below the Window; rows rejoin on the well-spread (group, score)
@@ -926,14 +925,12 @@ def test_quantile_normalize_rank_over_distinct_values(spark):
     # SF the r12 distinct-count dispatch routes the grid to the GUARDED
     # frequency-weighted percentile (greatest(_gcnt marker), so the only
     # BNLJ is the 1-row grid-array cross join; forcing the
-    # reconstruction conf restores the other two (the 2·grid_points
-    # probe-index range join and the grid's global chunked_running_sum
-    # boundary array) — both regimes pinned here. The rank path's
-    # chunked_running_sum is GROUPED (per-source), so its bounds join is
-    # a broadcast hash join, never nested-loop.
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sampling import (
-        EXACT_PCT_MAX_DISTINCT_CONF,
-    )
+    # reconstruction (distinct gate zeroed) restores the other two (the
+    # 2·grid_points probe-index range join and the grid's global
+    # chunked_running_sum boundary array) — both regimes pinned here. The
+    # rank path's chunked_running_sum is GROUPED (per-source), so its
+    # bounds join is a broadcast hash join, never nested-loop.
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import sampling
 
     df = entrymod.q_quality_quantile_normalize(spark, SF)
     plan = plan_text(df)
@@ -942,12 +939,9 @@ def test_quantile_normalize_rank_over_distinct_values(spark):
     assert count_plan_nodes(df, "BroadcastNestedLoopJoin") == 1, plan
     assert "greatest(_gcnt" in plan, plan  # guarded frequency grid
     assert_no_python_udf(df)
-    spark.conf.set(EXACT_PCT_MAX_DISTINCT_CONF, "0")
-    try:
-        forced = entrymod.q_quality_quantile_normalize(spark, SF)
-        assert count_plan_nodes(forced, "BroadcastNestedLoopJoin") == 3
-    finally:
-        spark.conf.unset(EXACT_PCT_MAX_DISTINCT_CONF)
+    monkeypatch.setattr(sampling, "_max_distinct", lambda n_pcts: 0)
+    forced = entrymod.q_quality_quantile_normalize(spark, SF)
+    assert count_plan_nodes(forced, "BroadcastNestedLoopJoin") == 3
 
 
 def test_no_registered_query_plans_exact_percentile(spark):
@@ -1047,7 +1041,7 @@ def test_text_kernels_evaluate_once_no_filter_pushdown(spark):
     # shared fingerprint made its Condition guard silently vacuous.
     for label, (df, fingerprint) in {
         "shingle_table": (
-            dedup_ops.shingle_table(docs, persist=False),
+            dedup_ops.shingle_table(docs),
             "regexp_replace(lower(",
         ),
         "simhash_signatures": (

@@ -344,6 +344,26 @@ def test_entry_starts_no_stream_and_sets_no_conf():
     assert not bad, bad
 
 
+def test_package_reads_no_tuning_conf_and_starts_streams_in_one_place():
+    """Operators take their behaviour from signatures and module constants,
+    never from session confs: no ``spark.graft.*`` key anywhere in the
+    package, and the only conf read is ``session.scoped_conf``'s restore.
+    Every streaming writer is built and started in streaming/pipeline.py."""
+    import live_social_media_sentiment_trend_tracker_using_kafka_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    where: dict[str, list[str]] = {}
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        for token in ("spark.graft.", "conf.get(", ".start()", "writeStream"):
+            if token in src:
+                where.setdefault(token, []).append(path.relative_to(root).as_posix())
+    assert "spark.graft." not in where, where
+    assert where.get("conf.get(") == ["session.py"], where
+    assert where.get(".start()") == ["streaming/pipeline.py"], where
+    assert where.get("writeStream") == ["streaming/pipeline.py"], where
+
+
 def test_knn_graph_query_contract(spark):
     """All 8 planted twins surface as their original's rank-1 neighbor at
     cosine 1.0, and cell-local ranking equals exact brute-force ranking

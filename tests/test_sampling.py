@@ -67,14 +67,6 @@ def test_quality_percentile_filter_keeps_at_least_half_per_lang(spark):
     assert kept.filter(F.col("quality_score") < F.col("cutoff")).count() == 0
 
 
-def test_quality_percentile_filter_approx_path_runs(spark):
-    docs = table(spark, "documents", SF_SMOKE)
-    exact = sampling.quality_percentile_filter(docs, pct=0.5, approx=False)
-    approx = sampling.quality_percentile_filter(docs, pct=0.5, approx=True)
-    # t-digest at this size is exact-ish; allow small divergence
-    assert abs(exact.count() - approx.count()) <= docs.count() * 0.05
-
-
 def test_priority_source_dedup_keep_rules(spark):
     rows = [
         (1, "web", "same text here"),
@@ -356,20 +348,14 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _force_reconstruction(spark):
+def _force_reconstruction():
     """Pin exact_percentiles to the RECONSTRUCTION regime: the r12
     distinct-count dispatch routes every small frame to the (trivially
     bit-equal) frequency-weighted percentile(), so suite-scale tests of
-    the reconstruction machinery must force it via the conf."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sampling import (
-        EXACT_PCT_MAX_DISTINCT_CONF,
-    )
-
-    spark.conf.set(EXACT_PCT_MAX_DISTINCT_CONF, "0")
-    try:
+    the reconstruction machinery force it by zeroing the distinct gate."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sampling, "_max_distinct", lambda n_pcts: 0)
         yield
-    finally:
-        spark.conf.unset(EXACT_PCT_MAX_DISTINCT_CONF)
 
 
 def test_exact_percentile_grid_bit_equal_to_spark_percentile(spark):
@@ -392,7 +378,7 @@ def test_exact_percentile_grid_bit_equal_to_spark_percentile(spark):
         n = rng.randrange(3, 50)
         xs = [rng.choice([rng.random(), round(rng.random(), 1)]) for _ in range(n)]
         cases.append(xs)
-    with _force_reconstruction(spark):
+    with _force_reconstruction():
         for gp in (5, 101):
             for xs in cases:
                 df = spark.createDataFrame([(x,) for x in xs], "score double")
@@ -407,7 +393,7 @@ def test_exact_percentile_grid_bit_equal_to_spark_percentile(spark):
     # default dispatch (frequency regime at this size) == forced recon
     df = spark.createDataFrame([(x,) for x in cases[-1]], "score double")
     default_grid = exact_percentile_grid(df, "score", 5).collect()[0]["grid"]
-    with _force_reconstruction(spark):
+    with _force_reconstruction():
         forced_grid = exact_percentile_grid(df, "score", 5).collect()[0]["grid"]
     assert list(default_grid) == list(forced_grid)
 
@@ -428,7 +414,7 @@ def test_exact_percentiles_global_null_parity(spark):
     )
     want = mixed.agg(F.expr("percentile(score, array(0.0, 0.25, 0.5, 0.75, 1.0))")).collect()[0][0]
     for forced in (False, True):
-        with _force_reconstruction(spark) if forced else nullcontext():
+        with _force_reconstruction() if forced else nullcontext():
             got = exact_percentile_grid(mixed, "score", 5).collect()[0]["grid"]
             assert list(got) == list(want), forced
             for frame in (
@@ -469,7 +455,7 @@ def test_exact_percentiles_grouped_bit_equal(spark):
     from contextlib import nullcontext
 
     for forced in (False, True):
-        with _force_reconstruction(spark) if forced else nullcontext():
+        with _force_reconstruction() if forced else nullcontext():
             got = {
                 r["g"]: list(r["pcts"]) if r["pcts"] is not None else None
                 for r in exact_percentiles(df, ["g"], "v", ps).collect()
@@ -478,15 +464,14 @@ def test_exact_percentiles_grouped_bit_equal(spark):
         assert got["allnull"] is None
 
 
-def test_exact_percentiles_high_cardinality_fallback(spark):
-    """Above spark.graft.exactPercentileMaxGroups the function must fall
+def test_exact_percentiles_high_cardinality_fallback(spark, monkeypatch):
+    """Above the group gate (``_max_groups``) the function must fall
     back to the vanilla frequency-weighted percentile() over the counts
     frame (parallel at high group cardinality — the probe broadcast is
     not), producing identical values, with a loud warning."""
     import warnings
 
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sampling import (
-        EXACT_PCT_MAX_GROUPS_CONF,
         exact_percentiles,
     )
 
@@ -494,22 +479,19 @@ def test_exact_percentiles_high_cardinality_fallback(spark):
     rows += [("g3", None), ("gnull", None)]
     df = spark.createDataFrame(rows, "g string, v double")
     ps = [0.25, 0.5, 0.75]
-    with _force_reconstruction(spark):
+    with _force_reconstruction():
         recon = {
             r["g"]: None if r["pcts"] is None else list(r["pcts"])
             for r in exact_percentiles(df, ["g"], "v", ps).collect()
         }
-    spark.conf.set(EXACT_PCT_MAX_GROUPS_CONF, "2")
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            fb = {
-                r["g"]: None if r["pcts"] is None else list(r["pcts"])
-                for r in exact_percentiles(df, ["g"], "v", ps).collect()
-            }
-        assert any("falling back" in str(w.message) for w in caught)
-    finally:
-        spark.conf.unset(EXACT_PCT_MAX_GROUPS_CONF)
+    monkeypatch.setattr(sampling, "_max_groups", lambda n_pcts: 2)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        fb = {
+            r["g"]: None if r["pcts"] is None else list(r["pcts"])
+            for r in exact_percentiles(df, ["g"], "v", ps).collect()
+        }
+    assert any("falling back" in str(w.message) for w in caught)
     assert fb == recon
     assert fb["gnull"] is None
 
@@ -545,7 +527,7 @@ def test_grouped_median_mad_bit_equal_to_f_median(spark):
     from contextlib import nullcontext
 
     for forced in (False, True):
-        with _force_reconstruction(spark) if forced else nullcontext():
+        with _force_reconstruction() if forced else nullcontext():
             got = {
                 r["g"]: (r["med"], r["mad"])
                 for r in grouped_median_mad(df, ["g"], "v").collect()
@@ -553,7 +535,7 @@ def test_grouped_median_mad_bit_equal_to_f_median(spark):
         assert got == want, forced
 
 
-def test_exact_percentiles_skewed_many_groups_regime(spark):
+def test_exact_percentiles_skewed_many_groups_regime(spark, monkeypatch):
     """BOTH gates tripped (many groups AND a skewed group over the
     distinct budget — r12 self-review): the frequency fallback would
     re-enter the single-reducer cliff, so the function must run the
@@ -562,8 +544,6 @@ def test_exact_percentiles_skewed_many_groups_regime(spark):
     import warnings
 
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sampling import (
-        EXACT_PCT_MAX_DISTINCT_CONF,
-        EXACT_PCT_MAX_GROUPS_CONF,
         exact_percentiles,
     )
 
@@ -579,15 +559,11 @@ def test_exact_percentiles_skewed_many_groups_regime(spark):
         .agg(F.expr(f"percentile(v, array({', '.join(repr(p) for p in ps)}))").alias("w"))
         .collect()
     }
-    spark.conf.set(EXACT_PCT_MAX_GROUPS_CONF, "2")      # 6 groups > 2
-    spark.conf.set(EXACT_PCT_MAX_DISTINCT_CONF, "10")   # g0's 40 > 10
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            res = exact_percentiles(df, ["g"], "v", ps)
-            got = {r["g"]: list(r["pcts"]) for r in res.collect()}
-        assert any("SHUFFLED" in str(w.message) for w in caught)
-    finally:
-        spark.conf.unset(EXACT_PCT_MAX_GROUPS_CONF)
-        spark.conf.unset(EXACT_PCT_MAX_DISTINCT_CONF)
+    monkeypatch.setattr(sampling, "_max_groups", lambda n_pcts: 2)      # 6 groups > 2
+    monkeypatch.setattr(sampling, "_max_distinct", lambda n_pcts: 10)  # g0's 40 > 10
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        res = exact_percentiles(df, ["g"], "v", ps)
+        got = {r["g"]: list(r["pcts"]) for r in res.collect()}
+    assert any("SHUFFLED" in str(w.message) for w in caught)
     assert got == want
