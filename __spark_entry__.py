@@ -2275,7 +2275,7 @@ def q_posts_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lexicon_enrich(raw: DataFrame) -> DataFrame:
     """The SQL-expressible enrich chain (works on batch AND streaming DFs):
-    enrich_posts minus the VADER UDF, score/label swapped to the lexicon
+    enrich_posts without its scorer, score/label swapped to the lexicon
     twin so DuckDB can hash-check it."""
     enriched = enrich_posts(raw, with_sentiment_udf=False)
     return enriched.withColumn(

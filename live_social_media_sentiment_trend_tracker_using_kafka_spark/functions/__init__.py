@@ -4,6 +4,7 @@ from .sentiment import (
     POS_WORDS,
     NEG_WORDS,
     sentiment_label_col,
+    sentiment_score_col,
     sentiment_score_pandas_udf,
     score_text,
     sql_lexicon_score_col,
@@ -20,6 +21,7 @@ __all__ = [
     "POS_WORDS",
     "NEG_WORDS",
     "sentiment_label_col",
+    "sentiment_score_col",
     "sentiment_score_pandas_udf",
     "score_text",
     "sql_lexicon_score_col",

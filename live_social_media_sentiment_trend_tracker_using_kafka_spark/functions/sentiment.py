@@ -4,9 +4,11 @@ The reference scores each post with VADER's compound score via a row-at-a-time
 Python UDF (reference: consumer/spark_streaming_job.py:14-25,39) and labels it
 with VADER's published ±0.05 thresholds (:27-36). Two upgrades here:
 
-1. The scorer is a **vectorized pandas UDF** (Arrow batches, not per-row
-   pickling) — the reference's BatchEvalPython boundary was its throughput
-   cliff (SURVEY.md §3.2).
+1. The scorer, ``sentiment_score_col``, is a **Catalyst expression** — the
+   reference's BatchEvalPython boundary was its throughput cliff (SURVEY.md
+   §3.2), and with no Python stage the enrichment plan starts no Python
+   workers. Only when the real ``vaderSentiment`` imports does it fall back to
+   a vectorized pandas UDF (Arrow batches, not per-row pickling).
 2. The label derivation is **pure Catalyst SQL** (``when/otherwise``) — no
    UDF at all, so it stays inside whole-stage codegen.
 
@@ -18,6 +20,17 @@ of output is identical (float in [-1, 1], same thresholds). When the real
 ``vaderSentiment`` package is importable we use it instead, preserving exact
 reference parity.
 
+The Catalyst scorer is bit-identical to ``vendored_score_text`` (pinned by a
+property test over every ``str.isspace`` character, the strip set,
+contractions, mixed case, ``İ`` and the Kelvin sign). Two engines still do
+parts of the work: Spark's ``lower`` lowercases where Python's ``str.lower``
+did, and the whitespace set is Python's, derived at import. They agree on
+every character that can lower into a lexicon word or negator (all ASCII;
+the Kelvin sign lowers to ``k`` in both, ``İ`` to ``i`` plus U+0307 in both),
+and U+200B, which is not whitespace in Python, splits in neither. No
+divergence is known; a character whose lowercase differs between the JVM's
+and Python's Unicode tables could only move a score if it lowered to ASCII.
+
 For oracle-checkable queries there is additionally ``sql_lexicon_score_col``:
 a *simpler* pure-SQL scorer (signed word-count ratio) expressible identically
 in Spark and DuckDB — integer-ratio arithmetic, so zero float drift between
@@ -27,6 +40,7 @@ engines.
 from __future__ import annotations
 
 import math
+import sys
 
 import pandas as pd
 from pyspark.sql import Column
@@ -71,6 +85,12 @@ _NEGATORS = {"not", "no", "never", "neither", "nor", "cannot", "cant", "dont",
              "doesnt", "didnt", "wont", "isnt", "wasnt", "arent", "werent"}
 _NEGATION_FLIP = -0.74  # VADER's published negation constant
 _ALPHA = 15.0  # VADER's published normalization constant
+# One strip set including '#': "(#love)" must shed BOTH the parens and the
+# hash (strip("#") first was a no-op when punctuation wrapped it).
+_STRIP = ".,!?;:'\"()[]#"
+# Every character Python's ``str.split()`` splits on, derived at import so
+# the Catalyst tokenizer can map each one to ' ' before a literal split.
+_WHITESPACE = "".join(filter(str.isspace, map(chr, range(sys.maxunicode + 1))))
 
 # Word lists for the pure-SQL (oracle-twin) scorer — subset chosen so the
 # same regex alternation runs identically under Java regex and RE2.
@@ -91,9 +111,7 @@ def vendored_score_text(text: str | None) -> float:
     real package)."""
     if text is None or not text.strip():
         return 0.0
-    # one strip set including '#': "(#love)" must shed BOTH the parens and
-    # the hash (strip("#") first was a no-op when punctuation wrapped it)
-    tokens = [t.strip(".,!?;:'\"()[]#") for t in text.lower().split()]
+    tokens = [t.strip(_STRIP) for t in text.lower().split()]
     s = 0.0
     prev_negated = False
     for tok in tokens:
@@ -107,6 +125,35 @@ def vendored_score_text(text: str | None) -> float:
     if s == 0.0:
         return 0.0
     return s / math.sqrt(s * s + _ALPHA)
+
+
+def _vendored_score_col(text: Column) -> Column:
+    """``vendored_score_text`` as one Catalyst expression, step for step:
+    lower, split on whitespace (dropping the empty strings ``split()`` never
+    yields, so they cannot reset negation), strip, then fold the tokens
+    carrying the running sum and the previous token's negation flag. The
+    normalization runs in ``aggregate``'s finish lambda so the fold is
+    evaluated once per row (written outside, each reference to the sum
+    re-evaluates the whole ``aggregate``)."""
+    spaced = F.translate(F.lower(text), _WHITESPACE, " " * len(_WHITESPACE))
+    tokens = F.transform(
+        F.filter(F.split(spaced, " "), lambda t: t != ""),
+        lambda t: F.btrim(t, F.lit(_STRIP)),
+    )
+    lexicon = F.create_map(*(F.lit(x) for kv in _LEXICON.items() for x in kv))
+
+    def step(acc: Column, tok: Column) -> Column:
+        flip = F.when(acc["neg"], F.lit(_NEGATION_FLIP)).otherwise(F.lit(1.0))
+        # isin is a hash-set probe; the map lookup it guards is a key scan
+        s = F.when(tok.isin(*_LEXICON), acc["s"] + lexicon[tok] * flip).otherwise(acc["s"])
+        neg = F.replace(tok, F.lit("'"), F.lit("")).isin(*sorted(_NEGATORS))
+        return F.struct(s.alias("s"), neg.alias("neg"))
+
+    def finish(acc: Column) -> Column:
+        return acc["s"] / F.sqrt(acc["s"] * acc["s"] + F.lit(_ALPHA))
+
+    init = F.struct(F.lit(0.0).alias("s"), F.lit(False).alias("neg"))
+    return F.coalesce(F.aggregate(tokens, init, step, finish), F.lit(0.0))
 
 
 def score_text(text: str | None) -> float:
@@ -127,7 +174,18 @@ def _score_series(texts: pd.Series) -> pd.Series:
 # DataType object (not DDL string) so the UDF can be defined without an
 # active SparkSession at import time.
 sentiment_score_pandas_udf = pandas_udf(_score_series, DoubleType())
-"""Arrow-vectorized sentiment scorer (the U1 upgrade, SURVEY.md §2.3)."""
+"""Arrow-vectorized scorer; ``sentiment_score_col`` uses it only for the
+real VADER."""
+
+
+def sentiment_score_col(text: Column) -> Column:
+    """The compound score of ``text`` as a column, null → 0.0: the real
+    VADER through the pandas UDF when it imports (as ``score_text``
+    dispatches), otherwise the vendored scorer as a Catalyst expression,
+    with no Python worker in the plan."""
+    if _VADER is not None:
+        return sentiment_score_pandas_udf(text)
+    return _vendored_score_col(text)
 
 
 def sentiment_label_col(score: Column) -> Column:

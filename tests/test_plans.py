@@ -1,7 +1,7 @@
 """Physical-plan assertions: the scale properties we designed for must be
 visible in the plan, not hoped for (broadcast joins on dim sides, parquet
-filter pushdown, no Python boundary in pure-SQL paths, Arrow — not pickle —
-for the one pandas UDF)."""
+filter pushdown, no Python boundary in pure-SQL paths or the sentiment
+scorer, Arrow — not pickle — for the pandas-UDF kernels)."""
 
 from __future__ import annotations
 
@@ -111,15 +111,32 @@ def test_window_query_partitions_not_global_sort(spark):
     assert_no_python_udf(df)
 
 
-def test_sentiment_udf_is_arrow_vectorized(spark):
+def test_sentiment_scorer_plan_has_no_python_stage(spark, tmp_path):
+    """Without the real vaderSentiment the scorer is one Catalyst
+    expression: neither the batch nor the streaming enrichment plan has a
+    Python stage, and the scorer's ``aggregate(`` appears once in the
+    optimized plan (each extra copy re-runs the whole fold per row). With
+    vaderSentiment the scorer is the Arrow-batched pandas UDF."""
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions import sentiment
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming.pipeline import (
+        enriched_file_stream,
+    )
+
     posts = spark.createDataFrame(
         [("great stuff", "u", "tw", 1, 1, 1, ("c", "co"), "2024-01-01 00:00:00")],
         POST_SCHEMA,
     )
     df = enrich_posts(posts, with_sentiment_udf=True)
-    plan = plan_text(df)
-    assert "ArrowEvalPython" in plan, plan       # pandas UDF (Arrow batches)
-    assert "BatchEvalPython" not in plan, plan   # not a pickled row-at-a-time UDF
+    if sentiment._VADER is not None:
+        plan = plan_text(df)
+        assert "ArrowEvalPython" in plan, plan       # pandas UDF (Arrow batches)
+        assert "BatchEvalPython" not in plan, plan   # not a pickled row-at-a-time UDF
+        return
+    stream = enriched_file_stream(spark, str(tmp_path), with_sentiment_udf=True)
+    for enriched in (df, stream):
+        assert_no_python_udf(enriched)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("aggregate(") == 1, optimized
 
 
 def test_aqe_enabled(spark):

@@ -7,13 +7,15 @@ runs Spark jobs — but each run explores fresh corners deterministically
 from __future__ import annotations
 
 import datetime as dt
+import struct
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings, HealthCheck, strategies as st
+from hypothesis import example, given, settings, HealthCheck, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions import sentiment
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.asof import asof_join
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.heavy_hitters import (
     heavy_hitters,
@@ -628,3 +630,49 @@ def test_quantile_normalize_matches_python_reference(spark, rows):
         want = round(grid[k] + frac * (grid[k2] - grid[k]), 6) + 0.0
         assert abs(out[i] - want) <= 1e-6, (i, out[i], want)
     assert set(out) == {i for i, _, _ in scored}
+
+
+# Texts for the scorer: tokens are lexicon words, negators and
+# contractions (plus İ and the Kelvin sign, which lower to two characters
+# and to ASCII 'k') in mixed case, wrapped in strip-set punctuation or made
+# of it alone ("not !!! good"), separated by runs of every str.isspace
+# character and U+200B, which is not whitespace.
+_SCORER_WORDS = st.sampled_from(
+    sorted(sentiment._LEXICON) + sorted(sentiment._NEGATORS)
+    + ["don't", "isn't", "can't", "won't", "'not'", "x", "İ", "İs", "\u212a", "li\u212ae", "\u212aool"]
+)
+_SCORER_PUNCT = st.text(alphabet=sentiment._STRIP, max_size=3)
+_SCORER_TOKEN = st.one_of(
+    st.builds(
+        lambda pre, word, caps, post: pre + "".join(
+            c.upper() if caps >> i & 1 else c for i, c in enumerate(word)) + post,
+        _SCORER_PUNCT, _SCORER_WORDS, st.integers(min_value=0, max_value=2**12), _SCORER_PUNCT,
+    ),
+    _SCORER_PUNCT.filter(bool),
+)
+_SCORER_SEP = st.text(alphabet=sorted(sentiment._WHITESPACE) + ["\u200b"], min_size=1, max_size=3)
+_SCORER_TEXT = st.one_of(
+    st.none(),
+    st.just(""),
+    st.builds(
+        lambda lead, toks: lead + "".join(t + sep for t, sep in toks),
+        st.text(alphabet=sorted(sentiment._WHITESPACE), max_size=2),
+        st.lists(st.tuples(_SCORER_TOKEN, _SCORER_SEP), max_size=8),
+    ),
+)
+
+
+@settings(**SETTINGS)
+@given(texts=st.lists(_SCORER_TEXT, min_size=1, max_size=40))
+@example(texts=[None, "", "not !!! good", "I don't like this", "(#love)", "NOT\u2003GOOD", "not\u200bgood"])
+def test_catalyst_scorer_bit_identical_to_python(spark, monkeypatch, texts):
+    """``sentiment_score_col`` over lowered text (as ``enrich_posts`` feeds
+    it) equals ``vendored_score_text`` bit for bit. ``_VADER`` is cleared so
+    the Catalyst path is the one under test on any image."""
+    monkeypatch.setattr(sentiment, "_VADER", None)
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    got = df.select("i", sentiment.sentiment_score_col(F.lower("text")).alias("s")).collect()
+    bits = lambda x: struct.pack("<d", x)
+    assert {r.i: bits(r.s) for r in got} == {
+        i: bits(sentiment.vendored_score_text(t)) for i, t in enumerate(texts)
+    }
