@@ -1161,16 +1161,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize.cohort_retention(_t(spark, sf_dir, "events"))
 
 
-def q_cohort_retention_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-hardened cohort triangle: identical semantics to
-    cohort_retention, but the user-day dedup runs as the two-stage salted
-    distinct (skew.salted_distinct, 16 buckets keyed off event_id) — the
-    100 TB path when one power user's same-day event count dwarfs a
-    reducer. Shares cohort_retention's oracle: the driver hash match IS
-    the machine-checked equivalence proof for the salted rewrite."""
-    return sessionize.cohort_retention(_t(spark, sf_dir, "events"), salt_buckets=16)
-
-
 def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day active users per day (the DAU/WAU family) without
     COUNT(DISTINCT) over a sliding frame: user-day dedup → per-user lag →
@@ -1264,9 +1254,9 @@ def q_value_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-health diagnostic on the events join/groupBy key: top-20
     heaviest user_ids with share-of-total and skew-vs-mean — the audit
-    that decides whether salting/AQE skew splitting is warranted. One
-    map-side-combinable count agg + a 1-row broadcast of totals +
-    TakeOrderedAndProject."""
+    that shows how much skew AQE's split and the partial aggregates
+    absorb. One map-side-combinable count agg + a 1-row broadcast of
+    totals + TakeOrderedAndProject."""
     return skew.key_skew_audit(_t(spark, sf_dir, "events"), ["user_id"])
 
 
@@ -1915,9 +1905,8 @@ def q_semantic_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (direction-identical → same cluster under the normalized assignment →
     cosine 1.0 pair) MUST all surface; random testdata vectors are
     near-orthogonal, so planted_pair=true rows are the entire expected
-    output. tests/test_query_contracts.py asserts the count and that
-    ``semantic_dedup`` drops exactly the twin ids. The cell assignment is
-    shared with q_knn_graph (_sem_capped_index)."""
+    output. tests/test_query_contracts.py asserts the count. The cell
+    assignment is shared with q_knn_graph (_sem_capped_index)."""
     pairs = similarity.semantic_near_duplicate_pairs(
         _sem_planted(spark, sf_dir),
         threshold=0.95,
@@ -3633,7 +3622,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_search": q_bm25_search,
         "bracket_revenue": q_bracket_revenue,
         "centroid_separation": q_centroid_separation,
-        "cohort_retention_salted": q_cohort_retention_salted,
         "corpus_attrition": q_corpus_attrition,
         "daily_new_vs_returning": q_daily_new_vs_returning,
         "dsir_importance_weights": q_dsir_importance_weights,
@@ -7301,10 +7289,6 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY source, doc_id
         """,
     }
-    # The salted cohort variant is semantics-preserving by construction —
-    # the SAME oracle verifies both plans, which is exactly the equivalence
-    # claim (skew.salted_distinct == plain distinct) driver-hash-proven.
-    oracles["cohort_retention_salted"] = oracles["cohort_retention"]
     # The streaming posts chain drains AvailableNow then normalizes in
     # batch — semantics-preserving by construction, so the SAME oracle
     # verifies both plans: the hash match IS the stream==batch proof.

@@ -140,7 +140,6 @@ HEADLINE = [
     "tokenizer_fertility",
     "embedding_coverage",
     "media_near_dups",
-    "cohort_retention_salted",
     "rolling_active_users",
     "last_touch_attribution",
     "dup_rate_by_source",

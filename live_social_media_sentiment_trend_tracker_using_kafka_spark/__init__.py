@@ -14,7 +14,7 @@ Layout:
                    relational, dedup, similarity, multimodal, normalize)
 - ``streaming``  — Structured Streaming pipeline (watermarked windowed aggs,
                    checkpointed sinks, foreachBatch fan-out)
-- ``plans``      — explain/plan-inspection helpers
+- ``plans``      — size-gated broadcast hints and plan-sized counts
 
 All operators take and return DataFrames, are usable in both batch and
 streaming mode where Spark allows, and are designed to scale: no driver-side

@@ -16,8 +16,9 @@ worst case of a missed release stays "slower", never "wrong".
 
 Memo contract (:func:`memo`): build-once artifacts a session reuses across
 DIFFERENT queries (a shared components table, the fixed query vector, a
-shared index) live in ONE in-process store keyed by the Spark application
-id, so nothing outlives the process or leaks into another session. A memo
+shared index, the pandas UDFs) live in ONE in-process store keyed by the
+Spark application id, so nothing outlives the process or leaks into another
+session — a UDF object binds the SparkContext it first runs in. A memo
 is kept only when two or more queries read it — a value that only one
 query reads can only hit on a repeat call of that query, which measures
 the repeat, not the work. Memos outlive :func:`trim`/:func:`release_all`;

@@ -29,14 +29,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from ..caching import memo
 from .fingerprint import HASH_BASE, HASH_MOD
 
-# pandas_udf parses its DDL return type against the ACTIVE session, so every
-# kernel is built lazily (first use, memoized) — a module-level decorator
-# would make importing this package require a live SparkContext.
-_CACHE: dict = {}
+# Every kernel is built on call, never at module scope: pandas_udf parses
+# its DDL return type against the active session, and a UDF binds the
+# SparkContext it first runs in, so one object reused by a later session
+# reports every task to the stopped context's accumulator server.
 
 
 def _stack_vectors(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -117,24 +119,25 @@ def make_winnow_udf(k: int = 8, window: int = 8):
     must already be ``fingerprint._normalize``-ed (JVM-side lower + strip),
     which guarantees pure [a-z0-9] ascii.
 
-    Memoized per (k, window): beyond the repeated-pickling cost, the shared
-    ``fingerprint_table`` relies on repeat calls building byte-identical
-    plans for cache substitution — returning the SAME udf object makes that
-    identity structural instead of depending on cloudpickle determinism.
+    Memoized per (application, k, window) through ``caching.memo``: beyond
+    the repeated-pickling cost, the shared ``fingerprint_table`` relies on
+    repeat calls building byte-identical plans for cache substitution —
+    returning the SAME udf object within a session makes that identity
+    structural instead of depending on cloudpickle determinism.
     """
-    key = ("winnow", k, window)
-    if key in _CACHE:
-        return _CACHE[key]
-    pow_mods = np.array(
-        [pow(HASH_BASE, k - 1 - j, HASH_MOD) for j in range(k)], dtype=np.int64
-    )
 
-    @pandas_udf("array<long>")
-    def winnow_from_norm(norm: pd.Series) -> pd.Series:
-        return norm.map(lambda s: _winnow_one(s or "", k, window, pow_mods))
+    def build():
+        pow_mods = np.array(
+            [pow(HASH_BASE, k - 1 - j, HASH_MOD) for j in range(k)], dtype=np.int64
+        )
 
-    _CACHE[key] = winnow_from_norm
-    return winnow_from_norm
+        @pandas_udf("array<long>")
+        def winnow_from_norm(norm: pd.Series) -> pd.Series:
+            return norm.map(lambda s: _winnow_one(s or "", k, window, pow_mods))
+
+        return winnow_from_norm
+
+    return memo(SparkSession.active(), ("winnow_udf", k, window), build)
 
 
 def pair_cosine_udf():
@@ -144,11 +147,13 @@ def pair_cosine_udf():
     one stacked (n, dim) matmul-style reduction per Arrow batch vs an
     interpreted zip_with+aggregate per row (~0.2 ms/pair — measured to
     dominate cosine_near_duplicate_pairs). Zero-norm inputs score 0.0,
-    matching vectors.cosine_similarity_col.
+    matching vectors.cosine_similarity_col. Memoized per application like
+    ``make_winnow_udf``.
     """
-    if "pair_cosine" in _CACHE:
-        return _CACHE["pair_cosine"]
+    return memo(SparkSession.active(), ("pair_cosine_udf",), _pair_cosine)
 
+
+def _pair_cosine():
     @pandas_udf("double")
     def pair_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
@@ -165,7 +170,6 @@ def pair_cosine_udf():
         out = np.where(valid, dots / np.where(denom > 0, denom, 1.0), 0.0)
         return pd.Series(out)
 
-    _CACHE["pair_cosine"] = pair_cosine
     return pair_cosine
 
 

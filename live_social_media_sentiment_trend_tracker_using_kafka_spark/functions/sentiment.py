@@ -43,10 +43,12 @@ import math
 import sys
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+from ..caching import memo
 
 try:  # exact reference parity when available
     from vaderSentiment.vaderSentiment import SentimentIntensityAnalyzer
@@ -171,11 +173,18 @@ def _score_series(texts: pd.Series) -> pd.Series:
     return texts.map(score_text).astype("float64")
 
 
-# DataType object (not DDL string) so the UDF can be defined without an
-# active SparkSession at import time.
-sentiment_score_pandas_udf = pandas_udf(_score_series, DoubleType())
-"""Arrow-vectorized scorer; ``sentiment_score_col`` uses it only for the
-real VADER."""
+def sentiment_score_pandas_udf(text: Column | str) -> Column:
+    """Arrow-vectorized scorer of ``text``; ``sentiment_score_col`` uses it
+    only for the real VADER. The UDF is built once per Spark application
+    (``caching.memo``): one built at import would bind the first
+    SparkContext, and every task in a later session would then log a
+    ``Failed to update accumulator`` error."""
+    udf = memo(
+        SparkSession.active(),
+        ("sentiment_udf",),
+        lambda: pandas_udf(_score_series, DoubleType()),
+    )
+    return udf(text)
 
 
 def sentiment_score_col(text: Column) -> Column:

@@ -130,15 +130,9 @@ def pii_count_cols(text: Column) -> dict[str, Column]:
     return counts
 
 
-# --- URL extraction ---------------------------------------------------------
+# --- URL domains ------------------------------------------------------------
 # Same Java-regex/RE2-compatible constraint as PII_RULES.
-URL_PATTERN = r"https?://[A-Za-z0-9.-]+(?:/[A-Za-z0-9._~:/?#@!$&'()*+,;=%-]*)?"
 DOMAIN_PATTERN = r"https?://([A-Za-z0-9.-]+)"
-
-
-def extract_urls_col(text: Column) -> Column:
-    """``array<string>`` of http(s) URLs found in the text."""
-    return F.regexp_extract_all(text, F.lit(URL_PATTERN), F.lit(0))
 
 
 def extract_domains_col(text: Column) -> Column:

@@ -1458,10 +1458,11 @@ def inverted_index(
     Skew containment is TWO-LEVEL on purpose: per-(term, salt) partial
     collect (salt = doc_id % n_salts) caps any single task's aggregation
     state at |hottest term| / n_salts, then the per-term merge flattens
-    at most n_salts × max_postings pre-capped rows — the same
-    salted-partial pattern as skew.salted_join, applied to collect_list.
-    A single-level ``collect_list`` per term would hold the hottest
-    term's ENTIRE posting list in one task. ``n_salts=None`` (default)
+    at most n_salts × max_postings pre-capped rows. AQE does not cover
+    this: a ``collect_list`` partial keeps every element, so unlike a count
+    or sum partial it does not shrink a hot key, and a single-level
+    ``collect_list`` per term would hold the hottest term's ENTIRE
+    posting list in one task. ``n_salts=None`` (default)
     scales the width with the corpus automatically: one salt per
     ``SALT_BYTES`` (64 MiB) of Catalyst's zero-job input size estimate,
     so the hottest term's per-task bound stays flat as the corpus grows

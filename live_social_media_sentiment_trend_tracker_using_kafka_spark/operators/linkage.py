@@ -23,8 +23,8 @@ Scale shape: one hash join on the block key (both sides shuffle on it —
 neither side is assumed broadcastable; AQE may still choose broadcast at
 runtime when a side is small), one hash aggregation on the dirty id. No
 window, no cross join; cost is driven entirely by block sizes, which the
-block-key contract bounds. For 100 TB registries add a salt column to
-the block key for known-hot blocks (same pattern as skew.salted_join).
+block-key contract bounds. An oversized block at 100 TB is split at run
+time by AQE's skew join (enabled in ``session.build_session``).
 
 Determinism: Levenshtein is exact; the best-match pick orders on
 (distance, clean_id), so replays and the DuckDB oracle (``levenshtein``)

@@ -190,9 +190,7 @@ def funnel_conversion(events: DataFrame) -> DataFrame:
     )
 
 
-def cohort_retention(
-    events: DataFrame, max_offset: int = 14, salt_buckets: int | None = None
-) -> DataFrame:
+def cohort_retention(events: DataFrame, max_offset: int = 14) -> DataFrame:
     """Cohort retention triangle: users grouped by first-activity day, then
     for each (cohort_day, day_offset ≤ ``max_offset``) the count of cohort
     members active that many days later.
@@ -204,23 +202,12 @@ def cohort_retention(
     (cohort, offset) aggregation) moves only user-day-sized tables,
     never the raw event count.
 
-    ``salt_buckets`` switches the user-day dedup to the two-stage salted
-    form (``skew.salted_distinct``, salt from the unique event_id) for the
-    power-user-key case at 100 TB: one bot user with billions of same-day
-    events would otherwise funnel through a single dedup reducer. Output
-    is identical either way (driver-hash-verified: both variants share one
-    oracle).
+    A power user with many same-day events does not funnel its raw rows
+    through one dedup reducer: the partial aggregate under the distinct
+    sends at most one row per (user, day) per map task, so the dedup needs
+    no salting.
     """
-    from ..caching import tracked_persist_shared
-    from .skew import salted_distinct
-
-    if salt_buckets:
-        user_days = events.select("user_id", _day().alias("day"), "event_id")
-        activity = tracked_persist_shared(
-            salted_distinct(user_days, ["user_id", "day"], salt_buckets, det_col="event_id")
-        )
-    else:
-        activity = user_day_activity(events)
+    activity = user_day_activity(events)
     first_day = activity.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     return (
         activity.join(first_day, "user_id")

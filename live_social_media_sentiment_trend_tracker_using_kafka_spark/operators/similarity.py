@@ -186,8 +186,8 @@ def ivf_index(
     per-iteration job scheduling, which dominated the old path: measured
     6.4 s → ~1 s at sf0.1). The ASSIGN is one narrow Arrow pass with the
     k×dim centroid matrix closed over (broadcast by value). At 100 TB the
-    assigned table is written ``partitionBy("cluster")`` (sources/writers.py)
-    so a probe reads only nprobe partitions.
+    assigned table is written ``partitionBy("cluster")`` so a probe reads
+    only nprobe partitions.
     """
     sample = (
         embeddings.select(vec_col)
@@ -660,7 +660,7 @@ def cap_cell_sizes(
        true same-pile pairs across salt buckets — the documented recall
        cost — but for identical piles any within-bucket neighbor is
        cosine-equivalent to any cross-bucket one, so top-k/keep-one
-       consumers (knn_graph, semantic_dedup) lose nothing semantically
+       consumers (knn_graph) lose nothing semantically
        while candidates stay bounded. Omit ``salt_col`` to keep exact
        within-cell pair semantics (and unbounded identical piles).
 
@@ -778,9 +778,9 @@ def semantic_near_duplicate_pairs(
     (post-rewrite the guard's value is per-task serialism and memory, not
     small-scale wall-clock — see PLANS.md). The salt can split a true
     near-dup pair across buckets (bounded recall cost, same family as the
-    cell boundaries); the downstream keep-one consumer (semantic_dedup)
-    then keeps ≤ #salt-buckets representatives of an identical pile
-    instead of exactly one.
+    cell boundaries); a keep-one rule over these pairs then keeps
+    ≤ #salt-buckets representatives of an identical pile instead of
+    exactly one.
     """
     import pandas as pd
 
@@ -832,24 +832,6 @@ def semantic_near_duplicate_pairs(
         .applyInPandas(cell_pairs, "id_a long, id_b long, cosine double")
         .orderBy("id_a", "id_b")
     )
-
-
-def semantic_dedup(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_clusters: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Keep-set of SemDeDup: drop the larger id of every semantic near-dup
-    pair (the same greedy deterministic keep-rule as the text cleaning
-    tiers, operators/pipeline.py — no connected-components iteration)."""
-    pairs = semantic_near_duplicate_pairs(
-        embeddings, threshold, n_clusters, id_col, vec_col, seed
-    )
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return embeddings.join(drop, id_col, "left_anti")
 
 
 def label_cosine_report(

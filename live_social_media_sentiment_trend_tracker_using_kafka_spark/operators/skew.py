@@ -1,30 +1,18 @@
-"""Skew-mitigation utilities: salted aggregation and salted joins.
+"""Skew audit and partitioning for CPU-bound per-row work.
 
-AQE's skew-join splitting (on in session.py) handles most runtime skew, but
-two shapes still need explicit salting at 100 TB:
-
-- **groupBy on a hot key** (one key = 10% of all rows): the partial/map-side
-  aggregate already compresses per-partition duplicates, but a single
-  reducer still receives the hot key's partial rows from every map task and,
-  worse, any *high-cardinality agg state* (collect_list/set, exact distinct)
-  concentrates on one task. ``salted_group_agg`` runs the same aggregation
-  in two stages over ``key × salt``.
-- **shuffle join against a hot key** when the other side is too big to
-  broadcast: AQE can split the hot partition only if both sides' matching
-  blocks can be replicated; pre-salting (``salted_join``) makes the
-  replication explicit — the big side scatters over ``salt`` buckets, the
-  other side is exploded ``salt``-fold so every bucket can join locally.
-
-Both transformations are semantics-preserving (tests assert equality with
-the unsalted plan); salt is a deterministic hash of a unique column when
-given (reproducible) or ``rand()`` otherwise.
+Runtime key skew is left to Spark: ``session.build_session`` enables AQE's
+skew-join split, which divides an oversized shuffle partition of a join with
+no per-query knob, and the partial ``HashAggregate`` Spark plans under every
+distinct, count, sum, min and max already sends a hot key at most one row
+per map task to its reducer. What stays here is the audit that shows whether
+a key is hot (``key_skew_audit``, ``concentration_deciles``) and
+``fan_out``, which spreads an under-partitioned input over the cores before
+per-row kernels run.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -46,123 +34,13 @@ def fan_out(df: DataFrame, min_factor: int = 1) -> DataFrame:
     return df
 
 
-def _salt_col(salt_buckets: int, det_col: str | None) -> Column:
-    if det_col is not None:
-        return F.pmod(F.xxhash64(F.col(det_col)), F.lit(salt_buckets)).cast("int")
-    return (F.rand(seed=7) * salt_buckets).cast("int")
-
-
-def salted_group_count(
-    df: DataFrame,
-    key_cols: list[str],
-    salt_buckets: int = 16,
-    det_col: str | None = None,
-) -> DataFrame:
-    """Two-stage count: groupBy(key, salt) → groupBy(key) sum.
-
-    Stage 1 spreads a hot key over ``salt_buckets`` reducers; stage 2
-    combines ``salt_buckets`` rows per key — negligible. Output equals
-    ``df.groupBy(*key_cols).count()``.
-    """
-    return (
-        df.withColumn("_salt", _salt_col(salt_buckets, det_col))
-        .groupBy(*key_cols, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-        .groupBy(*key_cols)
-        .agg(F.sum("_partial").alias("count"))
-    )
-
-
-def salted_group_agg(
-    df: DataFrame,
-    key_cols: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    salt_buckets: int = 16,
-    det_col: str | None = None,
-) -> DataFrame:
-    """General two-stage aggregation over a salted key.
-
-    ``partial_aggs`` run per (key, salt); ``final_aggs`` combine the partials
-    per key and must reference the partial alias names. Only works for
-    algebraic aggregates (sum/count/min/max, or avg decomposed as
-    sum+count) — exactly the ones whose state a hot key concentrates.
-    """
-    return (
-        df.withColumn("_salt", _salt_col(salt_buckets, det_col))
-        .groupBy(*key_cols, "_salt")
-        .agg(*partial_aggs)
-        .groupBy(*key_cols)
-        .agg(*final_aggs)
-    )
-
-
-def salted_distinct(
-    df: DataFrame,
-    cols: list[str],
-    salt_buckets: int = 16,
-    det_col: str | None = None,
-) -> DataFrame:
-    """Two-stage dedup of ``cols``: distinct(cols + salt) → distinct(cols).
-
-    The hot-key case for `.distinct()` at 100 TB: one power key (a bot
-    user's billions of same-day events) funnels every one of its rows
-    through a single reducer in the dedup shuffle. Stage 1 dedups on
-    (cols, salt) so the hot key's rows spread over ``salt_buckets``
-    reducers; stage 2 dedups the ≤ ``salt_buckets`` surviving rows per key
-    — a shuffle of (distinct × salt_buckets) rows at most, usually ~distinct.
-    ``det_col`` should vary WITHIN a (cols) group (e.g. the event id) so the
-    salt actually spreads the hot key; output equals
-    ``df.select(*cols).distinct()`` (asserted in tests/test_skew.py).
-    """
-    return (
-        df.withColumn("_salt", _salt_col(salt_buckets, det_col))
-        .select(*cols, "_salt")
-        .distinct()
-        .drop("_salt")
-        .distinct()
-    )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key_col: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-    det_col: str | None = None,
-) -> DataFrame:
-    """Equi-join where ``big``'s ``key_col`` is skewed and ``small`` is too
-    large to broadcast: big rows scatter over salt buckets, small rows
-    replicate into every bucket, the join runs on (key, salt).
-
-    Cost: ``small`` is shuffled ``salt_buckets``-fold — use the smallest
-    salt that flattens the hot partition. Output equals the plain join for
-    ``inner``/``left`` (big-side-preserving) joins ONLY: a small-side-
-    preserving join (right/full/anti/semi-on-small) would surface the
-    replicated small rows, so those modes are rejected.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got {how!r}: "
-            "the small side is replicated per salt bucket, so small-side-"
-            "preserving join modes would emit duplicate/spurious rows"
-        )
-    b = big.withColumn("_salt", _salt_col(salt_buckets, det_col))
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    out = b.join(s, [key_col, "_salt"], how)
-    return out.drop("_salt")
-
-
 def key_skew_audit(df: DataFrame, key_cols: list[str], k: int = 20) -> DataFrame:
     """Shuffle-health diagnostic: the top-``k`` heaviest keys with their
     share of all rows and their count relative to the mean key — the audit
-    a pipeline runs on a join/groupBy key BEFORE deciding whether
-    ``salted_group_agg`` / ``salted_join`` (above) or AQE skew splitting is
-    needed. ``skew_vs_mean`` ~ 1 means uniform; a key at 50 means one
-    reducer will receive 50 keys' worth of rows.
+    a pipeline runs on a join/groupBy key to see how much work AQE's skew
+    split and the map-side partial aggregates are absorbing.
+    ``skew_vs_mean`` ~ 1 means uniform; a key at 50 means one reducer will
+    receive 50 keys' worth of rows unless the plan splits or pre-combines it.
 
     Returns (key_cols..., n_rows, share, skew_vs_mean) ordered by n_rows
     desc with a key tiebreak.

@@ -1,60 +1,3 @@
-"""Plan-inspection helpers: assert the physical plan is the one we designed.
-
-Used by tests to enforce scale-readiness properties (broadcast joins where
-intended, pushed filters, no Python in pure-SQL paths) instead of hoping.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-
-
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")  # type: ignore[attr-defined]
-
-
-def plan_text(df: DataFrame) -> str:
-    """Formatted physical plan as a string (without printing)."""
-    try:
-        return formatted_plan(df)
-    except Exception:
-        # toString() is the universally-available fallback (explainString on
-        # the JVM QueryExecution takes an ExplainMode enum, not a string —
-        # calling it with "formatted" raises an unrelated Py4J error that
-        # would mask the original exception)
-        return df._jdf.queryExecution().toString()  # type: ignore[attr-defined]
-
-
-def assert_broadcast_join(df: DataFrame, expected: int = 1) -> None:
-    plan = plan_text(df)
-    found = plan.count("BroadcastHashJoin")
-    assert found >= expected, f"expected >= {expected} BroadcastHashJoin, plan:\n{plan}"
-
-
-def assert_pushed_filters(df: DataFrame) -> None:
-    """At least one scan must carry a NON-EMPTY PushedFilters list — the
-    previous before-the-split conjunct was a tautology that green-lit a
-    fully unfiltered scan."""
-    plan = plan_text(df)
-    segments = plan.split("PushedFilters: [")[1:]
-    assert segments, f"no PushedFilters entry in plan:\n{plan}"
-    assert any(not seg.lstrip().startswith("]") for seg in segments), (
-        f"every PushedFilters list is empty — nothing pushed to the source:\n{plan}"
-    )
-
-
-def count_plan_nodes(df: DataFrame, name: str) -> int:
-    """Count physical-plan nodes named exactly ``name`` via the formatted
-    plan's details section (lines like ``(12) Exchange``) — robust to tree
-    indentation/rendering, unlike counting ``+- <Name>`` prefixes, and
-    immune to substring collisions (``Exchange`` won't match
-    ``BroadcastExchange``, whose details line is ``(N) BroadcastExchange``)."""
-    import re
-
-    return len(re.findall(rf"^\(\d+\) {re.escape(name)}(?=\s|$)", plan_text(df), flags=re.M))
-
-
-def assert_no_python_udf(df: DataFrame) -> None:
-    plan = plan_text(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython"):
-        assert marker not in plan, f"unexpected Python boundary ({marker}) in plan:\n{plan}"
+"""Plan-level hints: ``hints`` holds the size-gated broadcast hint and the
+plan-sized parallelism count that operators read from Catalyst's
+plan-time size estimate."""

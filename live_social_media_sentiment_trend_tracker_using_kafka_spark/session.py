@@ -56,12 +56,6 @@ def build_session(
     return builder.getOrCreate()
 
 
-def local_test_session(cpus: int | None = None) -> SparkSession:
-    """Session for tests / bench: local[N] with N from $SPARK_GRAFT_CPUS."""
-    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or "*"
-    return build_session(master=f"local[{n}]")
-
-
 @contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
     """Set one session conf for the ``with`` body, then restore the

@@ -9,20 +9,18 @@ with Spark built-ins:
 - S5/S6 JSON-lines sink/scan                  → ``read_posts_json`` + parquet sinks
 - S7 multiline-JSON fixture scan              → ``read_posts_json(multiline=True)``
 - P14/P15 producer stamp + feed simulator     → ``feed`` module
-- driver testdata                             → ``load_tables`` / ``table``
+- testdata tables                             → ``table``
 """
 
 from .feed import assign_fixture_rows, feed_simulator, stamp_produce_time
 from .readers import (
     decode_json_value,
     kafka_stream,
-    load_tables,
     posts_file_stream,
     read_posts_json,
     table,
     write_kafka,
 )
-from .writers import compact, write_bucketed, write_partitioned
 
 __all__ = [
     "assign_fixture_rows",
@@ -30,12 +28,8 @@ __all__ = [
     "stamp_produce_time",
     "decode_json_value",
     "kafka_stream",
-    "load_tables",
     "posts_file_stream",
     "read_posts_json",
     "table",
     "write_kafka",
-    "compact",
-    "write_bucketed",
-    "write_partitioned",
 ]

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import POST_SCHEMA, TESTDATA_TABLES
+from ..schema import POST_SCHEMA
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -83,11 +83,6 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
     return normalize_ts(df)
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every testdata table; keys as in TESTDATA.md."""
-    return {name: table(spark, name, sf_dir) for name in TESTDATA_TABLES}
-
-
 def read_posts_json(spark: SparkSession, path: str, multiline: bool = False) -> DataFrame:
     """Batch scan of JSON post files with the canonical typed schema.
 
@@ -106,46 +101,6 @@ def read_posts_json(spark: SparkSession, path: str, multiline: bool = False) -> 
     if multiline:
         reader = reader.option("multiLine", True)
     return reader.json(path)
-
-
-def read_posts_csv(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
-    """Batch scan of CSV post exports, returning the SAME canonical typed
-    shape as the JSON reader — format breadth beyond the reference's
-    JSON/Kafka surface (spreadsheet exports are how ops teams actually
-    hand data over).
-
-    CSV cannot hold POST_SCHEMA's nested ``location`` struct, so the
-    file contract is the flat export (``location_city``/
-    ``location_country`` columns) and the struct reassembles on read.
-    The explicit flat schema keeps the scan single-pass (no inferSchema
-    double read — an anti-pattern at 100 TB) and splittable; malformed
-    lines null out under the default PERMISSIVE mode exactly like the
-    JSON reader.
-    """
-    from pyspark.sql import types as T
-
-    flat = T.StructType()
-    for f in POST_SCHEMA.fields:
-        if isinstance(f.dataType, T.StructType):
-            for sub in f.dataType.fields:
-                flat.add(f"{f.name}_{sub.name}", sub.dataType, True)
-        else:
-            flat.add(f.name, f.dataType, True)
-    df = spark.read.schema(flat).option("header", header).csv(path)
-    cols = []
-    for f in POST_SCHEMA.fields:
-        if isinstance(f.dataType, T.StructType):
-            cols.append(
-                F.struct(
-                    *[
-                        F.col(f"{f.name}_{sub.name}").alias(sub.name)
-                        for sub in f.dataType.fields
-                    ]
-                ).alias(f.name)
-            )
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
 
 
 def posts_file_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:

@@ -9,7 +9,6 @@ from .pipeline import (
     interval_join_streams,
     run_available_now_to_memory,
     run_update_sink_to_parquet,
-    session_window_stats,
     start_console_sink,
     start_file_sink,
     windowed_hashtag_counts,
@@ -18,19 +17,17 @@ from .pipeline import (
     windowed_sentiment_counts,
 )
 from .monitor import monitor_streams, stop_all_streams
-from .stateful import dedup_stream, running_user_stats
+from .stateful import dedup_stream
 
 __all__ = [
     "await_drain",
     "dedup_stream",
-    "running_user_stats",
     "enriched_file_stream",
     "enriched_kafka_stream",
     "fan_out_sinks",
     "interval_join_streams",
     "run_available_now_to_memory",
     "run_update_sink_to_parquet",
-    "session_window_stats",
     "start_console_sink",
     "start_file_sink",
     "windowed_hashtag_counts",

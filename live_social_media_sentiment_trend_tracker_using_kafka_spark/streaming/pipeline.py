@@ -169,40 +169,6 @@ def windowed_hashtag_counts(
     )
 
 
-def session_window_stats(
-    enriched: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = DEFAULT_WATERMARK,
-    ts_col: str = "event_ts",
-    key_col: str = "user",
-) -> DataFrame:
-    """Gap-based session windows per key — the streaming twin of the batch
-    sessionization in operators/sessionize.py (which builds sessions with a
-    lag-window cumulative sum).
-
-    ``F.session_window`` keeps one open window per key in the state store;
-    a session closes (and emits) once the watermark passes its end + gap.
-    State is bounded by |active keys|, not history — the scale-correct
-    replacement for batch re-sessionizing ever-growing history.
-    ``watermark=None`` = upstream already watermarked.
-    """
-    wm = enriched if watermark is None else enriched.withWatermark(ts_col, watermark)
-    return (
-        wm.groupBy(F.session_window(ts_col, gap), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("likes"), 2).alias("total_likes"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            F.col(key_col),
-            "n_events",
-            "total_likes",
-        )
-    )
-
-
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,

@@ -7,15 +7,15 @@ primitives a production feed pipeline needs:
   Spark's native ``dropDuplicatesWithinWatermark`` (state is evicted once
   the watermark passes, so it scales to unbounded streams; a plain
   ``dropDuplicates`` on a stream would grow state forever).
-- ``running_user_stats``: arbitrary per-key state via
+- ``running_user_value_stats``: arbitrary per-key state via
   ``applyInPandasWithState`` — the escape hatch for stateful logic the
   built-in operators can't express (here: a cumulative per-user event
   counter + running value sum that emits an updated row per key per
-  micro-batch, with a state TTL).
+  micro-batch).
 
 Scale notes: both shuffle once on the key and keep per-key state in the
-state store (RocksDB-backed on a real cluster); watermark/TTL bound the
-store size. The pandas state function receives Arrow batches per key —
+state store (RocksDB-backed on a real cluster); the watermark bounds the
+dedup store. The pandas state function receives Arrow batches per key —
 no per-row Python overhead.
 """
 
@@ -27,21 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-USER_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("user", T.StringType(), False),
-        T.StructField("n_events", T.LongType(), False),
-        T.StructField("total_likes", T.LongType(), False),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_events", T.LongType(), False),
-        T.StructField("total_likes", T.LongType(), False),
-    ]
-)
 
 
 def dedup_stream(
@@ -56,55 +41,6 @@ def dedup_stream(
     bounded memory on an unbounded stream (the semantics LLM-feed ingestion
     wants: replays/retries deduped, ancient re-sends accepted as new)."""
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def _make_update_fn(ttl_ms: int | None):
-    def update(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        # A timed-out invocation (empty batch, fired by the TTL timer) must
-        # EVICT: re-storing state and re-arming the timer here would grow
-        # the store forever and re-emit an unchanged row every TTL interval
-        # — the opposite of what the TTL exists for.
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, likes = state.get if state.exists else (0, 0)
-        for pdf in batches:
-            n += len(pdf)
-            likes += int(pdf["likes"].fillna(0).sum())
-        state.update((n, likes))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame({"user": [user], "n_events": [n], "total_likes": [likes]})
-
-    return update
-
-
-def running_user_stats(posts: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """Cumulative per-user post count + like sum, one updated row per user
-    per micro-batch (applyInPandasWithState).
-
-    ``ttl_ms`` sets a processing-time state TTL — the bounded-state choice
-    for a long-running production deployment (inactive keys evicted). It is
-    None by default because pending processing-time timers keep a
-    Trigger.AvailableNow run alive past its data (it blocks until the await
-    times out), which is exactly wrong for drain-style/test runs.
-    """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None else GroupStateTimeout.NoTimeout
-    )
-    return (
-        posts.groupBy("user")
-        .applyInPandasWithState(
-            _make_update_fn(ttl_ms),
-            outputStructType=USER_STATS_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
-    )
 
 
 RUNNING_VALUE_SCHEMA = T.StructType(
@@ -126,8 +62,7 @@ _VALUE_STATE_SCHEMA = T.StructType(
 def running_user_value_stats(events: DataFrame) -> DataFrame:
     """Cumulative per-user event count + value sum over the generic events
     stream — the ``applyInPandasWithState`` escape hatch exercised on the
-    driver testdata (the posts variant above mirrors the reference's
-    schema). One updated row per key per micro-batch; under a single
+    events testdata. One updated row per key per micro-batch; under a single
     AvailableNow batch the output equals the batch aggregate, which is what
     lets the driver hash-check the custom-stateful API end to end."""
 

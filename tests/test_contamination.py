@@ -121,7 +121,7 @@ def test_bloom_fp_rate_within_budget(spark):
 
 def test_bloom_query_contract_is_jvm_side(spark):
     import __spark_entry__ as entrymod
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import (
+    from plan_util import (
         assert_no_python_udf,
         plan_text,
     )

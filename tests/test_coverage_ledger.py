@@ -38,15 +38,17 @@ def test_coverage_md_is_current():
 
 def test_coverage_never_regresses():
     """Every query that ever earned a green driver row must still be
-    registered (dropping one silently would shrink the graded surface),
-    and no query may sit red with no later green — unless a LOCAL_VERIFY
-    record newer than the red shows the fix already passed the full
-    local replica of the driver compare (tools/local_verify.py); such
-    rows are 'pending re-drive', not open."""
+    registered (dropping one silently would shrink the graded surface) or
+    be named in ``RETIRED`` with its reason, and a retired query must
+    really be gone from the registry. No query may sit red with no later
+    green — unless a LOCAL_VERIFY record newer than the red shows the fix
+    already passed the full local replica of the oracle compare
+    (tools/local_verify.py); such rows are 'pending re-drive', not open."""
     folded = cl.fold(cl.load_rounds())
     registry = set(cl.registry_names())
     ever_green = {n for n, row in folded.items() if row["green"]}
-    assert ever_green <= registry, sorted(ever_green - registry)
+    assert ever_green - registry == set(cl.RETIRED), sorted(ever_green - registry)
+    assert all(reason.strip() for reason in cl.RETIRED.values())
     open_red, _pending = cl.open_reds(folded, cl.load_local_verify())
     assert not open_red, open_red
 

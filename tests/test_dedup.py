@@ -144,7 +144,8 @@ def test_simhash_identical_iff_same_tokens(spark):
         [(1, "hello world foo"), (2, "hello   WORLD?! foo"), (3, "totally different words here")],
         ["doc_id", "text"],
     )
-    rows = {r.doc_id: r.s for r in df.select("doc_id", dedup.simhash_col(F.col("text")).alias("s")).collect()}
+    sig = dedup.simhash_from_tokens_col(dedup._tokens(F.col("text")))
+    rows = {r.doc_id: r.s for r in df.select("doc_id", sig.alias("s")).collect()}
     assert rows[1] == rows[2]  # same token multiset after normalization
     assert rows[1] != rows[3]
     assert all(s >= 0 for s in rows.values())  # sign bit kept clear

@@ -187,9 +187,7 @@ def test_media_local_tables_survive_plain_session_conf(spark):
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
         multimodal,
     )
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import (
-        plan_text,
-    )
+    from plan_util import plan_text
 
     foreign = spark.newSession()
     foreign.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")

@@ -129,3 +129,49 @@ def test_dim_guard_raises_on_misconfigured_dim(spark):
     # all-null batch still falls back to the null semantics (all zeros)
     out = udf_fn(pd.Series([None, None], dtype=object))
     assert out.tolist() == [0.0, 0.0]
+
+
+def test_udfs_rebuilt_per_session_log_no_accumulator_errors():
+    """A pandas UDF binds the SparkContext it first runs in. Built once per
+    process, it makes every task of a later session report to the stopped
+    context's accumulator server, which logs a ``Failed to update
+    accumulator`` stack trace per task. The kernels and the pandas scorer
+    are built per application, so a second session runs them cleanly. The
+    JVM lives for the whole process, so this runs in a subprocess."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions import (
+    fingerprint, kernels, sentiment,
+)
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.session import build_session
+
+for run in range(2):
+    spark = build_session(master="local[2]", extra_conf={{"spark.ui.enabled": "false"}})
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps", [1.0, 2.0]), (2, "a lazy dog sleeps all day", [2.0, 1.0])],
+        "id int, text string, v array<float>",
+    )
+    rows = df.select(
+        kernels.make_winnow_udf()(fingerprint._normalize(F.col("text"))).alias("w"),
+        kernels.pair_cosine_udf()(F.col("v"), F.col("v")).alias("c"),
+        sentiment.sentiment_score_pandas_udf(F.col("text")).alias("s"),
+    ).collect()
+    assert len(rows) == 2 and all(abs(r.c - 1.0) < 1e-9 for r in rows), rows
+    spark.stop()
+print("TWO_SESSIONS_OK")
+"""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=600
+    )
+    assert "TWO_SESSIONS_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+    bad = [ln for ln in out.stderr.splitlines() if "Failed to update accumulator" in ln]
+    assert not bad, bad[:3]

@@ -9,13 +9,13 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.enrich import enrich_posts
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import (
+from plan_util import (
     assert_broadcast_join,
     assert_no_python_udf,
     count_plan_nodes,
-    hints,
     plan_text,
 )
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import hints
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans.hints import (
     broadcast_dim,
     estimated_plan_bytes,
@@ -64,8 +64,6 @@ def test_analytics_paths_stay_jvm_side(spark):
 def test_arrow_kernels_are_vectorized_not_rowwise(spark):
     """Kernel queries must cross into Python ONLY via ArrowEvalPython
     (vectorized batches) — a row-at-a-time BatchEvalPython is a regression."""
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import plan_text
-
     for name in ("winnow_fingerprints", "cosine_near_dups", "ivf_topk",
                  "ann_search_join"):
         plan = plan_text(entrymod.queries()[name](spark, SF))
@@ -341,7 +339,6 @@ def test_r5_queries_stay_jvm_side_and_bounded_exchanges(spark):
         "rolling_active_users": 3,
         "last_touch_attribution": 2,
         "dup_rate_by_source": 3,
-        "cohort_retention_salted": 5,  # salted dedup adds ONE extra narrow stage
     }
     for name, max_hash in budget.items():
         df = qs[name](spark, SF_SMOKE)

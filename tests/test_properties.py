@@ -20,9 +20,6 @@ from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.asof 
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.heavy_hitters import (
     heavy_hitters,
 )
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.skew import (
-    salted_group_count,
-)
 
 SETTINGS = dict(
     max_examples=8,
@@ -87,22 +84,6 @@ def test_heavy_hitters_matches_exact(spark, items, phi_pct):
     counts = pd.Series(items).value_counts()
     thresh = -(-phi * len(items) // 1)  # ceil
     want = {(k, int(v)) for k, v in counts.items() if v >= thresh}
-    assert got == want
-
-
-@settings(**SETTINGS)
-@given(
-    rows=st.lists(st.tuples(st.sampled_from("xyz"), st.integers(0, 999)),
-                  min_size=1, max_size=40),
-    buckets=st.integers(min_value=1, max_value=8),
-)
-def test_salted_count_matches_plain(spark, rows, buckets):
-    df = spark.createDataFrame(rows, ["k", "v"])
-    got = {
-        (r.k, r["count"])
-        for r in salted_group_count(df, ["k"], salt_buckets=buckets, det_col="v").collect()
-    }
-    want = {(r.k, r["count"]) for r in df.groupBy("k").count().collect()}
     assert got == want
 
 

@@ -12,7 +12,7 @@ from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.range
     auto_bucket_seconds,
     bucketed_range_join,
 )
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import plan_text
+from plan_util import plan_text
 
 
 def _facts(spark, rows):

@@ -135,22 +135,6 @@ def test_lone_problem_suppliers_semantics_and_plan(spark):
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan
 
 
-def test_cohort_retention_salted_equals_plain(spark):
-    import random
-
-    rng = random.Random(5)
-    rows = [
-        (f"u{rng.randrange(6)}", "view", _ts(1 + rng.randrange(20), rng.randrange(24)))
-        for _ in range(300)
-    ]
-    # hot key: one user, one day, many events — the case salting spreads
-    rows += [("hot", "click", _ts(3, h % 24)) for h in range(200)]
-    ev = _events(spark, rows)
-    plain = sorted(map(tuple, cohort_retention(ev).collect()))
-    salted = sorted(map(tuple, cohort_retention(ev, salt_buckets=16).collect()))
-    assert plain == salted and plain
-
-
 def test_rolling_active_users_window_semantics(spark):
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sessionize import (
         rolling_active_users,

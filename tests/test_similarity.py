@@ -351,7 +351,7 @@ def test_ivf_probe_joins_assign_each_corpus_row_once(spark):
 
     from pyspark.sql import functions as F
 
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import plan_text
+    from plan_util import plan_text
 
     df, _ = _fixture(spark)
     queries = df.filter(F.col("vec_id") < 3).select(

@@ -1,114 +1,8 @@
-"""Salted aggregation/join equivalence: the skew transformations must be
-invisible in the results, and the salted plan must actually spread the hot
-key (asserted on the salt column's distribution, and on plan shape)."""
+"""Skew audit: ``key_skew_audit`` and ``concentration_deciles`` report the
+hot keys and the concentration that AQE's skew split and the map-side
+partial aggregates absorb."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.skew import (
-    salted_group_agg,
-    salted_group_count,
-    salted_join,
-)
-
-
-def _skewed(spark):
-    # key "hot" holds 90% of rows
-    hot = spark.range(900).select(
-        F.lit("hot").alias("k"), F.col("id").alias("v")
-    )
-    rest = spark.range(100).select(
-        F.concat(F.lit("k"), (F.col("id") % 10).cast("string")).alias("k"),
-        F.col("id").alias("v"),
-    )
-    return hot.unionAll(rest)
-
-
-def test_salted_group_count_equals_plain(spark):
-    df = _skewed(spark)
-    got = {r.k: r["count"] for r in salted_group_count(df, ["k"], det_col="v").collect()}
-    want = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
-    assert got == want
-
-
-def test_salted_group_agg_sum_avg(spark):
-    df = _skewed(spark)
-    got = salted_group_agg(
-        df,
-        ["k"],
-        partial_aggs=[F.sum("v").alias("_s"), F.count(F.lit(1)).alias("_c")],
-        final_aggs=[
-            F.sum("_s").alias("total"),
-            (F.sum("_s") / F.sum("_c")).alias("mean"),
-        ],
-        det_col="v",
-    )
-    want = df.groupBy("k").agg(
-        F.sum("v").alias("total"), F.avg("v").alias("mean")
-    )
-    g = {r.k: (r.total, round(r.mean, 9)) for r in got.collect()}
-    w = {r.k: (r.total, round(r.mean, 9)) for r in want.collect()}
-    assert g == w
-
-
-def test_salt_actually_spreads_hot_key(spark):
-    df = _skewed(spark)
-    n_buckets = (
-        df.withColumn("_salt", F.pmod(F.xxhash64("v"), F.lit(16)).cast("int"))
-        .filter(F.col("k") == "hot")
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert n_buckets == 16
-
-
-def test_salted_join_equals_plain(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame(
-        [("hot", 1.5)] + [(f"k{i}", float(i)) for i in range(10)], ["k", "w"]
-    )
-    got = salted_join(big, small, "k", salt_buckets=4, det_col="v")
-    want = big.join(small, "k")
-    assert got.count() == want.count() == 1000
-    g = sorted((r.k, r.v, r.w) for r in got.collect())
-    w = sorted((r.k, r.v, r.w) for r in want.collect())
-    assert g == w
-
-
-def test_salted_join_rejects_small_side_preserving_modes(spark):
-    import pytest
-
-    big = _skewed(spark)
-    small = spark.createDataFrame([("hot", 1.5)], ["k", "w"])
-    # right/full/anti would surface the salt-replicated small rows
-    for how in ("right", "full", "left_anti", "left_semi"):
-        with pytest.raises(ValueError):
-            salted_join(big, small, "k", how=how)
-
-
-def test_salted_join_left_outer(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame([("hot", 1.5)], ["k", "w"])
-    got = salted_join(big, small, "k", salt_buckets=4, how="left", det_col="v")
-    assert got.count() == 1000
-    assert got.filter(F.col("w").isNull()).count() == 100
-
-
-def test_salted_distinct_equals_plain(spark):
-    df = _skewed(spark)  # 100 'hot' + 900 spread keys, v unique per row
-    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.skew import (
-        salted_distinct,
-    )
-
-    got = sorted(r.k for r in salted_distinct(df, ["k"], 8, det_col="v").collect())
-    want = sorted(r.k for r in df.select("k").distinct().collect())
-    assert got == want
-    # multi-column dedup keeps per-key multiplicity 1
-    got2 = salted_distinct(df, ["k", "v"], 8, det_col="v")
-    assert got2.count() == df.select("k", "v").distinct().count()
-    assert got2.columns == ["k", "v"]
 
 
 def test_key_skew_audit_hand_computed(spark):

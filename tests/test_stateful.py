@@ -16,7 +16,6 @@ from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming impor
 )
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming.stateful import (
     dedup_stream,
-    running_user_stats,
 )
 
 
@@ -52,18 +51,3 @@ def test_dedup_stream_drops_cross_batch_duplicates(spark, two_batches):
     # u1 appears 3 times across both batches -> kept once
     assert users == ["u1", "u2", "u3"]
 
-
-def test_running_user_stats_accumulates_across_batches(spark, two_batches):
-    stats = running_user_stats(_stream(spark, two_batches))
-    out = run_available_now_to_memory(stats, spark, output_mode="update")
-    # update mode memory sink appends one row per key per batch; the LAST row
-    # per user carries the cumulative state
-    rows = out.collect()
-    last = {}
-    for r in rows:  # memory sink preserves batch order
-        last[r.user] = (r.n_events, r.total_likes)
-    assert last["u1"] == (3, 12)   # 2 events (5 likes) then +1 event (+7)
-    assert last["u2"] == (1, 5)
-    assert last["u3"] == (1, 11)
-    # u1 must have been emitted in both batches (state carried forward)
-    assert sum(1 for r in rows if r.user == "u1") == 2

@@ -12,12 +12,13 @@ from pyspark.sql import functions as F
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.enrich import enrich_posts
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.sources.readers import read_posts_json
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.streaming import (
+    await_drain,
     enriched_file_stream,
     fan_out_sinks,
     interval_join_streams,
     run_available_now_to_memory,
     run_update_sink_to_parquet,
-    session_window_stats,
+    start_file_sink,
     stop_all_streams,
     windowed_platform_stats,
     windowed_sentiment_counts,
@@ -103,47 +104,29 @@ def test_windowed_platform_stats_sliding(spark, posts_dir):
     assert tw and all(r["avg_likes"] is not None for r in tw)
 
 
-def test_session_window_stats_match_batch(spark, posts_dir):
-    """Streaming gap-sessions equal the same session_window agg run in batch.
+def test_file_sink_restart_commits_each_valid_post_once(spark, tmp_path):
+    """The checkpointed parquet sink drains a posts directory; after one more
+    file lands (a valid post and a malformed line), a restart on the same
+    checkpoint commits only that file, so each valid post is read back
+    exactly once and the malformed line is dropped. The restart takes more
+    files per trigger: its source offsets, not a batch numbering that
+    happens to repeat, must decide what is new."""
+    src, out, ckpt = tmp_path / "posts", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    src.mkdir()
+    (src / "part-0001.json").write_text("\n".join(json.dumps(p) for p in POSTS[:3]))
+    (src / "part-0002.json").write_text("\n".join(json.dumps(p) for p in POSTS[3:]))
 
-    With a 1-minute gap the fixture's per-user timestamps are single-event
-    sessions; a tighter multi-event check is in the batch twin below."""
-    stream = session_window_stats(
-        enriched_file_stream(spark, posts_dir, with_sentiment_udf=False), gap="1 minute"
-    )
-    got = run_available_now_to_memory(stream, spark, output_mode="complete")
-    batch = enrich_posts(read_posts_json(spark, posts_dir), with_sentiment_udf=False)
-    want = (
-        batch.groupBy(F.session_window("event_ts", "1 minute"), "user")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("likes"), 2).alias("total_likes"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user", "n_events", "total_likes",
+    def drain_and_read_users(files_per_trigger):
+        stream = enriched_file_stream(
+            spark, str(src), with_sentiment_udf=False, max_files_per_trigger=files_per_trigger
         )
-    )
-    key = lambda r: (r["user"], r["session_start"])
-    assert sorted(map(lambda r: r.asDict(), got.collect()), key=lambda d: (d["user"], d["session_start"])) == \
-        sorted(map(lambda r: r.asDict(), want.collect()), key=lambda d: (d["user"], d["session_start"]))
-    assert got.count() == 4  # one surviving session per non-filtered user
+        await_drain(start_file_sink(stream, out, ckpt, available_now=True))
+        return sorted(r.user for r in spark.read.parquet(out).select("user").collect())
 
-
-def test_session_window_merges_events_within_gap(spark, tmp_path):
-    """Two events 30 s apart with a 1-minute gap merge into ONE session whose
-    end extends gap past the last event."""
-    p = dict(POSTS[0])
-    p2 = dict(POSTS[0], timestamp="2024-01-01 10:00:40", likes=3)
-    d = tmp_path / "sess"
-    d.mkdir()
-    (d / "f.json").write_text("\n".join(json.dumps(x) for x in [p, p2]))
-    stream = session_window_stats(
-        enriched_file_stream(spark, str(d), with_sentiment_udf=False), gap="1 minute"
-    )
-    rows = run_available_now_to_memory(stream, spark, output_mode="complete").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["n_events"] == 2 and r["total_likes"] == 8.0
-    assert (r["session_end"] - r["session_start"]).total_seconds() == 30 + 60
+    assert drain_and_read_users(1) == ["a", "b", "d", "e"]
+    late = dict(POSTS[0], user="f", text="fresh post #new", timestamp="2024-01-01 10:03:00")
+    (src / "part-0003.json").write_text(json.dumps(late) + "\n{not json\n")
+    assert drain_and_read_users(8) == ["a", "b", "d", "e", "f"]
 
 
 def test_fan_out_single_query_two_sinks(spark, posts_dir, tmp_path):

@@ -126,18 +126,15 @@ def test_repetition_stats_golden(spark):
 def test_url_and_domain_extraction(spark):
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions.text import (
         extract_domains_col,
-        extract_urls_col,
     )
 
     text = (
         "read https://Docs.Example.org/a/b?q=1 and http://cdn.example.net "
         "but not ftp://old.example.com nor plain example.org"
     )
-    urls = _one(spark, text, extract_urls_col(F.col("text")))
-    assert urls == ["https://Docs.Example.org/a/b?q=1", "http://cdn.example.net"]
     domains = _one(spark, text, extract_domains_col(F.col("text")))
     assert domains == ["docs.example.org", "cdn.example.net"]
-    assert _one(spark, "no links here", extract_urls_col(F.col("text"))) == []
+    assert _one(spark, "no links here", extract_domains_col(F.col("text"))) == []
 
 
 def test_clean_text_col_goldens(spark):
