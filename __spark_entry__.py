@@ -814,8 +814,8 @@ def q_discount_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_order_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-value decile bands per market segment via tie-stable
     cume_dist (row_number/ntile tie assignment is engine-dependent;
-    cume_dist is not). Broadcast segment dim; one per-segment window
-    exchange; |segments|x|bands| rollup."""
+    cume_dist is not). Unhinted segment-dim join (AQE picks broadcast or
+    shuffle); distributed cume_dist; |segments|x|bands| rollup."""
     return relational.order_value_percentile_bands(
         _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "customer")
     )
@@ -1096,7 +1096,7 @@ def _with_exact_topk_flag(approx: DataFrame, exact: DataFrame) -> DataFrame:
     driver's rows-only record shows recall@k directly (sum of the flag ÷ k)
     instead of just "ran". The exact side is k rows — broadcast."""
     return (
-        approx.join(F.broadcast(exact), "vec_id", "left")
+        approx.join(exact, "vec_id", "left")
         .withColumn("in_exact_topk", F.coalesce("in_exact_topk", F.lit(False)))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
     )
@@ -2014,7 +2014,7 @@ def q_range_join_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins = (
         spark.range(0, 56)
         .withColumnRenamed("id", "window_id")
-        .join(F.broadcast(t0))
+        .join(t0)
         .select(
             "window_id",
             F.expr("t0 + window_id * INTERVAL '13' HOUR").alias("lo"),
@@ -2439,8 +2439,8 @@ def q_epoch_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 embedding-level decontamination
     (similarity.semantic_decontaminate): flag corpus vectors within
-    cosine 0.95 of ANY benchmark vector via the cell-pruned broadcast
-    probe join — the semantic tier above the n-gram/Bloom decontamination
+    cosine 0.95 of ANY benchmark vector via the cell-pruned probe join —
+    the semantic tier above the n-gram/Bloom decontamination
     family, catching paraphrased eval leakage token overlap misses.
     Benchmark = a BOUNDED eval set (every-20th embedding with vec_id <
     1000 — ≤50 items at ANY scale factor, the shape real benchmark suites
@@ -2462,11 +2462,8 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter((F.col("vec_id") % 20 != 0) | (F.col("vec_id") >= 1000)).unionByName(
         planted
     )
-    # the benchmark is bounded by construction (<=50 rows) and
-    # deterministic, so skip the implicit gate-count job
     report = similarity.semantic_decontaminate(
-        corpus, bench, threshold=0.95, n_clusters=16, nprobe=4,
-        assume_small_batch=True,
+        corpus, bench, threshold=0.95, n_clusters=16, nprobe=4
     )
     return report.withColumn(
         "planted", F.col("vec_id") >= 5_000_000
@@ -2587,7 +2584,7 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     mad = grouped_median_mad(ev, ["event_type"], "value")
     return (
-        ev.join(F.broadcast(mad), "event_type")
+        ev.join(mad, "event_type")
         .filter(F.abs(F.col("value") - F.col("med")) > 5 * F.col("mad"))
         .select(
             "event_id",
@@ -2909,7 +2906,7 @@ def q_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_search_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 batch ANN search join (r8; rows-only — IVF recall is
     probabilistic by design): top-5 corpus neighbors for a 10-row query
-    TABLE via one broadcast cell-pruned join (similarity.ivf_search_join)
+    TABLE via one cell-pruned join (similarity.ivf_search_join)
     — the serving-batch shape ivf_topk answers one-collect-per-query.
 
     Plant-and-flag contract: the queries are scaled copies (×0.7) of
@@ -2922,10 +2919,7 @@ def q_ann_search_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.transform("embedding", lambda x: x * F.lit(0.7)).alias("embedding"),
     )
-    # 10 deterministic queries: skip the implicit gate-count job
-    out = similarity.ivf_search_join(
-        emb, queries, k=5, n_clusters=16, nprobe=4, assume_small_batch=True
-    )
+    out = similarity.ivf_search_join(emb, queries, k=5, n_clusters=16, nprobe=4)
     return out.withColumn(
         "planted_rank1",
         (F.col("rank") == 1) & (F.col("vec_id") == F.col("query_id")),
@@ -3315,7 +3309,7 @@ def q_orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = orders.agg(F.max("o_orderkey").alias("mx"))
     inserts = (
         orders.filter(F.col("o_orderkey") % 11 == 0)
-        .crossJoin(F.broadcast(mx))
+        .crossJoin(mx)
         .select(
             (F.col("o_orderkey") + F.col("mx") + F.lit(1)).alias("o_orderkey"),
             "o_totalprice",
@@ -3877,18 +3871,20 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
         """,
         "brand_market_share": """
+            WITH r AS (
+                SELECT o_orderdate, p_brand, o_custkey,
+                       CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS rev
+                FROM lineitem
+                JOIN orders ON l_orderkey = o_orderkey
+                JOIN part ON l_partkey = p_partkey
+            )
             SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-                   ROUND(SUM(CASE WHEN p_brand = 'Brand#1'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0.0 END), 2) AS brand_revenue,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue,
-                   ROUND(SUM(CASE WHEN p_brand = 'Brand#1'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0.0 END)
-                         / SUM(l_extendedprice * (1 - l_discount)), 6) AS mkt_share
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN part ON l_partkey = p_partkey
+                   CAST(ROUND(SUM(CASE WHEN p_brand = 'Brand#1' THEN rev ELSE 0 END), 2)
+                        AS DOUBLE) AS brand_revenue,
+                   CAST(ROUND(SUM(rev), 2) AS DOUBLE) AS total_revenue,
+                   ROUND(CAST(SUM(CASE WHEN p_brand = 'Brand#1' THEN rev ELSE 0 END) AS DOUBLE)
+                         / CAST(SUM(rev) AS DOUBLE), 6) AS mkt_share
+            FROM r
             WHERE o_custkey IN (
                 SELECT c_custkey FROM customer
                 JOIN nation ON c_nationkey = n_nationkey

@@ -14,11 +14,11 @@ Layout:
                    relational, dedup, similarity, multimodal, normalize)
 - ``streaming``  — Structured Streaming pipeline (watermarked windowed aggs,
                    checkpointed sinks, foreachBatch fan-out)
-- ``plans``      — size-gated broadcast hints and plan-sized counts
+- ``plans``      — plan-sized parallelism counts
 
 All operators take and return DataFrames, are usable in both batch and
 streaming mode where Spark allows, and are designed to scale: no driver-side
-collects in any hot path, broadcast joins for small dimensions, map-side
+collects in any hot path, join strategy left to AQE, map-side
 partial aggregation everywhere, LSH instead of O(n^2) for near-dup /
 similarity.
 """

@@ -18,7 +18,8 @@ Memo contract (:func:`memo`): build-once artifacts a session reuses across
 DIFFERENT queries (a shared components table, the fixed query vector, a
 shared index, the pandas UDFs) live in ONE in-process store keyed by the
 Spark application id, so nothing outlives the process or leaks into another
-session — a UDF object binds the SparkContext it first runs in. A memo
+session — a UDF object binds the SparkContext it first runs in — and a miss
+under a new application drops the entries of the old one. A memo
 is kept only when two or more queries read it — a value that only one
 query reads can only hit on a repeat call of that query, which measures
 the repeat, not the work. Memos outlive :func:`trim`/:func:`release_all`;
@@ -63,11 +64,17 @@ def tracked_persist_shared(df: DataFrame) -> DataFrame:
 
 def memo(spark, key: tuple, build: Callable[[], Any]) -> Any:
     """Return the value stored under ``(applicationId, *key)``, calling
-    ``build()`` only on a miss. Every DataFrame in the value (the value
-    itself, or an element of a tuple) goes through
-    :func:`tracked_persist_shared` — a no-op while it is still cached."""
-    k = (spark.sparkContext.applicationId, *key)
+    ``build()`` only on a miss. A miss first drops every entry of another
+    application id: one process runs one SparkContext at a time, so those
+    entries belong to a stopped application and would only keep its UDFs
+    and DataFrames alive. Every DataFrame in the value (the value itself,
+    or an element of a tuple) goes through :func:`tracked_persist_shared`
+    — a no-op while it is still cached."""
+    app = spark.sparkContext.applicationId
+    k = (app, *key)
     if k not in _MEMO:
+        for stale in [s for s in _MEMO if s[0] != app]:
+            del _MEMO[stale]
         _MEMO[k] = build()
     v = _MEMO[k]
     if isinstance(v, DataFrame):

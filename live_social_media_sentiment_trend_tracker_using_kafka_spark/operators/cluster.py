@@ -132,8 +132,7 @@ def cluster_dedup(
     Docs not in any pair are singletons and always kept. The components
     table is tiny relative to the corpus (only docs that had a near-dup),
     so the join back is broadcast-able at any realistic dup rate; Spark's
-    AQE converts it automatically when small, which is why no explicit
-    broadcast hint is hard-coded.
+    AQE converts it automatically when small.
 
     Pass ``components`` (a precomputed ``connected_components`` result —
     e.g. a session-memoized persisted table shared with the cluster
@@ -251,7 +250,7 @@ def pagerank(
     vcols = ["v", "_dang"] if handle_dangling else ["v"]
     nv = verts.agg(F.count(F.lit(1)).cast("double").alias("nv"))
     pr = (
-        verts.crossJoin(F.broadcast(nv))
+        verts.crossJoin(nv)
         .select(
             *vcols, F.round(F.lit(1.0) / F.col("nv"), round_digits).alias("pr")
         )
@@ -291,9 +290,9 @@ def pagerank(
         else:
             dm, extra = None, F.lit(0.0)
         prev = pr
-        scored = inflow.crossJoin(F.broadcast(nv))
+        scored = inflow.crossJoin(nv)
         if dm is not None:
-            scored = scored.crossJoin(F.broadcast(dm))
+            scored = scored.crossJoin(dm)
         pr = (
             scored.select(
                 *vcols,

@@ -226,7 +226,7 @@ def bloom_contamination_stats(
     sh = (
         shingle_table(docs, text_col, id_col, n)
         .withColumnRenamed("shingles", "grams")
-        .join(F.broadcast(bloom))
+        .join(bloom)
     )
     n_hits = F.size(
         F.filter(

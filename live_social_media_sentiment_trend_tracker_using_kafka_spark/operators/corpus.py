@@ -57,7 +57,7 @@ def tfidf_top_terms(
         # broadcast; AQE promotes the join when it actually fits, same
         # policy as the unigram/bigram scorers. Only the 1-row N broadcasts.
         tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .withColumn(
             "tfidf",
             F.round(
@@ -235,7 +235,7 @@ def unigram_logprob_scores(
     )
     scored = (
         toks.join(uni, "tok")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -291,7 +291,7 @@ def bigram_logprob_scores(
     )
     return (
         grams.join(counts, "gram")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
@@ -452,7 +452,7 @@ def vocab_coverage(
     )
     w = Window.orderBy(F.desc("n"), "token").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        counts.join(F.broadcast(total))
+        counts.join(total)
         .select(
             F.row_number().over(Window.orderBy(F.desc("n"), "token")).alias("rank"),
             "token",
@@ -551,7 +551,7 @@ def dsir_importance_scores(
     )
     return (
         toks.join(uni, "tok")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -613,7 +613,7 @@ def token_pmi_pairs(
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     vocab = dfreq.orderBy(F.desc("df"), F.asc("tok")).limit(vocab_k)
     n_docs = toks.agg(F.countDistinct("doc_id").alias("_n_docs"))
-    ft = tracked_persist(toks.join(F.broadcast(vocab), "tok"))
+    ft = tracked_persist(toks.join(vocab, "tok"))
     a = ft.select("doc_id", F.col("tok").alias("tok_a"), F.col("df").alias("df_a"))
     b = ft.select("doc_id", F.col("tok").alias("tok_b"), F.col("df").alias("df_b"))
     pairs = (
@@ -624,7 +624,7 @@ def token_pmi_pairs(
     )
     return (
         pairs.filter(F.col("pair_docs") >= min_pair_docs)
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "tok_a",
             "tok_b",
@@ -933,7 +933,7 @@ def corpus_drift(
         F.col("cnt_a") * F.col("tot_b") - F.col("cnt_b") * F.col("tot_a")
     )
     return (
-        per.crossJoin(F.broadcast(tot))
+        per.crossJoin(tot)
         .select(
             "token",
             "cnt_a",
@@ -1001,9 +1001,10 @@ def source_shingle_overlap(
     b = sizes.select(F.col("src").alias("source_b"), F.col("sz").alias("shingles_b"))
     ic = F.coalesce(F.col("inter_cnt"), F.lit(0)).cast("long")
     return (
+        # non-equi pair join: without the hint Spark plans a CartesianProduct
         a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
         .join(
-            F.broadcast(inter),
+            inter,
             (F.col("source_a") == F.col("sa")) & (F.col("source_b") == F.col("sb")),
             "left",
         )
@@ -1200,7 +1201,7 @@ def bm25_search(
         score = part if score is None else score + part
         matched = hit if matched is None else matched + hit
     return (
-        rows.crossJoin(F.broadcast(stats))
+        rows.crossJoin(stats)
         .select(
             id_col,
             F.col("dl").cast("long").alias("dl"),

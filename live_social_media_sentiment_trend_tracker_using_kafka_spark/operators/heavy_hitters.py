@@ -98,10 +98,10 @@ def heavy_hitters(
     totals = summary.agg(F.sum("_n").alias("_total"))
     candidates = summary.filter(F.col(item_col).isNotNull()).select(item_col).distinct()
     return (
-        items.join(F.broadcast(candidates), item_col, "left_semi")
+        items.join(candidates, item_col, "left_semi")
         .groupBy(item_col)
         .agg(F.count(F.lit(1)).alias("count"))
-        .crossJoin(F.broadcast(totals))  # 1-row threshold table
+        .crossJoin(totals)  # 1-row threshold table
         # DECIMAL threshold arithmetic: float64 phi*N can land epsilon above
         # the exact product (0.07*100 = 7.000000000000001 -> ceil 8) and
         # silently drop a boundary heavy hitter; SQL engines parse the phi

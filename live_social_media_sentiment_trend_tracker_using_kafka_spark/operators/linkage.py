@@ -224,9 +224,7 @@ def blocked_edit_resolve(
             stacklevel=2,
         )
         spark = d.sparkSession
-        hot_df = F.broadcast(
-            spark.createDataFrame(hot_rows, d.select(*block_cols).schema)
-        )
+        hot_df = spark.createDataFrame(hot_rows, d.select(*block_cols).schema)
         band_width = max(max_distance, 1)
         cold_pairs = (
             d.join(hot_df, on=block_cols, how="left_anti")

@@ -11,11 +11,15 @@ Scale design, query by query:
   agg → tiny shuffle (6-ish groups). The shipdate filter is pushed into the
   parquet scan.
 - ``shipping_priority`` (Q3-shape): customer and orders filters push to their
-  scans; customer is the small side after filtering → broadcast hinted, so
-  only the orders⋈lineitem join shuffles — and AQE can convert it too when
-  the filtered orders side is small.
-- ``local_supplier_volume`` (Q5-shape): region/nation are tiny dims →
-  broadcast (no shuffle); the big joins shuffle on orderkey once.
+  scans; customer is the small side after filtering, so AQE broadcasts it
+  and only the orders⋈lineitem join shuffles — AQE can convert that one too
+  when the filtered orders side is small.
+- ``local_supplier_volume`` (Q5-shape): region/nation are tiny dims that
+  Spark broadcasts by size; the big joins shuffle on orderkey once.
+
+No join here carries a strategy hint: the planner and AQE choose broadcast
+or shuffle from the (runtime) sizes, so a dimension that outgrows memory
+at a larger scale factor shuffles instead of failing.
 - ``top_customers_by_spend``: orders-side pre-aggregation *before* the
   customer join shrinks the join input from |orders| to |custkey| rows.
 
@@ -27,8 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..plans.hints import broadcast_dim
 
 
 def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFrame:
@@ -71,7 +73,7 @@ def shipping_priority(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     return (
-        ords.join(broadcast_dim(cust), ords.o_custkey == cust.c_custkey)
+        ords.join(cust, ords.o_custkey == cust.c_custkey)
         .join(items, ords.o_orderkey == items.l_orderkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
@@ -95,7 +97,7 @@ def local_supplier_volume(
     nation, one region, one order-date year. Dims broadcast; fact joins
     shuffle once on orderkey."""
     nations_in_region = (
-        nation.join(F.broadcast(region.filter(F.col("r_name") == region_name)),
+        nation.join(region.filter(F.col("r_name") == region_name),
                     nation.n_regionkey == region.r_regionkey)
         .select("n_nationkey", "n_name")
     )
@@ -106,12 +108,12 @@ def local_supplier_volume(
     return (
         lineitem.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .join(ords, F.col("l_orderkey") == ords.o_orderkey)
-        .join(broadcast_dim(customer.select("c_custkey", "c_nationkey")),
+        .join(customer.select("c_custkey", "c_nationkey"),
               F.col("o_custkey") == F.col("c_custkey"))
-        .join(broadcast_dim(supplier.select("s_suppkey", "s_nationkey")),
+        .join(supplier.select("s_suppkey", "s_nationkey"),
               (F.col("l_suppkey") == F.col("s_suppkey"))
               & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(nations_in_region), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nations_in_region, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("n_name"))
@@ -128,7 +130,7 @@ def top_customers_by_spend(customer: DataFrame, orders: DataFrame, k: int = 10) 
         F.count(F.lit(1)).alias("order_cnt"),
     )
     return (
-        spend.join(broadcast_dim(customer.select("c_custkey", "c_name")),
+        spend.join(customer.select("c_custkey", "c_name"),
                    spend.o_custkey == F.col("c_custkey"))
         .select("c_custkey", "c_name", "total_spend", "order_cnt")
         .orderBy(F.desc("total_spend"), F.asc("c_custkey"))
@@ -167,7 +169,7 @@ def brand_revenue(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     part is the broadcast side; the disjunctive predicate can't fully push to
     the scan but its conjunctive residuals (quantity bounds) do. Per-brand
     revenue keeps the output deterministic."""
-    joined = lineitem.join(broadcast_dim(part), F.col("l_partkey") == F.col("p_partkey"))
+    joined = lineitem.join(part, F.col("l_partkey") == F.col("p_partkey"))
     cond = (
         ((F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 10) & (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 20))
         | ((F.col("p_brand") == "Brand#2") & (F.col("p_size") <= 20) & (F.col("l_quantity") >= 5) & (F.col("l_quantity") <= 30))
@@ -226,7 +228,7 @@ def promo_revenue_share(
             (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
         )
-        .join(broadcast_dim(part.select("p_partkey", "p_type")),
+        .join(part.select("p_partkey", "p_type"),
               F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(
@@ -261,7 +263,7 @@ def large_orders(
     )
     return (
         big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(broadcast_dim(customer.select("c_custkey", "c_name")),
+        .join(customer.select("c_custkey", "c_name"),
               F.col("o_custkey") == F.col("c_custkey"))
         .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice", "total_qty")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -307,13 +309,13 @@ def nation_trade_volume(
     """
     supp_n = (
         supplier.join(
-            F.broadcast(nation.select("n_nationkey", F.col("n_name").alias("supp_nation"))),
+            nation.select("n_nationkey", F.col("n_name").alias("supp_nation")),
             supplier.s_nationkey == F.col("n_nationkey"),
         ).select("s_suppkey", "supp_nation")
     )
     cust_n = (
         customer.join(
-            F.broadcast(nation.select("n_nationkey", F.col("n_name").alias("cust_nation"))),
+            nation.select("n_nationkey", F.col("n_name").alias("cust_nation")),
             customer.c_nationkey == F.col("n_nationkey"),
         ).select("c_custkey", "cust_nation")
     )
@@ -323,9 +325,9 @@ def nation_trade_volume(
     )
     return (
         lineitem.select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
-        .join(broadcast_dim(supp_n, gate_on=supplier), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp_n, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(broadcast_dim(cust_n, gate_on=customer), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust_n, F.col("o_custkey") == F.col("c_custkey"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
@@ -349,30 +351,30 @@ def brand_market_share(
     """
     cust_in_region = (
         customer.join(
-            F.broadcast(
-                nation.join(
-                    F.broadcast(region.filter(F.col("r_name") == region_name)),
-                    nation.n_regionkey == region.r_regionkey,
-                ).select("n_nationkey")
-            ),
+            nation.join(
+                region.filter(F.col("r_name") == region_name),
+                nation.n_regionkey == region.r_regionkey,
+            ).select("n_nationkey"),
             customer.c_nationkey == F.col("n_nationkey"),
         ).select("c_custkey")
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    # per-row revenue quantized to DECIMAL(18,4) before the sums, so they
+    # are exact and do not depend on the join strategy's summation order
+    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
+    brand_rev = F.sum(F.when(F.col("p_brand") == brand, rev).otherwise(F.lit(0)))
     return (
         lineitem.select("l_orderkey", "l_partkey", "l_extendedprice", "l_discount")
         .join(orders.select("o_orderkey", "o_custkey", "o_orderdate"),
               F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(broadcast_dim(cust_in_region, gate_on=customer), F.col("o_custkey") == F.col("c_custkey"), "left_semi")
-        .join(broadcast_dim(part.select("p_partkey", "p_brand")),
+        .join(cust_in_region, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
+        .join(part.select("p_partkey", "p_brand"),
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
-            F.round(F.sum(F.when(F.col("p_brand") == brand, rev).otherwise(F.lit(0.0))), 2).alias("brand_revenue"),
-            F.round(F.sum(rev), 2).alias("total_revenue"),
+            F.round(brand_rev, 2).cast("double").alias("brand_revenue"),
+            F.round(F.sum(rev), 2).cast("double").alias("total_revenue"),
             F.round(
-                F.sum(F.when(F.col("p_brand") == brand, rev).otherwise(F.lit(0.0))) / F.sum(rev),
-                6,
+                brand_rev.cast("double") / F.sum(rev).cast("double"), 6
             ).alias("mkt_share"),
         )
         .orderBy("o_year")
@@ -401,7 +403,7 @@ def dormant_high_value_customers(
         .distinct()
     )
     return (
-        customer.crossJoin(F.broadcast(avg_bal))
+        customer.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("__avg_bal"))
         .join(recent_buyers, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .groupBy("c_nationkey")
@@ -430,13 +432,13 @@ def small_quantity_revenue(
     """
     bparts = part.filter(F.col("p_brand") == brand).select("p_partkey")
     li = lineitem.join(
-        broadcast_dim(bparts), lineitem["l_partkey"] == bparts["p_partkey"]
+        bparts, lineitem["l_partkey"] == bparts["p_partkey"]
     ).select("l_partkey", "l_quantity", "l_extendedprice")
     thresholds = li.groupBy("l_partkey").agg(
         (F.lit(frac) * F.avg("l_quantity")).alias("qty_cut")
     )
     return (
-        li.join(broadcast_dim(thresholds, gate_on=bparts), "l_partkey")
+        li.join(thresholds, "l_partkey")
         .filter(F.col("l_quantity") < F.col("qty_cut"))
         .agg(F.round(F.sum("l_extendedprice") / 7.0, 6).alias("avg_yearly"))
     )
@@ -467,7 +469,7 @@ def top_supplier_revenue(
     )
     mx = rev.agg(F.max("total_revenue").alias("mr"))
     return (
-        rev.join(F.broadcast(mx), rev["total_revenue"] == mx["mr"])
+        rev.join(mx, rev["total_revenue"] == mx["mr"])
         .join(supplier, rev["l_suppkey"] == supplier["s_suppkey"])
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
@@ -491,7 +493,7 @@ def cheapest_supplier_per_part(
     sparts = part.filter(F.col("p_size") <= max_size).select("p_partkey", "p_name")
     unit = (
         lineitem.filter(F.col("l_quantity") > 0)
-        .join(broadcast_dim(sparts), lineitem["l_partkey"] == sparts["p_partkey"])
+        .join(sparts, lineitem["l_partkey"] == sparts["p_partkey"])
         .select(
             "p_partkey",
             "p_name",
@@ -510,7 +512,7 @@ def cheapest_supplier_per_part(
     )
     return (
         unit.join(
-            broadcast_dim(best, gate_on=sparts),
+            best,
             (F.col("p_partkey") == F.col("best_partkey"))
             & (F.col("unit_price") == F.col("min_price")),
         )
@@ -567,7 +569,7 @@ def lone_problem_suppliers(
     )
     lone = per_order.filter((F.col("n_r_sups") == 1) & (F.col("n_sups") > 1))
     return (
-        lone.join(broadcast_dim(supplier), lone["lone_sup"] == supplier["s_suppkey"])
+        lone.join(supplier, lone["lone_sup"] == supplier["s_suppkey"])
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
@@ -619,7 +621,7 @@ def returned_item_revenue(
             per_cust["o_custkey"] == F.col("c_custkey"),
         )
         .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
+            nation.select("n_nationkey", "n_name"),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .select("c_custkey", "c_name", "n_name", "c_acctbal", "revenue")
@@ -678,7 +680,7 @@ def bracket_revenue(
         ).otherwise(label)
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
     return (
-        li.join(broadcast_dim(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .select(label.alias("bracket"), rev.alias("rev"))
         .filter(F.col("bracket").isNotNull())
         .groupBy("bracket")
@@ -757,7 +759,7 @@ def supplier_diversity(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     li = lineitem.select("l_partkey", "l_suppkey")
     p = part.select("p_partkey", "p_brand")
     combos = (
-        li.join(broadcast_dim(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "l_suppkey", "l_partkey")
         .agg(F.count(F.lit(1)).alias("n_combo_lines"))
     )
@@ -837,10 +839,11 @@ def fk_integrity_audit(
     Returns (relationship, n_child_rows, n_orphans, orphan_rate) — one
     row per relationship, ordered by name.
 
-    Scale shape: each parent prunes to its key column and dedups;
-    customer/part/supplier parents BROADCAST into their child scans
-    (dim-sized), so three of the four checks add zero shuffles beyond the
-    child scan's agg; lineitem->orders is the one fact-fact check and
+    Scale shape: each parent prunes to its key column and dedups; the
+    customer/part/supplier parents are dim-sized, so Spark broadcasts
+    them into their child scans (no hint; AQE shuffles a parent that
+    outgrows memory), and three of the four checks add zero shuffles
+    beyond the child scan's agg; lineitem->orders is the one fact-fact check and
     plans as a single orderkey SMJ. Each check is ONE left join + a 1-row
     aggregate (no separate count pass); the four 1-row results union.
     """
@@ -849,32 +852,26 @@ def fk_integrity_audit(
             "lineitem.l_orderkey -> orders",
             lineitem.select(F.col("l_orderkey").alias("k")),
             orders.select(F.col("o_orderkey").alias("k")),
-            False,
         ),
         (
             "lineitem.l_partkey -> part",
             lineitem.select(F.col("l_partkey").alias("k")),
             part.select(F.col("p_partkey").alias("k")),
-            True,
         ),
         (
             "lineitem.l_suppkey -> supplier",
             lineitem.select(F.col("l_suppkey").alias("k")),
             supplier.select(F.col("s_suppkey").alias("k")),
-            True,
         ),
         (
             "orders.o_custkey -> customer",
             orders.select(F.col("o_custkey").alias("k")),
             customer.select(F.col("c_custkey").alias("k")),
-            True,
         ),
     ]
     rows = []
-    for name, child, parent, is_dim in checks:
+    for name, child, parent in checks:
         p = parent.distinct().withColumn("_hit", F.lit(1))
-        if is_dim:
-            p = broadcast_dim(p)
         rows.append(
             child.join(p, "k", "left")
             .agg(
@@ -918,12 +915,11 @@ def nation_profit_by_year(
     Scale shape: the part filter prunes at its scan and the surviving
     (partkey, retailprice) projection joins into lineitem, cutting the
     fact stream to matching parts before the wide join; the
-    supplier->nation name map joins likewise. Only the genuinely BOUNDED
-    dim (nation, 25 rows at any SF) carries a broadcast HINT — part and
-    supplier scale with SF, so their joins are left to AQE: broadcast
-    while small, partkey/suppkey shuffle once they outgrow the executors
-    (a 20x probe of the hinted variant showed forced broadcasts going
-    superlinear). The one unavoidable fact-fact shuffle is
+    supplier->nation name map joins likewise. No join is hinted: nation
+    (25 rows at any SF) broadcasts by size, and part and supplier scale
+    with SF, so AQE broadcasts them while small and shuffles on
+    partkey/suppkey once they outgrow the executors (a 20x probe of a
+    hinted variant showed forced broadcasts going superlinear). The one unavoidable fact-fact shuffle is
     lineitem⋈orders on orderkey; the rollup after it is map-side
     combinable into |nations| x |years| rows. Cross-engine determinism:
     per-row profit quantizes to DECIMAL(18,4) BEFORE the sum, so
@@ -934,7 +930,7 @@ def nation_profit_by_year(
         "p_partkey", "p_retailprice"
     )
     supp_nation = supplier.join(
-        F.broadcast(nation),
+        nation,
         supplier.s_nationkey == nation.n_nationkey,
     ).select("s_suppkey", F.col("n_name").alias("nation_name"))
     profit = (
@@ -973,17 +969,15 @@ def part_supplier_counts(
 
     Scale shape: the fact stream projects to (partkey, suppkey) and
     dedups — ONE shuffle on the composite key that also co-locates the
-    later countDistinct. The denylist (a filtered fraction of supplier)
-    broadcasts by hint; the part-attribute join is left UNHINTED — part
-    scales with SF (a 20x probe showed the forced broadcast going
-    superlinear as the hash table outgrew the executors), so AQE picks
-    broadcast while part is small and a partkey shuffle once it isn't.
+    later countDistinct. Neither the denylist (a filtered fraction of
+    supplier) nor the part-attribute join is hinted — part scales with
+    SF (a 20x probe showed a forced broadcast going superlinear as the
+    hash table outgrew the executors), so AQE picks broadcast while a
+    side is small and a key shuffle once it isn't.
     """
-    denied = broadcast_dim(
-        supplier.filter(
-            F.substring(F.md5(F.col("s_suppkey").cast("string")), 1, 1) < "4"
-        ).select("s_suppkey")
-    )
+    denied = supplier.filter(
+        F.substring(F.md5(F.col("s_suppkey").cast("string")), 1, 1) < "4"
+    ).select("s_suppkey")
     pairs = (
         lineitem.select("l_partkey", "l_suppkey")
         .distinct()
@@ -1076,7 +1070,7 @@ def excess_shipment_suppliers(
             F.max("ratio").alias("max_over_ratio"),
         )
         .join(
-            broadcast_dim(supplier.select("s_suppkey", "s_name")),
+            supplier.select("s_suppkey", "s_name"),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .select("s_suppkey", "s_name", "n_excess_parts", "max_over_ratio")
@@ -1142,8 +1136,8 @@ def order_value_percentile_bands(
     small). The naive ``Window.partitionBy(segment)`` form would sort
     each WHOLE segment in one task (|segments| cores total — measured
     76x at a 20x probe); the exact distribution instead comes from
-    distributed_cume_dist (range-repartition + broadcast per-chunk
-    offsets + chunk-local cumsum — n_range_parts-way parallel, still
+    distributed_cume_dist (range-repartition + per-chunk offsets joined
+    back + chunk-local cumsum — n_range_parts-way parallel, still
     bit-exact cume_dist semantics). Then a |segments|·|bands| hash agg.
     """
     from .window_funcs import distributed_cume_dist

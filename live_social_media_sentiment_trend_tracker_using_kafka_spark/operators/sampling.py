@@ -175,7 +175,7 @@ def token_budget_mix(
     )
     return (
         base.withColumn("__cum_in_chunk", F.sum("n_tokens").over(in_chunk))
-        .join(F.broadcast(totals), [source_col, "__chunk"])
+        .join(totals, [source_col, "__chunk"])
         .withColumn("cum_tokens", F.col("__offset") + F.col("__cum_in_chunk"))
         .withColumn("__budget", budget)
         .filter(F.col("cum_tokens") <= F.col("__budget"))
@@ -209,7 +209,7 @@ def quality_percentile_filter(
         lang_col, F.element_at("pcts", 1).alias("cutoff")
     )
     return (
-        scored.join(F.broadcast(cut), lang_col)
+        scored.join(cut, lang_col)
         .filter(F.col("quality_score") >= F.col("cutoff"))
         .select(
             id_col,
@@ -277,7 +277,7 @@ def temperature_mix(
     """
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_c"))
     denom = counts.agg(F.sum(F.pow(F.col("_c"), F.lit(alpha))).alias("_z"))
-    quotas = counts.join(F.broadcast(denom)).select(
+    quotas = counts.join(denom).select(
         group_col,
         F.floor(
             F.lit(float(total_docs)) * F.pow(F.col("_c"), F.lit(alpha)) / F.col("_z")
@@ -288,7 +288,7 @@ def temperature_mix(
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(quotas), group_col)
+        .join(quotas, group_col)
         .filter(F.col("_rn") <= F.col("_quota"))
         .select(*df.columns)
         .orderBy(group_col, id_col)
@@ -346,12 +346,11 @@ def capped_group_sample(
     )
     # renamed keys: the grouping attributes keep their expression ids
     # through the aggregate, so an un-aliased self-join would be ambiguous.
-    # NO forced broadcast here (unlike distributed_cume_dist, whose
-    # contract bounds it to few groups): THIS operator's regime is
-    # millions of domains, where |off_df| ≈ |groups| rows is itself a
-    # multi-GB forced broadcast — the r10 relational.py hazard class. AQE
-    # picks the join: it converts to broadcast at runtime whenever the
-    # materialized offsets side is actually small (every sf tested here),
+    # NO forced broadcast here: THIS operator's regime is millions of
+    # domains, where |off_df| ≈ |groups| rows would be a multi-GB forced
+    # broadcast. AQE picks the join: it converts to broadcast at runtime
+    # whenever the materialized offsets side is actually small (every sf
+    # tested here),
     # and keeps a fully parallel shuffle join on (_chunk, group) — high
     # key cardinality, no serialization — when it is not.
     off_df = counts.select(
@@ -564,37 +563,24 @@ def weighted_sample(
     )
 
 
-# exact_percentiles regime dispatch, two independent gates measured on
-# local[32] (PLANS.md r12):
-#
-# 1. MAX GROUPS — the reconstruction's probe broadcast is
-#    |groups|·2·|percentages| rows: built for LOW group cardinality,
-#    where Spark's own percentile() serializes each group through one
-#    reducer. At high cardinality the frequency-weighted aggregate is
-#    already parallel (per-group multisets are small).
-# 2. MAX DISTINCT — below ~1M distinct values per group (scaled down as
-#    |percentages| grows: 101-point grids cross over near 200k), the
-#    frequency-weighted percentile() over the SAME distinct-counts frame
-#    beats the reconstruction's running-sum/probe machinery outright
-#    (measured: freq 150k→0.7 s, 1M→4 s, 3M·101ps→122 s, 10M→GC death;
-#    reconstruction ~3-6 s constant). The r12 bench caught the cost of
-#    skipping this gate: value_outliers_mad 0.68→14.8 s when its two
-#    125k-distinct-per-group medians rode the full reconstruction.
+# exact_percentiles regime gate, measured on local[32] (PLANS.md r12):
+# below ~1M distinct values per group (scaled down as |percentages|
+# grows: 101-point grids cross over near 200k), the frequency-weighted
+# percentile() over the SAME distinct-counts frame beats the
+# reconstruction's running-sum/probe machinery outright (measured: freq
+# 150k→0.7 s, 1M→4 s, 3M·101ps→122 s, 10M→GC death; reconstruction
+# ~3-6 s constant). The r12 bench caught the cost of skipping this gate:
+# value_outliers_mad 0.68→14.8 s when its two 125k-distinct-per-group
+# medians rode the full reconstruction.
 #
 # A small-distinct frame routes to percentile(value, ps,
 # greatest(_gcnt, 1L)) over the counts frame — bit-equal (pinned),
 # NULL-group-preserving (rows ride zero-counted), and the plan-level
 # sweep marker for a GUARDED exact percentile (tests/test_plans.py
 # allows percentile( only next to greatest(_gcnt). A big-distinct frame
-# runs the reconstruction; if the group gate ALSO tripped, its probe
-# frame rides a shuffled (non-broadcast) join. Both gates are pure
-# functions of |percentages| over the two budgets below.
-_PROBE_ROW_BUDGET = 2_000_000
+# runs the reconstruction. The gate is a pure function of |percentages|
+# over the budget below.
 _FREQ_CELL_BUDGET = 30_000_000
-
-
-def _max_groups(n_pcts: int) -> int:
-    return max(1_000, _PROBE_ROW_BUDGET // max(1, 2 * n_pcts))
 
 
 def _max_distinct(n_pcts: int) -> int:
@@ -627,7 +613,7 @@ def exact_percentiles(
        ``chunked_running_sum`` — each distinct value owns the sorted-
        index span [cum−cnt, cum) of its group;
     3. per group, the 2·|percentages| probe indices (lower/upper
-       neighbours of ``pos = p·(N−1)``) broadcast against those spans —
+       neighbours of ``pos = p·(N−1)``) joined against those spans —
        each probe hits exactly one span;
     4. interpolate with Spark ``percentile``'s own arithmetic —
        ``v_lo`` when the span covers both neighbours (ties
@@ -637,25 +623,19 @@ def exact_percentiles(
        grouped (tests/test_sampling.py).
 
     Regime dispatch (r12): one eager stats pass over the persisted
-    distinct-counts frame measures |groups| and the max per-group
-    distinct-value count, then
-    - |groups| > ``_max_groups(|ps|)`` (keeps the probe broadcast
-      ≤ ~2M rows) → frequency-weighted
-      ``percentile(value, ps, greatest(_gcnt, 1L))`` over the counts
-      frame, with a loud warning (the vanilla aggregate is already
-      parallel at high cardinality; the probe broadcast is not);
+    distinct-counts frame measures the max per-group distinct-value
+    count, then
     - max distinct ≤ ``_max_distinct(|ps|)`` (~30M/(30+|ps|): ≈1M for
       a median, ≈230k for a 101-point grid —
-      the measured crossover, see the module constant) → the same
-      frequency-weighted aggregate, silently: each reducer buffers at
-      most the small per-group distinct map, and the running-sum/probe
-      machinery would cost more than it saves (the r12 bench measured
-      value_outliers_mad 0.68→14.8 s without this gate);
-    - else → the reconstruction above (the genuine cliff regime); when
-      the group-count gate ALSO tripped (many groups AND a skewed group
-      over the distinct budget), the probe frame rides a plain SHUFFLED
-      join on the group key instead of a broadcast — linear both ways,
-      no driver blow-up, warned.
+      the measured crossover, see the module constant) → frequency-
+      weighted ``percentile(value, ps, greatest(_gcnt, 1L))`` over the
+      counts frame: each reducer buffers at most the small per-group
+      distinct map, and the running-sum/probe machinery would cost more
+      than it saves (the r12 bench measured value_outliers_mad
+      0.68→14.8 s without this gate);
+    - else → the reconstruction above (the genuine cliff regime). Its
+      probe join carries no hint: AQE broadcasts the probe frame while
+      it is small and shuffles it on the group key when it is not.
     All paths are bit-equal (regime-pinned in tests/test_sampling.py).
 
     NULL semantics match ``percentile()`` exactly (r11 ADVICE): NULL
@@ -674,8 +654,8 @@ def exact_percentiles(
 
     **Eager contract (r12 ADVICE)**: unlike most operators in this
     package, CALLING this function runs a Spark job immediately — the
-    regime dispatch needs |groups| and the max per-group distinct count
-    before it can choose a plan, so the counts frame is persisted (via
+    regime dispatch needs the max per-group distinct count before it
+    can choose a plan, so the counts frame is persisted (via
     ``tracked_persist``, released by the session's cache manager) and a
     one-row stats aggregate executes at construction time. Plan-only
     contexts (dry runs, plan tests) therefore touch the cluster; the
@@ -708,8 +688,8 @@ def exact_percentiles(
         from ..caching import tracked_persist
 
         gvals = tracked_persist(gvals)
-    # one eager stats pass: |groups| and the max per-group distinct count
-    # drive the regime choice (the frame is persisted — this is the same
+    # one eager stats pass: the max per-group distinct count drives the
+    # regime choice (the frame is persisted — this is the same
     # materialization the final action would pay anyway)
     st = (
         gvals.groupBy(*part_cols)
@@ -718,49 +698,19 @@ def exact_percentiles(
                 F.when(F.col(value_col).isNotNull(), F.lit(1)).otherwise(F.lit(0))
             ).alias("_nd")
         )
-        .agg(F.count(F.lit(1)).alias("_ng"), F.max("_nd").alias("_mx"))
+        .agg(F.max("_nd").alias("_mx"))
         .head()
     )
-    n_groups, max_nd = st["_ng"] or 0, st["_mx"] or 0
-    many_groups = bool(part_cols) and n_groups > _max_groups(len(percentages))
-    small_distinct = max_nd <= _max_distinct(len(percentages))
-    if small_distinct:
+    if (st["_mx"] or 0) <= _max_distinct(len(percentages)):
         # frequency-weighted aggregate over the counts frame: parallel at
         # any group cardinality, and below the distinct budget each
         # reducer's per-group map is small (the measured crossover)
-        if many_groups:
-            import warnings
-
-            warnings.warn(
-                f"exact_percentiles: {n_groups} groups exceeds the "
-                f"{_max_groups(len(percentages))}-group probe budget — "
-                "falling back to the vanilla frequency-weighted percentile() "
-                "aggregate (parallel at high group cardinality; the "
-                "reconstruction probe broadcast is not).",
-                stacklevel=2,
-            )
         ps_sql = ", ".join(repr(float(p)) for p in percentages)
         return gvals.groupBy(*part_cols).agg(
             F.expr(
                 f"percentile(`{value_col}`, array({ps_sql}), "
                 "greatest(_gcnt, 1L))"
             ).alias(out_col)
-        )
-    if many_groups:
-        # BOTH gates tripped (many groups AND a skewed group over the
-        # distinct budget — the review-caught regime where the frequency
-        # fallback would re-enter the single-reducer cliff): run the
-        # reconstruction, but ship the |groups|·2·|ps| probe frame
-        # through a plain shuffled join on the group key instead of a
-        # broadcast — linear both ways, no driver blow-up
-        import warnings
-
-        warnings.warn(
-            f"exact_percentiles: {n_groups} groups AND a group with "
-            f"{max_nd} distinct values — reconstruction with a SHUFFLED "
-            "probe join (the probe frame is too wide to broadcast; the "
-            "frequency fallback would re-enter the single-reducer cliff).",
-            stacklevel=2,
         )
     grun = chunked_running_sum(gvals, part_cols, value_col, "_gcnt", "_gcum")
     t_keys = [f"_t_g{i}" for i in range(len(part_cols))]
@@ -805,9 +755,7 @@ def exact_percentiles(
     )
     for c, k in zip(part_cols, t_keys):
         cond = F.col(c).eqNullSafe(F.col(k)) & cond
-    matched = grun.join(
-        probes if many_groups else F.broadcast(probes), cond
-    )
+    matched = grun.join(probes, cond)
     point = F.when(F.col("_vlo") == F.col("_vhi"), F.col("_vlo")).otherwise(
         F.col("_vlo") * (F.lit(1.0) - F.col("_f")) + F.col("_vhi") * F.col("_f")
     )
@@ -836,18 +784,13 @@ def exact_percentiles(
         return res
     # restore groups whose values were all NULL with the NULL row
     # percentile() emits for them — the match join only produces probed
-    # (_N > 0) groups. res is one row per group: under the many-groups
-    # gate that is exactly the O(|groups|) frame the shuffled probe join
-    # exists to keep off the driver, so the restore join follows the
-    # same dispatch (r12 ADVICE) — broadcast only when the group count
-    # is inside the budget.
+    # (_N > 0) groups. res is one row per group, so AQE picks the
+    # restore join's strategy from its runtime size.
     cond2 = None
     for c, k in zip(part_cols, t_keys):
         e = F.col(k).eqNullSafe(F.col(c))
         cond2 = e if cond2 is None else cond2 & e
-    return totals.join(
-        res if many_groups else F.broadcast(res), cond2, "left"
-    ).select(
+    return totals.join(res, cond2, "left").select(
         *[F.col(k).alias(c) for c, k in zip(part_cols, t_keys)], out_col
     )
 
@@ -906,7 +849,7 @@ def grouped_median_mad(
     # exact_percentiles (the eager stats pass + the aggregate/running
     # sum) — unpersisted, the 30M-row derivation ran twice (r12 proof)
     dev_cnts = tracked_persist(
-        cnts.join(F.broadcast(med_k), dcond)
+        cnts.join(med_k, dcond)
         .select(
             *part_cols,
             F.abs(F.col(value_col) - F.col(med_col)).alias("_dev"),
@@ -921,7 +864,7 @@ def grouped_median_mad(
         *[F.col(c).alias(k) for c, k in zip(part_cols, d_keys)],
         F.element_at("_d", 1).alias(mad_col),
     )
-    return med.join(F.broadcast(mad), dcond).select(*part_cols, med_col, mad_col)
+    return med.join(mad, dcond).select(*part_cols, med_col, mad_col)
 
 
 def exact_percentile_grid(
@@ -1003,11 +946,7 @@ def quantile_normalize(
         F.count(F.lit(1)).alias("_cnt")
     )
     run = chunked_running_sum(vals, [group_col], score_col, "_cnt", "_run")
-    totals = F.broadcast(
-        run.groupBy(F.col(group_col).alias("_t_g")).agg(
-            F.sum("_cnt").alias("_n")
-        )
-    )
+    totals = run.groupBy(F.col(group_col).alias("_t_g")).agg(F.sum("_cnt").alias("_n"))
     # exact type-7 grid, reconstructed distributed — Spark's own
     # percentile() buffers every value on one reducer (superlinear in
     # distinct scores, measured in PLANS.md r11); bit-equal by test.
@@ -1054,7 +993,7 @@ def quantile_normalize(
         + frac * (F.element_at("grid", k2 + 1) - F.element_at("grid", k + 1))
     )
     return (
-        ranked.crossJoin(F.broadcast(grid))
+        ranked.crossJoin(grid)
         .select(
             id_col,
             group_col,

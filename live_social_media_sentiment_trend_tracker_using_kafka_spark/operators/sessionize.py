@@ -252,7 +252,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
         )
     )
     ref = per_user.agg(F.max("last_day").alias("ref_day"))
-    metrics = per_user.join(F.broadcast(ref)).select(
+    metrics = per_user.join(ref).select(
         "user_id",
         F.datediff(F.col("ref_day"), F.col("last_day")).alias("rec"),
         "freq",
@@ -277,7 +277,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
             for i in range(3)
         )
 
-    scored = metrics.join(F.broadcast(q)).select(
+    scored = metrics.join(q).select(
         "cents",
         (F.lit(4) - points("rec", "qr")).alias("r_score"),
         (F.lit(1) + points("freq", "qf")).alias("f_score"),
@@ -344,7 +344,7 @@ def rolling_active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
     # the row must vanish (explode drops the null array).
     hi = F.least(F.col("hi"), F.col("max_day"))
     return (
-        spans.join(F.broadcast(max_day))
+        spans.join(max_day)
         .select(
             F.explode(
                 F.when(F.col("lo") <= hi, F.sequence(F.col("lo"), hi))
@@ -643,14 +643,14 @@ def event_type_lift(events: DataFrame) -> DataFrame:
     totals = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
     return (
         pair_counts.join(
-            F.broadcast(type_counts.withColumnsRenamed({"t": "type_a", "n_t": "n_a"})),
+            type_counts.withColumnsRenamed({"t": "type_a", "n_t": "n_a"}),
             "type_a",
         )
         .join(
-            F.broadcast(type_counts.withColumnsRenamed({"t": "type_b", "n_t": "n_b"})),
+            type_counts.withColumnsRenamed({"t": "type_b", "n_t": "n_b"}),
             "type_b",
         )
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(
             "type_a",
             "type_b",
@@ -756,7 +756,7 @@ def top_event_paths(events: DataFrame, k: int = 20) -> DataFrame:
     )
     totals = counts.agg(F.sum("n_paths").alias("_n_total"))
     return (
-        counts.crossJoin(F.broadcast(totals))
+        counts.crossJoin(totals)
         .select(
             "step1",
             "step2",
@@ -837,7 +837,7 @@ def rolling_distinct_sketch(
     # clamped to the corpus max day — identical day-set construction to
     # rolling_active_users, on #days rows instead of user-days
     return (
-        daily.join(F.broadcast(max_day))
+        daily.join(max_day)
         .select(
             F.explode(
                 F.sequence(

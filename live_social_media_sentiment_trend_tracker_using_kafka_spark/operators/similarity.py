@@ -326,7 +326,7 @@ def centroid_separation(
     a = carr.select(F.col(label_col).alias("label_a"), F.col("cvec").alias("va"))
     b = carr.select(F.col(label_col).alias("label_b"), F.col("cvec").alias("vb"))
     return (
-        a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
+        a.join(b, F.col("label_a") < F.col("label_b"))
         .select(
             "label_a",
             "label_b",
@@ -877,7 +877,7 @@ def label_cosine_report(
     )
     cos = F.round(cosine_similarity_col(F.col(vec_col), F.col("cvec")), round_digits)
     scored = tracked_persist(
-        embeddings.join(F.broadcast(carr), label_col)
+        embeddings.join(carr, label_col)
         .select(F.col(label_col), cos.alias("cos"))
     )
     p05 = exact_percentiles(scored, [label_col], "cos", [0.05], out_col="_p").select(
@@ -892,7 +892,7 @@ def label_cosine_report(
             F.min("cos").alias("min_cos"),
             F.sum((F.col("cos") < 0).cast("long")).alias("n_neg"),
         )
-        .join(F.broadcast(p05), F.col(label_col).eqNullSafe(F.col("_p_label")))
+        .join(p05, F.col(label_col).eqNullSafe(F.col("_p_label")))
         .select(label_col, "n_vecs", "mean_cos", "p05_cos", "min_cos", "n_neg")
         .orderBy(label_col)
     )
@@ -948,7 +948,7 @@ def embedding_outliers(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
     with_d = tracked_persist(
-        vecs.crossJoin(F.broadcast(cent)).select(
+        vecs.crossJoin(cent).select(
             id_col,
             label_col,
             F.round(
@@ -969,7 +969,7 @@ def embedding_outliers(
         F.round(F.stddev_samp("dist"), round_digits).alias("sigma"),
     )
     return (
-        with_d.crossJoin(F.broadcast(moments))
+        with_d.crossJoin(moments)
         .select(
             id_col,
             label_col,
@@ -1117,8 +1117,6 @@ def ivf_search_join(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 7,
-    max_broadcast_queries: int = 100_000,
-    assume_small_batch: bool | None = None,
 ) -> DataFrame:
     """BATCH ANN search join: top-k corpus neighbors for EVERY row of a
     query-vector table — the serving-batch shape (rerank candidates for a
@@ -1130,36 +1128,26 @@ def ivf_search_join(
     pass (fit on a bounded sample, ivf_index) and shuffled ONCE on the
     cell key; the query table — small by definition of a serving batch —
     computes its ``nprobe`` probe cells per row with one Arrow matmul
-    (make_ivf_probes_udf), explodes to (cell, query) rows, and rides in
-    as a BROADCAST. Candidate volume is Σ_q (probed cell sizes) ≈
-    |queries| · nprobe · n/C — linear in corpus size with a bounded
-    constant, no query-side collect, no corpus re-scan per query. The
+    (make_ivf_probes_udf), explodes to (cell, query) rows, and joins on
+    the cell key — AQE broadcasts the probe frame while it is small and
+    shuffles it when it is not. Candidate volume is
+    Σ_q (probed cell sizes) ≈ |queries| · nprobe · n/C — linear in corpus
+    size with a bounded constant, no query-side collect, no corpus
+    re-scan per query. The
     per-query top-k window partitions on the query id (|queries| × k·cell
     candidates, never corpus-sized state).
 
     Returns (query_id, rank, vec_id, cosine), rank 1..k by (cosine desc,
     id asc). Recall is the IVF tradeoff (cells missed by the probe set);
     with nprobe == n_clusters the result is exact — the contract test
-    compares against brute force per query.
-
-    The query-side broadcast assumes a serving-sized batch. What is
-    broadcast is the nprobe-EXPLODED probe frame (one full embedding per
-    (query, cell) row), so the gate bounds |queries| × nprobe ≤
-    ``max_broadcast_queries`` — counted with an early-exit
-    ``limit(n+1).count()``, never a full scan. Above the gate the join
-    falls back to a shuffle hash/merge join on the cell key — same
-    semantics, one extra exchange of the (still candidate-pruned) probe
-    rows (r8 VERDICT item 6). The count is ONE eager bounded job at
-    construction time; callers that already know the batch size (or whose
-    query frame is nondeterministic — sample/rand upstream would make the
-    gate decision diverge from the joined data) should pass
-    ``assume_small_batch`` explicitly to skip it.
+    compares against brute force per query. Building the frame runs one
+    Spark job, the IVF fit's bounded sample collect.
     """
     from pyspark.sql import Window
 
     cand = _ivf_probe_candidates(
         corpus, queries, n_clusters, nprobe, id_col, vec_col, seed,
-        max_broadcast_queries, assume_small_batch, query_cols=[query_id_col],
+        query_cols=[query_id_col],
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
     return (
@@ -1178,17 +1166,12 @@ def _ivf_probe_candidates(
     id_col: str,
     vec_col: str,
     seed: int,
-    max_broadcast_queries: int,
-    assume_small_batch: bool | None,
     query_cols: list[str],
 ) -> DataFrame:
     """Shared candidate-pair builder for the IVF probe-join family
     (ivf_search_join, semantic_decontaminate): corpus IVF-assigned once,
     query frame exploded to its nprobe probe cells, joined on the cell
-    key — broadcast when the exploded probe frame fits the gate, shuffle
-    join above it (one place to maintain the gate; extracted after the
-    r9 review caught semantic_decontaminate shipping without it).
-    Returns (query_cols..., id_col, cosine)."""
+    key. Returns (query_cols..., id_col, cosine)."""
     from ..functions.kernels import make_ivf_assign_udf, make_ivf_probes_udf, pair_cosine_udf
 
     _, centroids = ivf_index(corpus, n_clusters, vec_col, seed=seed)
@@ -1204,26 +1187,9 @@ def _ivf_probe_candidates(
         F.col(vec_col).alias("_qv"),
         F.explode(probes(F.col(vec_col))).alias("cluster"),
     )
-    if assume_small_batch is None:
-        # Implicit gate: ONE eager bounded job at construction time, and —
-        # because the joined frame re-executes the query pipeline — a
-        # nondeterministic source (sample/rand upstream) could make the
-        # gate decision diverge from the joined rows. Warn so callers with
-        # a known batch size (or a nondeterministic frame) pass
-        # assume_small_batch explicitly instead (r9 ADVICE).
-        warnings.warn(
-            "ivf probe gate: counting the query batch now (one bounded "
-            "Spark job at construction); pass assume_small_batch to skip "
-            "the count — required if the query frame is nondeterministic",
-            stacklevel=3,
-        )
-        query_budget = max(1, max_broadcast_queries // max(nprobe, 1))
-        small_batch = queries.limit(query_budget + 1).count() <= query_budget
-    else:
-        small_batch = assume_small_batch
     sim = pair_cosine_udf()(F.col(vec_col), F.col("_qv"))
     return (
-        assigned.join(F.broadcast(q) if small_batch else q, "cluster")
+        assigned.join(q, "cluster")
         .select(
             *[F.col(c) for c in query_cols],
             F.col(id_col),
@@ -1286,8 +1252,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 7,
-    max_broadcast_queries: int = 100_000,
-    assume_small_batch: bool | None = None,
 ) -> DataFrame:
     """EMBEDDING-level benchmark decontamination: flag every corpus row
     whose vector is within cosine ``threshold`` of ANY benchmark item —
@@ -1296,9 +1260,9 @@ def semantic_decontaminate(
     token overlap misses.
 
     Same cell-pruned shape as ``ivf_search_join`` (shared
-    ``_ivf_probe_candidates`` builder — including its broadcast gate with
-    shuffle-join fallback, since a benchmark set is bounded in practice
-    but nothing enforces that a CALLER's is), but a THRESHOLD filter
+    ``_ivf_probe_candidates`` builder; AQE picks the probe join's
+    strategy, so a caller's unbounded benchmark set shuffles instead of
+    broadcasting), but a THRESHOLD filter
     instead of per-query top-k: top-k per benchmark item would silently
     miss contaminated docs once more than k corpus rows match one
     benchmark item. Candidate volume is |benchmark| · nprobe · n/C —
@@ -1317,8 +1281,6 @@ def semantic_decontaminate(
     flagged = (
         _ivf_probe_candidates(
             corpus, benchmark, n_clusters, nprobe, id_col, vec_col, seed,
-            max_broadcast_queries=max_broadcast_queries,
-            assume_small_batch=assume_small_batch,
             query_cols=[],
         )
         .filter(F.col("cosine") >= threshold)
@@ -1670,7 +1632,7 @@ def hard_negatives(
         F.col(label_col).alias("neg_label"),
     )
     pairs = (
-        c.join(F.broadcast(a), F.col("neg_id") != F.col("anchor_id"))
+        c.join(a, F.col("neg_id") != F.col("anchor_id"))
         .filter(F.col("neg_label") != F.col("anchor_label"))
         .select(
             "anchor_id",
@@ -1739,7 +1701,7 @@ def sq8_error_audit(
     )
     # encode: q = floor((x-mn)/(mx-mn)*255 + 0.5); decode: mn + q*(mx-mn)/255
     err = (
-        ex.crossJoin(F.broadcast(stats))
+        ex.crossJoin(stats)
         .select(
             F.expr(
                 "transform(v, (x, i) -> CASE WHEN mx[i] = mn[i] THEN abs(x - mn[i]) "

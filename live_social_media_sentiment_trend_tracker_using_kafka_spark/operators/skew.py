@@ -47,7 +47,8 @@ def key_skew_audit(df: DataFrame, key_cols: list[str], k: int = 20) -> DataFrame
 
     Scale shape: ONE map-side-combinable hash agg reduces the corpus to
     |keys| rows (persisted — it feeds both the 1-row totals agg and the
-    top-k); totals join back as a 1-row broadcast; top-k is
+    top-k); the 1-row totals cross-join back (Spark plans a broadcast
+    nested-loop join from the global aggregate's 1-row estimate); top-k is
     TakeOrderedAndProject. Nothing key-skewed runs here: the audit itself
     aggregates on the (possibly hot) key, but count partials compress
     map-side so the hot key contributes one row per map task, not its raw
@@ -64,7 +65,7 @@ def key_skew_audit(df: DataFrame, key_cols: list[str], k: int = 20) -> DataFrame
         F.count(F.lit(1)).cast("double").alias("_n_keys"),
     )
     return (
-        counts.crossJoin(F.broadcast(totals))
+        counts.crossJoin(totals)
         .select(
             *key_cols,
             F.col("n_rows").cast("long").alias("n_rows"),
@@ -100,7 +101,8 @@ def concentration_deciles(
 
     Scale shape: one map-side-combinable count agg to |keys| rows
     (persisted — feeds the percentile fit, the decile agg, and the
-    total); the boundary/total aggregates are 1-row broadcasts; the
+    total); the boundary/total aggregates are 1-row frames that Spark
+    broadcasts by size; the
     cumulative window orders <= 10 rows. Integer counts keep the
     interpolated boundaries and comparisons bit-identical across engines.
     """
@@ -124,7 +126,7 @@ def concentration_deciles(
         for i in range(9)
     )
     per = (
-        counts.join(F.broadcast(bounds))
+        counts.join(bounds)
         .select(decile.alias("decile"), "n")
         .groupBy("decile")
         .agg(F.count(F.lit(1)).alias("n_keys"), F.sum("n").alias("n_rows"))
@@ -134,7 +136,7 @@ def concentration_deciles(
         Window.unboundedPreceding, 0
     )
     return (
-        per.join(F.broadcast(totals))
+        per.join(totals)
         .select(
             F.col("decile").cast("int").alias("decile"),
             F.col("n_keys").cast("long").alias("n_keys"),

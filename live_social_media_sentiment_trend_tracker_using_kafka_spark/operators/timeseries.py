@@ -364,7 +364,7 @@ def seasonality_index(
         F.count(F.lit(1)).alias("g_days"),
     )
     return (
-        per_dow.join(F.broadcast(base), key_col)
+        per_dow.join(base, key_col)
         .select(
             key_col,
             (F.col("dow0") + 1).cast("int").alias("dow"),
@@ -423,7 +423,7 @@ def cusum_changepoints(
     scored = (
         daily.withColumn("running", F.sum("n").over(w).cast("long"))
         .withColumn("k", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(base), key_col)
+        .join(base, key_col)
         .withColumn(
             "dev_int",
             F.abs(F.col("running") * F.col("g_days") - F.col("k") * F.col("g_total")),

@@ -146,11 +146,11 @@ def distributed_cume_dist(
 
     Scale regime: this operator targets LOW group cardinality (few
     segments), where the vanilla ``Window.partitionBy(group)`` serializes
-    each group through one task. The offsets side it broadcasts is
+    each group through one task. The offsets side it joins back is
     ≤ n_range_parts × |groups| rows; when |groups| approaches the cluster's
     core count the vanilla window is already fully parallel — use that
-    instead of this operator (and the broadcast stays trivially small in
-    the regime this operator is for).
+    instead of this operator (in the regime this operator is for, AQE
+    broadcasts the small offsets side).
     """
     from ..caching import tracked_persist
 
@@ -176,13 +176,11 @@ def distributed_cume_dist(
     # grouping keys keep their expression ids through the aggregate and an
     # un-aliased self-join condition would be ambiguous/trivially true
     off_keys = {"_chunk": "_off_chunk", **{c: f"_off_g{i}" for i, c in enumerate(part_cols)}}
-    off_df = F.broadcast(
-        counts.select(
-            F.col("_chunk").alias("_off_chunk"),
-            *[F.col(c).alias(off_keys[c]) for c in part_cols],
-            F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_offset"),
-            F.sum("_cnt").over(w_tot).alias("_total"),
-        )
+    off_df = counts.select(
+        F.col("_chunk").alias("_off_chunk"),
+        *[F.col(c).alias(off_keys[c]) for c in part_cols],
+        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_offset"),
+        F.sum("_cnt").over(w_tot).alias("_total"),
     )
     w = Window.partitionBy("_chunk", *part_cols).orderBy(order_col)
     # null-safe equi-join on the partition keys: window cume_dist keeps
@@ -272,9 +270,9 @@ def chunked_running_sum(
             e = F.col(c).eqNullSafe(F.col(k))
             cond = e if cond is None else cond & e
         joined = (
-            base.join(F.broadcast(bounds), cond)
+            base.join(bounds, cond)
             if part_cols
-            else base.crossJoin(F.broadcast(bounds))  # 1-row boundary frame
+            else base.crossJoin(bounds)  # 1-row boundary frame
         )
         chunked = joined.withColumn(
             "_chunk",
@@ -295,7 +293,7 @@ def chunked_running_sum(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     o_keys = [f"_o_g{i}" for i in range(len(part_cols))]
-    offsets = F.broadcast(
+    offsets = (
         chunked.groupBy(
             *[F.col(c).alias(k) for c, k in zip(part_cols, o_keys)],
             F.col("_chunk").alias("_o_chunk"),

@@ -1,3 +1,3 @@
-"""Plan-level hints: ``hints`` holds the size-gated broadcast hint and the
-plan-sized parallelism count that operators read from Catalyst's
-plan-time size estimate."""
+"""Plan-time helpers: ``hints`` holds the plan-sized parallelism count
+that operators read from Catalyst's plan-time size estimate. Join
+strategy is left to Spark's planner and AQE."""

@@ -7,17 +7,19 @@ optimizer features a 100 TB deployment needs by default:
 
 - AQE (runtime re-planning, partition coalescing, skew-join splitting)
 - Arrow for any pandas-UDF boundary
-- broadcast join threshold left at default but AQE can promote joins at runtime
+- 32 shuffle partitions, which AQE coalesces to the data's size
+- join strategy is Spark's: the broadcast threshold stays at its default,
+  no operator hints a join, and AQE turns a shuffle join into a broadcast
+  at runtime when one side turns out small
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
 
 

@@ -13,9 +13,10 @@ sleep 2-8 s. Here the same process is declarative:
   timestamp stamp (P14);
 - pipe the result to ``write_kafka`` (or any sink) to complete the producer.
 
-Scale notes: the fixture is a small dim → broadcast join, no shuffle; the
-rate source partitions ticks across executors, so the simulator scales to
-arbitrary rows/sec by adding partitions.
+Scale notes: the fixture is a small dim, so Spark broadcasts it by size
+and the stream side never shuffles; the rate source partitions ticks
+across executors, so the simulator scales to arbitrary rows/sec by adding
+partitions.
 """
 
 from __future__ import annotations
@@ -48,8 +49,9 @@ def assign_fixture_rows(ticks: DataFrame, fixture: DataFrame, seed: int = 42) ->
     e.g. the rate source) onto a pseudo-random fixture row.
 
     ``xxhash64(value, seed) mod n`` is the distributed ``random.choice``:
-    deterministic given the tick, uniform across fixture rows, and the join
-    is broadcast (fixture is a dim) — no shuffle on the stream side.
+    deterministic given the tick, uniform across fixture rows, and the
+    fixture is a small dim that Spark broadcasts by size — no shuffle on
+    the stream side.
     """
     n = fixture.count()
     if n == 0:
@@ -60,7 +62,7 @@ def assign_fixture_rows(ticks: DataFrame, fixture: DataFrame, seed: int = 42) ->
     pick = F.pmod(F.xxhash64(F.col("value"), F.lit(seed)), F.lit(n)).alias("__pick")
     return (
         ticks.select("value", pick)
-        .join(F.broadcast(indexed), F.col("__pick") == F.col("__idx"))
+        .join(indexed, F.col("__pick") == F.col("__idx"))
         .drop("__pick", "__idx", "value")
     )
 

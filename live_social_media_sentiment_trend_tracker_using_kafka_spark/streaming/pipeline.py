@@ -455,7 +455,7 @@ def stream_static_enrich(
     """Stream-static join: each micro-batch joins against a STATIC batch
     DataFrame (reference data, model thresholds, dimension attributes).
     No watermark is needed — the static side is re-read per batch and
-    holds no streaming state. The static side is broadcast: it ships to
-    every executor once per batch and the join never shuffles the stream.
+    holds no streaming state. The join carries no hint: a small static
+    side broadcasts by size each batch, and a large one shuffles.
     """
-    return stream.join(F.broadcast(static_dim), on=on, how="inner")
+    return stream.join(static_dim, on=on, how="inner")

@@ -15,11 +15,7 @@ from plan_util import (
     count_plan_nodes,
     plan_text,
 )
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans import hints
-from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans.hints import (
-    broadcast_dim,
-    estimated_plan_bytes,
-)
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.plans.hints import estimated_plan_bytes
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.schema import POST_SCHEMA
 
 SF = "/root/testdata/sf0.01"
@@ -650,92 +646,12 @@ def test_distributed_cume_dist_offsets_stay_distributed():
     assert "partitionBy(group_col)" in src2  # the prefix-sum window
 
 
-def test_dim_broadcast_gate_hints_below_threshold(spark):
-    """broadcast_dim must still force the hint while the dim estimate fits
-    the gate — even with Spark's own auto-broadcast disabled, the hinted
-    customer/supplier/nation sides all plan as BroadcastHashJoin."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = entrymod.q_local_supplier_volume(spark, SF)
-        assert_broadcast_join(df, expected=3)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_dim_broadcast_gate_falls_back_above_threshold(monkeypatch, spark):
-    """Above the gate the sf-proportional dims must NOT be hinted (r9
-    VERDICT item 2: a forced multi-GB broadcast at 100 TB is an OOM, not a
-    slow plan). With a 1-byte gate and auto-broadcast disabled, the
-    customer/supplier joins fall back to shuffle joins, a warning names
-    the refusal, and only the unconditionally-hinted nation/region dim
-    still broadcasts."""
-    import warnings as warnings_mod
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with monkeypatch.context() as mp:
-            mp.setattr(hints, "DEFAULT_DIM_BROADCAST_BYTES", 1)
-            with warnings_mod.catch_warnings(record=True) as caught:
-                warnings_mod.simplefilter("always")
-                df = entrymod.q_local_supplier_volume(spark, SF)
-        assert any("exceeds" in str(w.message) for w in caught), caught
-        plan = plan_text(df)
-        # only the two unconditional nation/region-sized hints remain
-        # (region⋈nation and the nations_in_region dim join); customer and
-        # supplier fall back to shuffle joins
-        assert count_plan_nodes(df, "BroadcastHashJoin") == 2, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # semantics unchanged by the fallback: same result as the hinted plan —
-    # built AFTER the gate is restored, so it genuinely carries the hints
-    # (the gate is read eagerly at construction; building it inside the
-    # patched block would compare the un-hinted plan against itself)
-    hinted = entrymod.q_local_supplier_volume(spark, SF)
-    assert_broadcast_join(hinted, expected=3)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, hinted.collect()))
-
-
-def test_dim_broadcast_gate_estimates_are_scan_level(monkeypatch, spark):
-    """The gate's stats probe must be sane where we rely on it: parquet
-    dim scans report file-derived estimates (small at sf0.01), and an
-    in-memory frame's default-inflated estimate exceeds any sane gate, so
-    it is refused via the over-threshold branch (warning names the
-    excess)."""
-    import warnings as warnings_mod
-
+def test_plan_size_estimate_is_scan_level(spark):
+    """plan_sized_count reads Catalyst's estimate, which must be sane for
+    parquet dim scans: file-derived and small at sf0.01."""
     part = spark.read.parquet(f"{SF}/part.parquet")
     est = estimated_plan_bytes(part.select("p_partkey", "p_brand"))
     assert 0 < est < 64 * 1024 * 1024, est
-    mem = spark.range(10).toDF("k")  # LogicalRDD/LocalRelation-backed
-    with warnings_mod.catch_warnings(record=True) as caught:
-        warnings_mod.simplefilter("always")
-        monkeypatch.setattr(hints, "DEFAULT_DIM_BROADCAST_BYTES", 1)
-        hinted = broadcast_dim(mem)
-    assert hinted is mem  # returned unhinted, AQE keeps authority
-    assert any("exceeds" in str(w.message) for w in caught), caught
-
-
-def test_dim_broadcast_gate_no_estimate_branch_stays_unhinted(monkeypatch, spark):
-    """When Catalyst can't produce a size estimate at all (the except
-    branch — e.g. a plan shape whose stats visitor raises), broadcast_dim
-    must warn 'no size estimate' and return the frame unhinted rather
-    than force a blind broadcast. The branch is unreachable with healthy
-    batch frames, so simulate the failure at the probe seam."""
-    import warnings as warnings_mod
-
-    def boom(df):
-        raise RuntimeError("stats unavailable")
-
-    monkeypatch.setattr(hints, "estimated_plan_bytes", boom)
-    mem = spark.range(10).toDF("k")
-    with warnings_mod.catch_warnings(record=True) as caught:
-        warnings_mod.simplefilter("always")
-        out = hints.broadcast_dim(mem)
-    assert out is mem
-    assert any("no size estimate" in str(w.message) for w in caught), caught
 
 
 def test_order_value_bands_distributed_not_per_segment_window(spark):
@@ -915,17 +831,16 @@ def test_mmr_rerank_candidates_bounded_before_python(spark):
 
 
 def test_packed_sequences_chunked_window_and_broadcasts(spark):
-    # r11 pack_documents: both control-plane sides (boundary arrays,
-    # chunk offsets) must BROADCAST-hash-join onto the data path, the
-    # cumsum window must partition by (shard, chunk) — never shard
-    # alone — and no sort-merge join may sneak onto the row stream
+    # r11 pack_documents: the boundary-array side must BROADCAST-hash-join
+    # onto the data path and the cumsum window must partition by (shard,
+    # chunk) — never shard alone. The chunk-offset join is AQE's choice:
+    # its broadcast hint lost a 10-pair A/B.
     df = entrymod.q_packed_sequences(spark, SF)
     plan = plan_text(df)
     # the InMemoryRelation's child subtree repeats in plan TEXT (the
     # cached bounds join renders once per consumer), so assert presence,
     # not an exact count
     assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "SortMergeJoin" not in plan, plan
     assert "windowspecdefinition(source" in plan and "_chunk" in plan, plan
     assert "CartesianProduct" not in plan
     assert_no_python_udf(df)

@@ -464,11 +464,11 @@ def test_exact_percentiles_grouped_bit_equal(spark):
         assert got["allnull"] is None
 
 
-def test_exact_percentiles_high_cardinality_fallback(spark, monkeypatch):
-    """Above the group gate (``_max_groups``) the function must fall
-    back to the vanilla frequency-weighted percentile() over the counts
-    frame (parallel at high group cardinality — the probe broadcast is
-    not), producing identical values, with a loud warning."""
+def test_exact_percentiles_high_cardinality_fallback(spark):
+    """Below the distinct budget the function takes the vanilla
+    frequency-weighted percentile() over the counts frame at any group
+    count, producing the reconstruction's values. No group-count gate
+    exists (the probe join's strategy is AQE's), so nothing warns."""
     import warnings
 
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sampling import (
@@ -484,14 +484,13 @@ def test_exact_percentiles_high_cardinality_fallback(spark, monkeypatch):
             r["g"]: None if r["pcts"] is None else list(r["pcts"])
             for r in exact_percentiles(df, ["g"], "v", ps).collect()
         }
-    monkeypatch.setattr(sampling, "_max_groups", lambda n_pcts: 2)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         fb = {
             r["g"]: None if r["pcts"] is None else list(r["pcts"])
             for r in exact_percentiles(df, ["g"], "v", ps).collect()
         }
-    assert any("falling back" in str(w.message) for w in caught)
+    assert not [w for w in caught if "exact_percentiles" in str(w.message)]
     assert fb == recon
     assert fb["gnull"] is None
 
@@ -536,11 +535,10 @@ def test_grouped_median_mad_bit_equal_to_f_median(spark):
 
 
 def test_exact_percentiles_skewed_many_groups_regime(spark, monkeypatch):
-    """BOTH gates tripped (many groups AND a skewed group over the
-    distinct budget — r12 self-review): the frequency fallback would
-    re-enter the single-reducer cliff, so the function must run the
-    reconstruction with a SHUFFLED (non-broadcast) probe join, warn
-    accordingly, and still be bit-equal to percentile()."""
+    """Many groups AND a skewed group over the distinct budget (r12
+    self-review): the frequency fallback would re-enter the
+    single-reducer cliff, so the function must run the reconstruction,
+    without a warning, and still be bit-equal to percentile()."""
     import warnings
 
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.sampling import (
@@ -559,11 +557,10 @@ def test_exact_percentiles_skewed_many_groups_regime(spark, monkeypatch):
         .agg(F.expr(f"percentile(v, array({', '.join(repr(p) for p in ps)}))").alias("w"))
         .collect()
     }
-    monkeypatch.setattr(sampling, "_max_groups", lambda n_pcts: 2)      # 6 groups > 2
     monkeypatch.setattr(sampling, "_max_distinct", lambda n_pcts: 10)  # g0's 40 > 10
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         res = exact_percentiles(df, ["g"], "v", ps)
         got = {r["g"]: list(r["pcts"]) for r in res.collect()}
-    assert any("SHUFFLED" in str(w.message) for w in caught)
+    assert not [w for w in caught if "exact_percentiles" in str(w.message)]
     assert got == want

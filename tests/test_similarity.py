@@ -322,24 +322,38 @@ def test_knn_graph_identical_pile_stays_bounded_and_sane(spark):
     assert min(pile_cos) >= 0.999999  # ties at cosine 1.0 inside the pile
 
 
-def test_ivf_search_join_broadcast_gate_fallback(spark):
-    """r8 VERDICT item 6: above max_broadcast_queries the probe join must
-    fall back to a shuffle join — same rows, no broadcast of the query
-    frame in the static plan — and below it keep the broadcast."""
+def test_ivf_search_join_builds_without_a_gate_job(spark):
+    """Building ivf_search_join runs no Spark job beyond the IVF fit's
+    sample collect: no count of the query batch decides the join
+    strategy (AQE does). The rows are the full 3 queries x k=3."""
     from pyspark.sql import functions as F
 
     df, _ = _fixture(spark)
     queries = df.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(k=3, n_clusters=4, nprobe=4)
-    broad = similarity.ivf_search_join(df, queries, **kw)
-    fell_back = similarity.ivf_search_join(df, queries, max_broadcast_queries=2, **kw)
-    b_plan = fell_back._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in b_plan, b_plan
-    got_b = sorted(map(tuple, broad.collect()))
-    got_f = sorted(map(tuple, fell_back.collect()))
-    assert got_b == got_f and len(got_b) == 9
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_while(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    _, fit_jobs = jobs_while(
+        "ivf-fit", lambda: similarity.ivf_index(df, 4, "embedding", seed=7)
+    )
+    out, build_jobs = jobs_while(
+        "ivf-build",
+        lambda: similarity.ivf_search_join(df, queries, k=3, n_clusters=4, nprobe=4),
+    )
+    assert fit_jobs >= 1 and build_jobs == fit_jobs
+    rows = out.collect()
+    assert len(rows) == 9
+    assert sorted({r["query_id"] for r in rows}) == [0, 1, 2]
 
 
 def test_ivf_probe_joins_assign_each_corpus_row_once(spark):
@@ -357,7 +371,7 @@ def test_ivf_probe_joins_assign_each_corpus_row_once(spark):
     queries = df.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(n_clusters=4, nprobe=2, assume_small_batch=True)
+    kw = dict(n_clusters=4, nprobe=2)
     for out in (
         similarity.ivf_search_join(df, queries, k=3, **kw),
         similarity.semantic_decontaminate(df, queries.select("embedding"), **kw),

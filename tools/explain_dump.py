@@ -10,7 +10,20 @@ the old commit) and once against HEAD, e.g.::
         pagerank_dangling part_pagerank
 
 ``--repo`` selects which tree's ``__spark_entry__`` (and engine package)
-is imported; default is this repo. Plans are captured at
+is imported; default is this repo. With no query names, every registered
+query is dumped — the plan diff between two trees::
+
+    python tools/explain_dump.py --repo /tmp/parent --out /tmp/p_old
+    python tools/explain_dump.py --out /tmp/p_new
+    diff -r -I '^# ' /tmp/p_old /tmp/p_new
+
+Expression ids, plan ids and lambda variable names are stripped (they
+count up per session, so they differ between two runs of one tree), and
+caches are released between queries. A few plans still differ between
+two runs of one tree: the enrichment queries embed ``current_timestamp``,
+the streaming sink queries read fresh temp directories, and
+``supplier_diversity`` orders its Expand columns per run. Plans are
+captured at
 ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) on a bench-shaped session.
 Queries whose construction runs eager jobs (percentile dispatch, the
 iterative pagerank tiers) show their *final* returned plan, with
@@ -30,6 +43,7 @@ import argparse
 import contextlib
 import io
 import os
+import re
 import sys
 
 
@@ -40,7 +54,7 @@ def main() -> int:
     ap.add_argument("--suffix", default="")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("--trace", action="store_true")
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     repo = os.path.abspath(args.repo)
@@ -48,6 +62,7 @@ def main() -> int:
     import __spark_entry__ as entrymod  # noqa: E402
 
     assert entrymod.__file__.startswith(repo), entrymod.__file__
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching  # noqa: E402
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.session import (  # noqa: E402
         build_session,
     )
@@ -66,7 +81,10 @@ def main() -> int:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        return buf.getvalue()
+        text = buf.getvalue()
+        for pat, rep in ((r"#\d+L?", "#?"), (r"plan_id=\d+", "plan_id=?"), (r"\bx_\d+", "x_?")):
+            text = re.sub(pat, rep, text)
+        return text
 
     trace: list[tuple[str, str]] = []
     if args.trace:
@@ -74,10 +92,6 @@ def main() -> int:
         # DataFrame overrides the base-class method, so patching only
         # pyspark.sql.DataFrame silently misses real sessions)
         from pyspark.sql import DataFrame as _DF
-
-        from live_social_media_sentiment_trend_tracker_using_kafka_spark import (
-            caching as _caching,
-        )
 
         classes = [_DF]
         try:
@@ -96,16 +110,16 @@ def main() -> int:
                 return _orig(self, *a, **kw)
 
             cls.localCheckpoint = traced_lc
-        orig_tp = _caching.tracked_persist
+        orig_tp = caching.tracked_persist
 
         def traced_tp(df):
             trace.append(("tracked_persist", explain_str(df)))
             return orig_tp(df)
 
-        _caching.tracked_persist = traced_tp
+        caching.tracked_persist = traced_tp
 
     rc = 0
-    for name in args.names:
+    for name in args.names or list(qs):
         trace.clear()
         try:
             df = qs[name](spark, sf_dir)
@@ -127,6 +141,10 @@ def main() -> int:
                     f"local[{args.cpus}], repo={repo}\n")
             f.write(text)
         print(f"wrote {path} ({len(text)} chars)")
+        caching.release_all()
+        for t in spark.catalog.listTables():
+            if t.isTemporary:
+                spark.catalog.dropTempView(t.name)
     spark.stop()
     return rc
 
