@@ -512,7 +512,7 @@ def q_url_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 sequence packing: docs laid end-to-end per source shard, cut
-    into 512-token training sequences (window cumsum, shard-partitioned)."""
+    into 512-token training sequences (chunked per-shard running sum)."""
     return corpus.pack_documents(_t(spark, sf_dir, "documents"), max_tokens=512).orderBy(
         "source", "doc_id"
     )
@@ -1744,8 +1744,10 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 dataset mixing: per-source BPE-token budgets filled in
-    deterministic md5 priority order (one running-sum window per source) —
-    the op that turns source weights into an actual training mixture."""
+    deterministic (md5(id), id) priority order — the op that turns source
+    weights into an actual training mixture. The per-source running sum
+    rides window_funcs.chunked_running_sum (ordered chunks, one per
+    shuffle partition)."""
     return sampling.token_budget_mix(
         _t(spark, sf_dir, "documents"), budgets={"src0": 1500, "src1": 800, "src2": 300}
     )
@@ -2803,9 +2805,10 @@ def q_domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen by the engine-neutral (md5(id), id) rank — the per-domain
     quota downsample (CCNet/Gopher) that stops one crawl domain drowning
     the training mixture. Hash-green: the oracle is a plain ROW_NUMBER
-    window; the Spark side is the DISTRIBUTED chunked-rank construction
-    (sampling.capped_group_sample) that stays parallel inside hot
-    domains, asserted plan-equal in tests."""
+    window; the Spark side (sampling.capped_group_sample) is a running
+    count from window_funcs.chunked_running_sum that stays parallel
+    inside hot domains and drops chunks already past the cap before they
+    sort, both pinned in tests/test_plans.py."""
     docs = _t(spark, sf_dir, "documents")
     return (
         sampling.capped_group_sample(docs, "source", cap=15, id_col="doc_id")

@@ -129,7 +129,6 @@ def pack_documents(
     id_col: str = "doc_id",
     shard_col: str = "source",
     max_tokens: int = 512,
-    chunks: int | None = None,
 ) -> DataFrame:
     """Sequence packing: assign docs to fixed token-budget training
     sequences (id, shard, n_tokens, seq_id, seq_offset).
@@ -148,23 +147,19 @@ def pack_documents(
     quantile_normalize): the r10 version ran ONE window cumsum partitioned
     by the shard key, i.e. one reducer sorting each shard end-to-end — a
     single-source 100 TB shard is a single-task job failure. The running
-    token sum is now ``window_funcs.chunked_running_sum`` (two-level
-    distributed prefix sum over order-preserving percentile_approx id
-    chunks; see its docstring for the shape and the chunk-independence /
-    NULL / id-uniqueness contract). ``chunks=None`` auto-scales the chunk
-    count with Catalyst's input-size estimate, so the worst task stays
-    bounded at any corpus size instead of riding a hand-tuned constant.
-    Token counting runs once (the slim frame is persisted inside the
-    helper) and only four slim columns ever shuffle — the text stays at
-    the scan.
+    token sum is now ``window_funcs.chunked_running_sum`` over
+    ``[id_col]``: ordered id chunks, ``spark.sql.shuffle.partitions`` of
+    them, sort in parallel, and per-chunk offsets stitch them into the
+    exact per-shard running sum (see its docstring for the shape and the
+    NULL / tie contract; ids are unique, so no two docs tie). Only the
+    slim (id, shard, n_tokens) columns shuffle — the text stays at the
+    scan.
     """
     from .window_funcs import chunked_running_sum
 
     n_tok = F.size(word_tokens_col(F.col(text_col))).cast("long")
     base = df.select(F.col(id_col), F.col(shard_col), n_tok.alias("n_tokens"))
-    return chunked_running_sum(
-        base, [shard_col], id_col, "n_tokens", "_cum", chunks=chunks
-    ).select(
+    return chunked_running_sum(base, [shard_col], [id_col], "n_tokens", "_cum").select(
         id_col,
         shard_col,
         "n_tokens",

@@ -1136,9 +1136,11 @@ def order_value_percentile_bands(
     small). The naive ``Window.partitionBy(segment)`` form would sort
     each WHOLE segment in one task (|segments| cores total — measured
     76x at a 20x probe); the exact distribution instead comes from
-    distributed_cume_dist (range-repartition + per-chunk offsets joined
-    back + chunk-local cumsum — n_range_parts-way parallel, still
-    bit-exact cume_dist semantics). Then a |segments|·|bands| hash agg.
+    distributed_cume_dist, a running count from
+    ``window_funcs.chunked_running_sum`` (range-repartition into
+    ``spark.sql.shuffle.partitions`` ordered chunks + per-chunk offsets
+    joined back + chunk-local count — still bit-exact cume_dist
+    semantics). Then a |segments|·|bands| hash agg.
     """
     from .window_funcs import distributed_cume_dist
 

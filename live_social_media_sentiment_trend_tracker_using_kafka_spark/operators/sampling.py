@@ -12,11 +12,10 @@ Scale shapes:
 - ``hash_split``: stateless per-row labeling — no shuffle at all; the split
   ratios hold per-partition by hash uniformity, so a 100 TB corpus splits
   in one map pass.
-- ``token_budget_mix``: one window pass per source (shuffle on source,
-  per-key sort) — the grouping key is the handful of sources, so skew is
-  the norm; the window is a running sum, which Spark computes with a single
-  per-partition scan after the sort. For few-source corpora at extreme
-  scale, pre-aggregate per (source, md5-prefix) chunk to shard the sort.
+- ``token_budget_mix``: the grouping key is the handful of sources, so
+  skew is the norm; the per-source running sum rides
+  ``window_funcs.chunked_running_sum``, which sorts ordered chunks of each
+  source in parallel instead of one whole source per task.
 - ``quality_percentile_filter``: per-language exact percentile via
   ``exact_percentiles`` (few groups) broadcast back — no second scan of
   text (the score column is reused).
@@ -117,7 +116,6 @@ def token_budget_mix(
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    chunks: int = 256,
 ) -> DataFrame:
     """Dataset mixing: per-source token budgets, deterministically filled.
 
@@ -127,56 +125,27 @@ def token_budget_mix(
     boundary is dropped). Sources absent from ``budgets`` are dropped
     entirely. Returns (id, source, n_tokens, cum_tokens) for the kept docs.
 
-    Scale shape: a naive running-sum window partitioned by source sorts each
-    source's ENTIRE doc set on one reducer — sources are few, so that's a
-    handful of giant sorted partitions at corpus scale. Instead the md5
-    PREFIX shards the sort: the global priority order is (md5, id), and a
-    hex prefix is an order-preserving chunk key, so per-(source, chunk)
-    running sums plus each chunk's starting offset (a second window over the
-    |sources|·``chunks``-row totals table — tiny) reassemble the exact
-    global running sum with ``chunks``-fold sort parallelism.
+    Scale shape: sources are few, so a running-sum window partitioned by
+    source would sort each source's whole doc set on one reducer. The
+    running total rides ``window_funcs.chunked_running_sum`` over
+    (md5, id) instead. Only the slim (id, source, n_tokens, md5) columns
+    shuffle.
     """
+    from .window_funcs import chunked_running_sum
+
     budget = None
     for src, b in budgets.items():
         cond = F.col(source_col) == src
         budget = F.when(cond, b) if budget is None else budget.when(cond, b)
     budget = budget.otherwise(F.lit(None)) if budget is not None else F.lit(None)
-    # effective chunk count is 16^hex_width (nearest power of 16 >= chunks)
-    hex_width = max(1, ((max(chunks, 2) - 1).bit_length() + 3) // 4)
-    # base feeds BOTH the chunk-totals aggregate and the window branch —
-    # persist so the dominant pass (BPE token counting over text) runs once
-    # per corpus, not once per consumer (same convention as tfidf's tf frame).
-    base = tracked_persist(
-        df.select(
-            F.col(id_col),
-            F.col(source_col),
-            token_count_col(F.col(text_col)).alias("n_tokens"),
-            F.md5(F.col(id_col).cast("string")).alias("__md5"),
-        ).withColumn("__chunk", F.substring("__md5", 1, hex_width))
-    )
-    in_chunk = (
-        Window.partitionBy(source_col, "__chunk")
-        .orderBy("__md5", id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    chunk_offsets = (
-        Window.partitionBy(source_col)
-        .orderBy("__chunk")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    totals = (
-        base.groupBy(source_col, "__chunk")
-        .agg(F.sum("n_tokens").alias("__chunk_total"))
-        .withColumn(
-            "__offset",
-            F.sum("__chunk_total").over(chunk_offsets) - F.col("__chunk_total"),
-        )
-        .select(source_col, "__chunk", "__offset")
+    base = df.select(
+        F.col(id_col),
+        F.col(source_col),
+        token_count_col(F.col(text_col)).alias("n_tokens"),
+        F.md5(F.col(id_col).cast("string")).alias("__md5"),
     )
     return (
-        base.withColumn("__cum_in_chunk", F.sum("n_tokens").over(in_chunk))
-        .join(totals, [source_col, "__chunk"])
-        .withColumn("cum_tokens", F.col("__offset") + F.col("__cum_in_chunk"))
+        chunked_running_sum(base, [source_col], ["__md5", id_col], "n_tokens", "cum_tokens")
         .withColumn("__budget", budget)
         .filter(F.col("cum_tokens") <= F.col("__budget"))
         .select(id_col, source_col, "n_tokens", "cum_tokens")
@@ -300,7 +269,6 @@ def capped_group_sample(
     group_col: str,
     cap: int,
     id_col: str = "doc_id",
-    n_range_parts: int = 64,
 ) -> DataFrame:
     """Cap over-represented groups: keep at most ``cap`` rows per group —
     the domain-balancing downsample every curation pipeline runs before
@@ -310,66 +278,29 @@ def capped_group_sample(
     the rest of the sampling family uses.
 
     Scale shape — the naive form is ``row_number() OVER (PARTITION BY
-    group ORDER BY md5)``, which sorts each WHOLE group in one task: the
-    exact parallelism trap distributed_cume_dist exists for, and the hot
-    group is precisely the one being capped. So this uses the same
-    chunked construction: range-repartition on (group, md5, id) pinned
-    by persist, per-(chunk, group) counts prefix-summed as a fully
-    DISTRIBUTED window over chunks within each group (|groups| window
-    partitions of ≤ n_range_parts rows each — the r9 sweep removed the
-    |chunks|×|groups| driver collect here, same fix as
-    distributed_cume_dist: at 100 TB ``group_col`` is a DOMAIN with
-    millions of values), joined back WITHOUT a broadcast hint (r10: a
-    forced broadcast of a |groups|-row table contradicts the
-    millions-of-domains regime — AQE broadcasts it at runtime while it
-    is actually small and otherwise shuffle-joins on the high-cardinality
-    (chunk, group) key), and a chunk-LOCAL row_number + offset. Chunks whose offset already exceeds ``cap``
-    are dropped BEFORE their sort — at 100 TB a hot domain's tail
-    chunks never even sort. Keys are unique ((md5, id) collisions
-    impossible within a group), so ranks are total and exact.
+    group ORDER BY md5)``, which sorts each WHOLE group in one task, and
+    the hot group is precisely the one being capped. So the rank is a
+    running count from ``window_funcs.chunked_running_sum`` over
+    (md5, id). The filter on its ``_offset`` (the group's count in
+    earlier chunks) runs below the chunk-local window, so a hot domain's
+    chunks that start at or past ``cap`` are dropped before they sort.
+    Keys are unique ((md5, id) collisions impossible within a group), so
+    the running count is the exact row number.
 
     Returns the kept rows (original columns), ordered by (group, id).
     """
-    from ..caching import tracked_persist
+    from .window_funcs import chunked_running_sum
 
-    ordv = F.md5(F.col(id_col).cast("string"))
-    chunked = tracked_persist(
-        df.withColumn("_ord", ordv)
-        .repartitionByRange(n_range_parts, F.col(group_col), F.col("_ord"), F.col(id_col))
-        .withColumn("_chunk", F.spark_partition_id())
+    ranked = chunked_running_sum(
+        df.withColumn("_ord", F.md5(F.col(id_col).cast("string"))),
+        [group_col],
+        ["_ord", id_col],
+        F.lit(1),
+        "_rn",
     )
-    counts = chunked.groupBy("_chunk", group_col).agg(F.count(F.lit(1)).alias("_cnt"))
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # renamed keys: the grouping attributes keep their expression ids
-    # through the aggregate, so an un-aliased self-join would be ambiguous.
-    # NO forced broadcast here: THIS operator's regime is millions of
-    # domains, where |off_df| ≈ |groups| rows would be a multi-GB forced
-    # broadcast. AQE picks the join: it converts to broadcast at runtime
-    # whenever the materialized offsets side is actually small (every sf
-    # tested here),
-    # and keeps a fully parallel shuffle join on (_chunk, group) — high
-    # key cardinality, no serialization — when it is not.
-    off_df = counts.select(
-        F.col("_chunk").alias("_off_chunk"),
-        F.col(group_col).alias("_off_g"),
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_offset"),
-    )
-    join_cond = (chunked["_chunk"] == off_df["_off_chunk"]) & chunked[group_col].eqNullSafe(
-        off_df["_off_g"]
-    )
-    w = Window.partitionBy("_chunk", group_col).orderBy("_ord", id_col)
     return (
-        chunked.join(off_df, join_cond)
-        .drop("_off_chunk", "_off_g")
-        # a chunk that starts at or past the cap contributes nothing —
-        # prune it before the window ever sorts it
-        .filter(F.col("_offset") < cap)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") + F.col("_offset") <= cap)
+        ranked.filter(F.col("_offset") < cap)
+        .filter(F.col("_rn") <= cap)
         .select(*df.columns)
         .orderBy(group_col, id_col)
     )
@@ -610,8 +541,10 @@ def exact_percentiles(
 
     1. distinct (group, value) counts — a distributed hash agg;
     2. per-group running count over the distinct values via
-       ``chunked_running_sum`` — each distinct value owns the sorted-
-       index span [cum−cnt, cum) of its group;
+       ``chunked_running_sum`` ordered by ``[value_col]`` (ordered
+       chunks sorted in parallel, never one group per task) — each
+       distinct value owns the sorted-index span [cum−cnt, cum) of its
+       group;
     3. per group, the 2·|percentages| probe indices (lower/upper
        neighbours of ``pos = p·(N−1)``) joined against those spans —
        each probe hits exactly one span;
@@ -685,8 +618,6 @@ def exact_percentiles(
         # (stats pass + aggregate/running sum); caller-supplied counts
         # frames manage their own persistence (quantile_normalize folds
         # off an already-persisted rank frame)
-        from ..caching import tracked_persist
-
         gvals = tracked_persist(gvals)
     # one eager stats pass: the max per-group distinct count drives the
     # regime choice (the frame is persisted — this is the same
@@ -712,7 +643,7 @@ def exact_percentiles(
                 "greatest(_gcnt, 1L))"
             ).alias(out_col)
         )
-    grun = chunked_running_sum(gvals, part_cols, value_col, "_gcnt", "_gcum")
+    grun = chunked_running_sum(gvals, part_cols, [value_col], "_gcnt", "_gcum")
     t_keys = [f"_t_g{i}" for i in range(len(part_cols))]
     totals = grun.groupBy(
         *[F.col(c).alias(k) for c, k in zip(part_cols, t_keys)]
@@ -823,8 +754,6 @@ def grouped_median_mad(
     [med_col, mad_col]`` (all-NULL groups carry NULL stats, matching the
     ``groupBy().agg(median)`` they replace).
     """
-    from ..caching import tracked_persist
-
     cnts = tracked_persist(
         df.groupBy(*part_cols, value_col).agg(F.count(F.lit(1)).alias("_gcnt"))
     )
@@ -912,11 +841,11 @@ def quantile_normalize(
     COUNT-BASED (r11 — this closes the few-groups window-skew caveat
     the r10 version documented): rank depends only on (group, score),
     so a (group, score) hash agg collapses the corpus to its distinct
-    score values, the running count over those values rides
-    ``window_funcs.chunked_running_sum`` (two-level distributed prefix
-    sum — bounded worst task even when scores are continuous
-    full-precision doubles and the distinct frame approaches corpus
-    size), and rows join back on (group, score) — a well-spread key,
+    score values, the running count and group total over those values
+    come from ``window_funcs.chunked_running_sum`` (ordered chunks sort
+    in parallel, so the worst task stays bounded even when scores are
+    continuous full-precision doubles and the distinct frame approaches
+    corpus size), and rows join back on (group, score) — a well-spread key,
     unlike the few-groups partition. No global sort of the corpus — the
     grid bounds the global-distribution cost at |grid| regardless of
     corpus size.
@@ -938,15 +867,14 @@ def quantile_normalize(
     # The running count itself rides chunked_running_sum (r11: even the
     # distinct-values frame is unbounded when scores are continuous
     # full-precision doubles — distinct (group, score) then approaches
-    # corpus size and a per-group window would be single-task again);
-    # group totals are one tiny agg over the helper's persisted frame.
+    # corpus size and a per-group window would be single-task again),
+    # which also carries each group's total.
     from .window_funcs import chunked_running_sum
 
     vals = df.groupBy(group_col, score_col).agg(
         F.count(F.lit(1)).alias("_cnt")
     )
-    run = chunked_running_sum(vals, [group_col], score_col, "_cnt", "_run")
-    totals = run.groupBy(F.col(group_col).alias("_t_g")).agg(F.sum("_cnt").alias("_n"))
+    run = chunked_running_sum(vals, [group_col], [score_col], "_cnt", "_run")
     # exact type-7 grid, reconstructed distributed — Spark's own
     # percentile() buffers every value on one reducer (superlinear in
     # distinct scores, measured in PLANS.md r11); bit-equal by test.
@@ -958,18 +886,15 @@ def quantile_normalize(
         grid_points,
         counts=run.groupBy(score_col).agg(F.sum("_cnt").alias("_gcnt")),
     )
-    pranked = (
-        run.join(totals, F.col(group_col).eqNullSafe(F.col("_t_g")))
-        .select(
-            group_col,
-            score_col,
-            F.when(
-                F.col("_n") > 1,
-                (F.col("_run") - F.col("_cnt")) / (F.col("_n") - 1),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("_p"),
+    pranked = run.select(
+        group_col,
+        score_col,
+        F.when(
+            F.col("_total") > 1,
+            (F.col("_run") - F.col("_cnt")) / (F.col("_total") - 1),
         )
+        .otherwise(F.lit(0.0))
+        .alias("_p"),
     )
     # null-safe restore join: a NULL group key is a legitimate group (it
     # rode eqNullSafe through the rank path above) — plain list-equality

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fan_out(df: DataFrame, min_factor: int = 1) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Guarantee enough partitions for CPU-bound per-row work.
 
     A small local parquet file scans as ONE split, so signature/fingerprint
@@ -28,7 +28,7 @@ def fan_out(df: DataFrame, min_factor: int = 1) -> DataFrame:
     compute — an unconditional repartition of a 100 TB scan would be the
     bug, which is why this is opt-in per operator and not in ``table()``.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

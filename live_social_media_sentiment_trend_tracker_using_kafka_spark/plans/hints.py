@@ -7,9 +7,11 @@ plan analysis (parquet relations report file-size-derived bytes and
 projections scale by row width), so it costs zero jobs even when a query
 object is rebuilt hundreds of times.
 
-``plan_sized_count`` turns that estimate into a parallelism width
-(``chunked_running_sum``'s chunks, ``inverted_index``'s salts): one unit
-per byte budget, clamped.
+``plan_sized_count`` turns that estimate into ``inverted_index``'s salt
+width: one salt per byte budget, clamped. It serves that one operator
+because a ``collect_list`` partial keeps every element, so AQE cannot
+shrink a hot term; chunked running totals take their width from
+``spark.sql.shuffle.partitions`` instead.
 """
 
 from __future__ import annotations

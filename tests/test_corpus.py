@@ -9,6 +9,7 @@ import random
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import at_widths
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.corpus import (
     stratified_sample,
     tfidf_top_terms,
@@ -94,11 +95,15 @@ def test_pack_documents_golden(spark):
 
 
 def test_pack_documents_chunk_count_independent(spark):
-    """The two-level prefix sum is bit-for-bit identical for ANY chunk
-    count (r11 scale rewrite): chunk boundaries affect parallelism only —
-    an order-preserving split reassembles the same global running sum."""
+    """The chunked running sum is bit-for-bit identical at ANY chunk
+    width (``spark.sql.shuffle.partitions``): chunk boundaries affect
+    parallelism only — an order-preserving split reassembles the same
+    per-shard running sum the plain window computes."""
+    from pyspark.sql import Window
+
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.corpus import (
         pack_documents,
+        word_tokens_col,
     )
 
     rng = random.Random(11)
@@ -108,15 +113,19 @@ def test_pack_documents_chunk_count_independent(spark):
         for i in range(400)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "source"])
-    outs = [
-        sorted(
-            (r["doc_id"], r["n_tokens"], r["seq_id"], r["seq_offset"])
-            for r in pack_documents(df, max_tokens=64, chunks=c).collect()
-        )
-        for c in (1, 7, 256)
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) == 400
+    w = Window.partitionBy("source").orderBy("doc_id")
+    n_tok = F.size(word_tokens_col(F.col("text"))).cast("long")
+    want = sorted(
+        (r["doc_id"], r["n_tokens"], r["_prior"] // 64, r["_prior"] % 64)
+        for r in df.select("doc_id", "source", n_tok.alias("n_tokens"))
+        .withColumn("_prior", F.sum("n_tokens").over(w) - F.col("n_tokens"))
+        .collect()
+    )
+    assert len(want) == 400
+    for got in at_widths(spark, lambda: pack_documents(df, max_tokens=64)):
+        assert sorted(
+            (r["doc_id"], r["n_tokens"], r["seq_id"], r["seq_offset"]) for r in got
+        ) == want
 
 
 def test_pack_documents_matches_single_window_reference(spark):
@@ -155,11 +164,8 @@ def test_pack_documents_matches_single_window_reference(spark):
         )
         .collect()
     }
-    got = {
-        r["doc_id"]: (r["seq_id"], r["seq_offset"])
-        for r in pack_documents(df, max_tokens=32, chunks=16).collect()
-    }
-    assert got == ref
+    for got in at_widths(spark, lambda: pack_documents(df, max_tokens=32)):
+        assert {r["doc_id"]: (r["seq_id"], r["seq_offset"]) for r in got} == ref
 
 
 def test_line_dedup_removes_boilerplate_keeps_order(spark):

@@ -21,6 +21,14 @@ from live_social_media_sentiment_trend_tracker_using_kafka_spark.schema import P
 SF = "/root/testdata/sf0.01"
 
 
+def assert_chunked_running_total(plan: str, group: str) -> None:
+    """The plan shape of window_funcs.chunked_running_sum over ``group``:
+    a range split that leads with the group, and a local window
+    partitioned by the chunk id."""
+    assert f"rangepartitioning({group}#" in plan, plan
+    assert "windowspecdefinition(_chunk#" in plan, plan
+
+
 def test_shipping_priority_broadcasts_customer(spark):
     df = entrymod.q_shipping_priority(spark, SF)
     assert_broadcast_join(df, expected=1)
@@ -624,26 +632,36 @@ def test_r6_queries_stay_jvm_side(spark):
         assert_no_python_udf(df)
 
 
-def test_distributed_cume_dist_offsets_stay_distributed():
-    """r8 VERDICT item 5 (+ the r9 sweep that found the same shape in
-    capped_group_sample): per-(chunk, group) offsets must be a
-    distributed two-level prefix sum, never a driver-side collect whose
-    size is |chunks|x|groups|. Pin at the source level: neither operator
-    may call .collect() at all (their only driver-side values are
-    literals)."""
-    import inspect
+def test_chunked_running_total_has_one_implementation():
+    """Every chunked running total rides window_funcs.chunked_running_sum:
+    the package's only range split (``repartitionByRange``) and only chunk
+    tag (``spark_partition_id``) are call sites inside that helper, so a
+    second hand-built copy cannot creep back in. The helper never calls
+    ``.collect()``: its per-(group, chunk) offsets stay a distributed
+    window (a driver-side collect would be |chunks|x|groups| rows)."""
+    import ast
+    import pathlib
 
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
-        sampling,
         window_funcs,
     )
 
-    src = inspect.getsource(window_funcs.distributed_cume_dist)
-    assert ".collect()" not in src, "driver-side offsets crept back in"
-    assert "Window.partitionBy(*part_cols)" in src  # the prefix-sum window
-    src2 = inspect.getsource(sampling.capped_group_sample)
-    assert ".collect()" not in src2, "driver-side offsets crept back in"
-    assert "partitionBy(group_col)" in src2  # the prefix-sum window
+    helper = "operators/window_funcs.py:chunked_running_sum"
+    pkg = pathlib.Path(window_funcs.__file__).resolve().parent.parent
+    sites: dict[str, list[str]] = {"repartitionByRange": [], "spark_partition_id": [], "collect": []}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]:
+            where = f"{path.relative_to(pkg)}:{fn.name}"
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                    if called in sites:
+                        sites[called].append(where)
+    assert sites["repartitionByRange"] == [helper], sites
+    assert sites["spark_partition_id"] == [helper], sites
+    assert helper not in sites["collect"], "driver-side offsets crept back in"
 
 
 def test_plan_size_estimate_is_scan_level(spark):
@@ -655,14 +673,13 @@ def test_plan_size_estimate_is_scan_level(spark):
 
 
 def test_order_value_bands_distributed_not_per_segment_window(spark):
-    """The exact distribution must ride distributed_cume_dist: a RANGE
-    repartition plus chunk-local windows — never a bare
+    """The exact distribution must ride chunked_running_sum: a RANGE
+    repartition on the segment plus a chunk-local window — never a bare
     Window.partitionBy(segment) whose parallelism is |segments|. The
-    chunk id must appear in the window partition keys."""
+    chunk id must lead the window partition keys."""
     df = entrymod.q_order_value_bands(spark, SF)
     plan = plan_text(df)
-    assert "rangepartitioning(c_mktsegment" in plan, plan
-    assert "hashpartitioning(_chunk" in plan, plan
+    assert_chunked_running_total(plan, "c_mktsegment")
     assert "cume_dist" not in plan, plan
 
 
@@ -702,14 +719,33 @@ def test_registry_wide_no_cartesian_product(spark):
 
 
 def test_domain_cap_sample_distributed_not_per_group_window(spark):
-    """The per-domain cap must ride the chunked rank: a RANGE repartition
-    plus chunk-local row_number — never a bare Window.partitionBy(source)
-    whose parallelism is |domains| (the hot domain IS the one being
-    capped). Chunk id must appear in the window partition keys."""
+    """The per-domain cap must ride the chunked running count: a RANGE
+    repartition plus a chunk-local window — never a bare
+    Window.partitionBy(source) whose parallelism is |domains| (the hot
+    domain IS the one being capped). The filter on the chunk offset
+    (``< 15``, the cap) must run BELOW that window, so a hot domain's
+    chunks past the cap never sort."""
+    import re
+
     df = entrymod.q_domain_cap_sample(spark, SF)
     plan = plan_text(df)
-    assert "rangepartitioning(source" in plan, plan
-    assert "hashpartitioning(_chunk" in plan, plan
+    assert_chunked_running_total(plan, "source")
+    local_windows = [
+        int(m.group(1))
+        for m in re.finditer(
+            r"^\((\d+)\) Window\n.*\nArguments: \[.*windowspecdefinition\(_chunk#", plan, re.M
+        )
+    ]
+    offset_filters = [
+        int(m.group(1))
+        for m in re.finditer(
+            r"^\((\d+)\) Filter\n.*\nCondition : \(coalesce\(.*\) < 15\)$", plan, re.M
+        )
+    ]
+    # formatted plans number each operator after its children, so a
+    # filter below the local window carries a smaller id
+    assert local_windows and offset_filters, plan
+    assert min(offset_filters) < min(local_windows), plan
     assert_no_python_udf(df)
 
 
@@ -830,18 +866,16 @@ def test_mmr_rerank_candidates_bounded_before_python(spark):
     assert count_plan_nodes(df, "FlatMapGroupsInPandas") == 1, plan
 
 
-def test_packed_sequences_chunked_window_and_broadcasts(spark):
-    # r11 pack_documents: the boundary-array side must BROADCAST-hash-join
-    # onto the data path and the cumsum window must partition by (shard,
-    # chunk) — never shard alone. The chunk-offset join is AQE's choice:
-    # its broadcast hint lost a 10-pair A/B.
+def test_packed_sequences_chunked_window(spark):
+    # pack_documents: the running token sum rides chunked_running_sum — a
+    # range split on (shard, id) and a cumsum window partitioned by the
+    # chunk, never by the shard alone. Chunks come from the range split,
+    # not from percentile_approx bounds; the chunk-offset join is AQE's
+    # choice.
     df = entrymod.q_packed_sequences(spark, SF)
     plan = plan_text(df)
-    # the InMemoryRelation's child subtree repeats in plan TEXT (the
-    # cached bounds join renders once per consumer), so assert presence,
-    # not an exact count
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "windowspecdefinition(source" in plan and "_chunk" in plan, plan
+    assert_chunked_running_total(plan, "source")
+    assert "percentile_approx" not in plan, plan
     assert "CartesianProduct" not in plan
     assert_no_python_udf(df)
 
@@ -854,11 +888,11 @@ def test_quantile_normalize_rank_over_distinct_values(monkeypatch, spark):
     # SF the r12 distinct-count dispatch routes the grid to the GUARDED
     # frequency-weighted percentile (greatest(_gcnt marker), so the only
     # BNLJ is the 1-row grid-array cross join; forcing the
-    # reconstruction (distinct gate zeroed) restores the other two (the
-    # 2·grid_points probe-index range join and the grid's global
-    # chunked_running_sum boundary array) — both regimes pinned here. The
-    # rank path's chunked_running_sum is GROUPED (per-source), so its
-    # bounds join is a broadcast hash join, never nested-loop.
+    # reconstruction (distinct gate zeroed) adds one more: the
+    # 2·grid_points probe-index range join — both regimes pinned here.
+    # Both running counts (the per-source rank and the global grid) ride
+    # chunked_running_sum, whose chunk offsets join on (chunk, group)
+    # keys, so neither adds a nested loop.
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import sampling
 
     df = entrymod.q_quality_quantile_normalize(spark, SF)
@@ -867,10 +901,11 @@ def test_quantile_normalize_rank_over_distinct_values(monkeypatch, spark):
     assert "CartesianProduct" not in plan, plan
     assert count_plan_nodes(df, "BroadcastNestedLoopJoin") == 1, plan
     assert "greatest(_gcnt" in plan, plan  # guarded frequency grid
+    assert_chunked_running_total(plan, "source")
     assert_no_python_udf(df)
     monkeypatch.setattr(sampling, "_max_distinct", lambda n_pcts: 0)
     forced = entrymod.q_quality_quantile_normalize(spark, SF)
-    assert count_plan_nodes(forced, "BroadcastNestedLoopJoin") == 3
+    assert count_plan_nodes(forced, "BroadcastNestedLoopJoin") == 2
 
 
 def test_no_registered_query_plans_exact_percentile(spark):

@@ -15,11 +15,14 @@ from hypothesis import example, given, settings, HealthCheck, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import WIDTHS
+from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions import sentiment
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.asof import asof_join
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.heavy_hitters import (
     heavy_hitters,
 )
+from live_social_media_sentiment_trend_tracker_using_kafka_spark.session import scoped_conf
 
 SETTINGS = dict(
     max_examples=8,
@@ -526,12 +529,13 @@ PACK_DOCS = st.lists(
 )
 
 
-@given(docs=PACK_DOCS, chunks=st.sampled_from([1, 2, 5]))
+@given(docs=PACK_DOCS, width=st.sampled_from(WIDTHS))
 @settings(**SETTINGS)
-def test_pack_documents_matches_python_reference(spark, docs, chunks):
-    """The r11 two-level prefix sum equals the packing definition (docs
-    laid end-to-end in id order per shard, cut at max_tokens) for ANY
-    chunk count — chunk boundaries must never leak into values."""
+def test_pack_documents_matches_python_reference(spark, docs, width):
+    """The chunked running sum equals the packing definition (docs laid
+    end-to-end in id order per shard, cut at max_tokens) at ANY chunk
+    width (``spark.sql.shuffle.partitions``) — chunk boundaries must
+    never leak into values."""
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.corpus import (
         pack_documents,
     )
@@ -542,12 +546,12 @@ def test_pack_documents_matches_python_reference(spark, docs, chunks):
         for i, (shard, n) in enumerate(docs)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {
-        r.doc_id: (r.n_tokens, r.seq_id, r.seq_offset)
-        for r in pack_documents(
-            df, max_tokens=max_tokens, chunks=chunks
-        ).collect()
-    }
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(width)):
+        got = {
+            r.doc_id: (r.n_tokens, r.seq_id, r.seq_offset)
+            for r in pack_documents(df, max_tokens=max_tokens).collect()
+        }
+    caching.release_all()
     cum: dict[str, int] = {}
     ref = {}
     for i, (shard, n) in enumerate(docs):  # ids ascend, so this IS id order

@@ -4,6 +4,8 @@ the driver contract)."""
 
 from pyspark.sql import functions as F  # noqa: F401
 
+from conftest import at_widths
+
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.relational import (
     bracket_revenue,
 )
@@ -344,7 +346,7 @@ def test_distributed_cume_dist_equals_window_cume_dist(spark):
     """The range-chunked exact distribution must equal the classic window
     cume_dist row for row — including heavy ties and values straddling
     chunk boundaries (many chunks over few values forces straddle
-    attempts)."""
+    attempts) — at every chunk width."""
     import random
 
     from pyspark.sql import Window
@@ -356,11 +358,11 @@ def test_distributed_cume_dist_equals_window_cume_dist(spark):
     rng = random.Random(7)
     rows = [("g" + str(rng.randint(0, 2)), float(rng.randint(0, 9))) for _ in range(500)]
     df = spark.createDataFrame(rows, "g string, x double")
-    got = distributed_cume_dist(df, ["g"], "x", out_col="c", n_range_parts=16)
     w = Window.partitionBy("g").orderBy("x")
     want = df.withColumn("c", F.cume_dist().over(w))
     k = lambda r: (r["g"], r["x"], round(r["c"], 12))
-    assert sorted(map(k, got.collect())) == sorted(map(k, want.collect()))
+    for got in at_widths(spark, lambda: distributed_cume_dist(df, ["g"], "x", out_col="c")):
+        assert sorted(map(k, got)) == sorted(map(k, want.collect()))
 
 
 def test_distributed_cume_dist_empty_and_null_groups(spark):
@@ -374,23 +376,25 @@ def test_distributed_cume_dist_empty_and_null_groups(spark):
     )
 
     empty = spark.createDataFrame([], "g string, x int")
-    out = distributed_cume_dist(empty, ["g"], "x", out_col="c", n_range_parts=4)
+    out = distributed_cume_dist(empty, ["g"], "x", out_col="c")
     assert out.count() == 0 and out.columns == ["g", "x", "c"]
 
     df = spark.createDataFrame(
         [(None, 1), (None, 2), (None, 2), ("a", 5), ("a", 7)], "g string, x int"
     )
-    got = distributed_cume_dist(df, ["g"], "x", out_col="c", n_range_parts=3)
     w = Window.partitionBy("g").orderBy("x")
     want = df.withColumn("c", F.cume_dist().over(w))
     k = lambda r: (r["g"], r["x"], round(r["c"], 12))
-    assert sorted(map(k, got.collect()), key=str) == sorted(map(k, want.collect()), key=str)
+    for got in at_widths(spark, lambda: distributed_cume_dist(df, ["g"], "x", out_col="c")):
+        assert sorted(map(k, got), key=str) == sorted(map(k, want.collect()), key=str)
 
 
 def test_chunked_running_sum_matches_window_multi_part(spark):
-    """chunked_running_sum == the textbook inclusive window cumsum, for
-    multi-column partition keys, NULL group keys, NULL order values
-    (sort first), and any chunk count — incl. the auto (None) path."""
+    """chunked_running_sum == the textbook inclusive window sum (RANGE
+    frame: tied order keys share their total), for multi-column partition
+    keys, NULL group keys, NULL order values (sort first), tied non-unique
+    order values, a multi-column string order (md5, id), and every chunk
+    width."""
     from pyspark.sql import Window
 
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators.window_funcs import (
@@ -400,30 +404,28 @@ def test_chunked_running_sum_matches_window_multi_part(spark):
     rows = [
         ("a", "x", 1, 10),
         ("a", "x", 2, 20),
+        ("a", "x", 2, 4),
         ("a", "y", 1, 5),
         ("b", "x", 3, 7),
+        ("b", "x", 3, 8),
         (None, "x", 1, 3),
         (None, "x", 4, 9),
         ("a", None, 2, 11),
         ("a", "x", None, 100),
+        ("a", "x", None, 1),
     ]
-    df = spark.createDataFrame(rows, "g1 string, g2 string, o int, v int")
-    w = (
-        Window.partitionBy("g1", "g2")
-        .orderBy("o")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = sorted(
-        ((r["g1"], r["g2"], r["o"], r["v"], r["run"])
-         for r in df.withColumn("run", F.sum("v").over(w)).collect()),
-        key=str,
-    )
-    for chunks in (None, 1, 3):
-        got = sorted(
-            ((r["g1"], r["g2"], r["o"], r["v"], r["run"])
-             for r in chunked_running_sum(
-                 df, ["g1", "g2"], "o", "v", "run", chunks=chunks
-             ).collect()),
+    rows += [("c", "z", i % 5, i) for i in range(60)]
+    df = spark.createDataFrame(rows, "g1 string, g2 string, o int, v int").withColumn(
+        "id", F.monotonically_increasing_id()
+    ).withColumn("m", F.md5(F.col("id").cast("string")))
+    df = df.localCheckpoint()  # pin the ids: both sides must see the same rows
+    for order in (["o"], ["m", "id"]):
+        w = Window.partitionBy("g1", "g2").orderBy(*order)
+        want = sorted(
+            ((r["id"], r["run"]) for r in df.withColumn("run", F.sum("v").over(w)).collect()),
             key=str,
         )
-        assert got == want, (chunks, got)
+        for got in at_widths(
+            spark, lambda: chunked_running_sum(df, ["g1", "g2"], order, "v", "run")
+        ):
+            assert sorted(((r["id"], r["run"]) for r in got), key=str) == want, order

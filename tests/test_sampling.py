@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import sampling
 from live_social_media_sentiment_trend_tracker_using_kafka_spark.sources.readers import table
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, at_widths
 
 
 def test_hash_split_is_deterministic_and_total(spark):
@@ -92,15 +92,33 @@ def test_hash_split_degenerate_zero_fraction_tail(spark):
 
 
 def test_token_budget_mix_chunked_equals_single_window(spark):
-    """The md5-prefix-chunked running sum must reproduce the naive
-    one-window-per-source cumulative sum EXACTLY (order-preserving chunk
-    key + offsets), at any chunk granularity."""
+    """The chunked running sum must reproduce the naive
+    one-window-per-source cumulative sum over (md5(id), id) EXACTLY, at
+    every chunk width."""
+    from pyspark.sql import Window
+
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.functions.text import (
+        token_count_col,
+    )
+
     docs = table(spark, "documents", SF_SMOKE)
     budgets = {"src0": 400, "src1": 150, "src2": 999999}
-    fine = sampling.token_budget_mix(docs, budgets, chunks=256).collect()
-    coarse = sampling.token_budget_mix(docs, budgets, chunks=1).collect()
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+    )
+    naive = (
+        docs.select("doc_id", "source", token_count_col(F.col("text")).alias("n_tokens"))
+        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
+        .filter(
+            F.col("cum_tokens")
+            <= F.coalesce(*[F.when(F.col("source") == s, b) for s, b in budgets.items()])
+        )
+    )
     key = lambda rows: sorted((r.doc_id, r.source, r.n_tokens, r.cum_tokens) for r in rows)
-    assert key(fine) == key(coarse)
+    want = key(naive.collect())
+    assert len({r[1] for r in want}) == 3  # every budget binds or admits rows
+    for got in at_widths(spark, lambda: sampling.token_budget_mix(docs, budgets)):
+        assert key(got) == want
 
 
 def test_temperature_mix_alpha_extremes(spark):
@@ -148,13 +166,10 @@ def test_capped_group_sample_equals_naive_window(spark):
         )
 
     for cap in (3, 5, 100):
-        got = sorted(
-            (r.doc_id, r.source)
-            for r in sampling.capped_group_sample(df, "source", cap, n_range_parts=7).collect()
-        )
-        assert got == naive(cap), f"cap={cap}"
+        for got in at_widths(spark, lambda: sampling.capped_group_sample(df, "source", cap)):
+            assert sorted((r.doc_id, r.source) for r in got) == naive(cap), f"cap={cap}"
     # counts: the cap binds per group
-    kept = sampling.capped_group_sample(df, "source", 6, n_range_parts=7)
+    kept = sampling.capped_group_sample(df, "source", 6)
     sizes = {r.source: r["count"] for r in kept.groupBy("source").count().collect()}
     assert sizes == {"big": 6, "small": 5, None: 6}
     # determinism

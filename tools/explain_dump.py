@@ -17,8 +17,10 @@ query is dumped — the plan diff between two trees::
     python tools/explain_dump.py --out /tmp/p_new
     diff -r -I '^# ' /tmp/p_old /tmp/p_new
 
-Expression ids, plan ids and lambda variable names are stripped (they
-count up per session, so they differ between two runs of one tree), and
+Expression ids, plan ids, lambda variable names and RDD ids are stripped
+(they count up per session, so they differ between two runs of one tree,
+and shift for every later query when an earlier one builds more or fewer
+of them), and
 caches are released between queries. A few plans still differ between
 two runs of one tree: the enrichment queries embed ``current_timestamp``,
 the streaming sink queries read fresh temp directories, and
@@ -82,7 +84,12 @@ def main() -> int:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         text = buf.getvalue()
-        for pat, rep in ((r"#\d+L?", "#?"), (r"plan_id=\d+", "plan_id=?"), (r"\bx_\d+", "x_?")):
+        for pat, rep in (
+            (r"#\d+L?", "#?"),
+            (r"plan_id=\d+", "plan_id=?"),
+            (r"\b([xyz])_\d+", r"\1_?"),
+            (r"RDD\[\d+\]", "RDD[?]"),
+        ):
             text = re.sub(pat, rep, text)
         return text
 
